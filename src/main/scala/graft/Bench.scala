@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark: one JSON line of per-query + total wall seconds.
   *
@@ -28,67 +27,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle partitions sized to the DATA, not the core count (the
-    // 100-TB rule applied downward): at sf0.1 the whole input is
-    // ~100 MB, so 32-way shuffles plan 32 near-empty reduce tasks per
-    // exchange and pure task-launch overhead owns every sub-second
-    // query (ConfigProbe r8: floor avg 0.353 s/query at 32 → 0.208 s
-    // at 8; the heavy composites got FASTER, not slower). One 64 MB
-    // target partition per input split, clamped to [8, cpus] — at
-    // sf10+ this lands back on `cpus` exactly as before.
-    val inputBytes = Option(new java.io.File(sfDir).listFiles())
-      .map(_.filter(_.isFile).map(_.length).sum).getOrElse(Long.MaxValue)
-    val shufflePartitions = math.max(8L,
-      math.min(cpus.toLong, inputBytes / (64L << 20))).toString
-    // AQE sized to the data, like the shuffle-partition formula: each
-    // adaptive stage is a scheduling round-trip + re-optimization, and
-    // below ~1 GiB of input there is nothing for it to decide — static
-    // plans already broadcast the small sides and 8 partitions need no
-    // coalescing (ConfigProbe r10: AQE off beat on for BOTH the floor
-    // sample, 0.185 vs 0.215 s/query, AND the heavy composites, 14.6
-    // vs 15.7 s). Past the threshold — where skew splitting and
-    // runtime join re-planning earn their keep — it stays on.
-    val adaptive = (inputBytes > (1L << 30)).toString
-    // Scan-split size tracks the CORE COUNT against the data, but
-    // never drops BELOW the 128 MB default (measured, r19): every
-    // testdata parquet is a single file with a single row group
-    // (duckdb parquet_metadata census, OPTIMIZATION_r19.md), and
-    // parquet splits at row-group boundaries — so sub-default splits
-    // cannot add scan parallelism here, only empty task launches (a
-    // 546 KB split carved lineitem into ~20 tasks, 19 scanning
-    // nothing; the r19 A/A bench read the snapshot family +13..26%
-    // under that config). The formula therefore only ever RAISES the
-    // split size: at bench SF it is the stock 128 MB (openCost lands
-    // on its stock 4 MB via the same 1:32 ratio), and at cluster
-    // scale inputBytes/cpus grows it toward the 1 GiB cap guide §6
-    // recommends for big sequential scans.
-    val maxPartitionBytes = math.max(128L << 20,
-      math.min(1L << 30, inputBytes / math.max(1L, cpus.toLong)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", adaptive)
-      .config("spark.sql.files.maxPartitionBytes",
-        maxPartitionBytes.toString)
-      .config("spark.sql.files.openCostInBytes",
-        math.max(16L << 10, maxPartitionBytes / 32L).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val conf = Session.bench(sfDir, Session.cpus)
+    val spark = Session.start(conf)
 
-    def exec(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    // a query that throws still never crashes the bench, but its time is
-    // NEGATED so a failure can't masquerade as a fast success (ADVICE r2)
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { f; true } catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (ok) sec else -sec
-    }
+    import Probe.{exec, timed}
 
     // headline = the DuckDB-comparable declared queries (ML/seeded
     // queries without an oracle are benched as whole pipelines below)
@@ -421,7 +363,7 @@ object Bench {
         s""","duck":${fmtTotal(duckPaired)},"ratio":${
           fmt(sparkPaired / duckPaired)}"""
       else s""","duck_status":"$duckStatus""""
-    println(s"""{"aux":"pipelines","value":${fmtTotal(pipeResults.collect { case (_, v) if v > 0 => v }.sum)},"unit":"sec","pipelines":${obj(pipeResults)},"shuffle_partitions":$shufflePartitions,"reruns":$reruns,"sweeps":$sweeps,"first_sweep_total":${fmtTotal(firstSweepTotal)},"duckdb_paired_total":${fmtTotal(duckPaired)},"duck_status":"$duckStatus","sf":"$sfDir"}""")
+    println(s"""{"aux":"pipelines","value":${fmtTotal(pipeResults.collect { case (_, v) if v > 0 => v }.sum)},"unit":"sec","pipelines":${obj(pipeResults)},"shuffle_partitions":${conf("spark.sql.shuffle.partitions")},"reruns":$reruns,"sweeps":$sweeps,"first_sweep_total":${fmtTotal(firstSweepTotal)},"duckdb_paired_total":${fmtTotal(duckPaired)},"duck_status":"$duckStatus","sf":"$sfDir"}""")
     spark.stop()
     def contract(f: Double => String) =
       s"""{"metric":"total","value":${fmtTotal(total)},"unit":"sec","queries":${obj(finalResults, f)}$failedField$pairFields$contendedField,"sf":"$sfShort"}"""

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipelines._
 
 /** End-to-end reproduction of the reference's PUBLISHED numbers
@@ -23,16 +22,7 @@ object Reproduction {
   def main(args: Array[String]): Unit = {
     val nUsers = if (args.length > 0) args(0).toInt else 6000
     val nMovies = if (args.length > 1) args(1).toInt else 2000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = Session.start(Session.verify(Session.cpus))
 
     val ratings = SyntheticRatings.generate(spark, nUsers, nMovies).cache()
     val n = ratings.count()

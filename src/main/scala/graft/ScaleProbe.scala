@@ -213,25 +213,9 @@ object ScaleProbe {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else ".bench/sf1"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = Session.start(Session.verify(Session.cpus))
 
-    def exec(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { f; true } catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (ok) sec else -sec
-    }
+    import Probe.{exec, timed}
 
     // COMPRESSED-WALKER probe (round 10 part 2): the Mp3Io/H264Io
     // structural walkers are map-shaped over the kernel seam, so

@@ -409,6 +409,30 @@ object Dedup {
       .agg(count(lit(1)).as("n_common")), minJaccard)
   }
 
+  /** (node, component) for every node of `edges`, labelled by the
+    * component's least node under `ord` (the iterative path's min label). */
+  private def unionFind[T](edges: Array[(T, T)])(
+      implicit ord: Ordering[T]): Seq[(T, T)] = {
+    val parent = new java.util.HashMap[T, T]()
+    def find(x: T): T = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
+      var c = x // path compression
+      while (parent.getOrDefault(c, c) != c) {
+        val n = parent.get(c); parent.put(c, r); c = n
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    edges.iterator.flatMap(e => Iterator(e._1, e._2)).distinct
+      .map(x => (x, find(x))).toSeq
+  }
+
   /** Connected components of an undirected pair graph by min-label
     * propagation WITH POINTER JUMPING: each sweep every node adopts the
     * smallest component id among itself, its neighbors, and — the
@@ -471,62 +495,24 @@ object Dedup {
     if ((integralId || stringId) && edges.count() <= driverEdgeLimit) {
       val spark = pairs.sparkSession
       import spark.implicits._
-      if (integralId) {
-      val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.getOrDefault(c, c) != c) {
-          val n = parent.get(c); parent.put(c, r); c = n
+      val comps =
+        if (integralId) spark.createDataset(unionFind(
+          edges.select(col("src").cast("long"), col("dst").cast("long"))
+            .as[(Long, Long)].collect())).toDF("id", "component")
+        else {
+          // min-root order MUST match the iterative path's min(component)
+          // on StringType, which is UTF8String order — unsigned UTF-8
+          // byte comparison. Java's String.compareTo is UTF-16 code-unit
+          // order, which DIVERGES on supplementary-plane ids, so compare
+          // the UTF-8 bytes explicitly.
+          val utf8Order: Ordering[String] = (a, b) =>
+            java.util.Arrays.compareUnsigned(
+              a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+              b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          spark.createDataset(unionFind(edges.as[(String, String)].collect())(
+            utf8Order)).toDF("id", "component")
         }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        // min root wins — matches the iterative path's min-label
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
-      }
-      val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2))
-        .toArray.distinct
-      return spark.createDataset(nodes.map(x => (x, find(x))).toSeq)
-        .toDF("id", "component")
-        .select(col("id").cast(idType), col("component").cast(idType))
-      } else {
-      val es = edges.as[(String, String)].collect()
-      // min-root order MUST match the iterative path's min(component)
-      // on StringType, which is UTF8String order — unsigned UTF-8
-      // byte comparison. Java's String.compareTo is UTF-16 code-unit
-      // order, which DIVERGES on supplementary-plane ids, so compare
-      // the UTF-8 bytes explicitly.
-      def lt(a: String, b: String): Boolean =
-        java.util.Arrays.compareUnsigned(
-          a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-      val parent = new java.util.HashMap[String, String]()
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.getOrDefault(c, c) != c) {
-          val n = parent.get(c); parent.put(c, r); c = n
-        }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2))
-        .toArray.distinct
-      return spark.createDataset(nodes.map(x => (x, find(x))).toSeq)
-        .toDF("id", "component")
-      }
+      return comps.select(col("id").cast(idType), col("component").cast(idType))
     }
     labels = edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.IntegerType
 /** SparkSessionExtensions hook exposing graft's native kernels to SQL:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * sessionBuilder.withExtensions(new GraftExtensions)...
   * // or: spark.sql.extensions=graft.functions.GraftExtensions
   * spark.sql("SELECT simhash64(tokens), shingles(tokens, 5) FROM t")
   * }}}

@@ -119,17 +119,6 @@ object Materialized {
 
   private def sumZero(t: DataType): Column = lit(0).cast(t)
 
-  /** Env-gated phase timer (`GRAFT_MV_TRACE=1`): diagnostic only. */
-  private def dbg[A](name: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_MV_TRACE")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[mv] $name%-24s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
   /** The state row's aggregate expressions over raw table rows —
     * shared by the create seed and the targeted group rescan so both
     * produce byte-identical shapes. `rowType` resolves a value
@@ -301,8 +290,8 @@ object Materialized {
     // derives + predicate prepare the DELTA exactly as they prepared
     // the seed: a changed row outside the view never touches a key,
     // and derived group keys exist on the delta rows too
-    val ch = dbg("cdc-plan")(prep(
-      Snapshot.readChangesBetween(spark, table, since, until), c))
+    val ch = prep(
+      Snapshot.readChangesBetween(spark, table, since, until), c)
     val sign = when(col("_change") === "insert", lit(1L))
       .otherwise(lit(-1L))
     val ins = col("_change") === "insert"
@@ -322,7 +311,7 @@ object Materialized {
     val sumT: Map[String, DataType] =
       c.vals.map(v => v -> sumTypeOf(ch.schema(v).dataType)).toMap
     val deltaObs = new org.apache.spark.sql.Observation()
-    val delta = dbg("delta-exec")(ch.groupBy(c.keys.map(col): _*)
+    val delta = ch.groupBy(c.keys.map(col): _*)
       .agg(sum(sign).as("__dn"),
         c.vals.flatMap { v =>
           val t = sumT(v)
@@ -344,7 +333,7 @@ object Materialized {
       // chain-walk CDC subtree — Catalyst re-optimizes it per copy
       // and the driver pays seconds of planning for an O(touched
       // keys) frame. The checkpoint is delta-sized, never table-sized.
-      .localCheckpoint())
+      .localCheckpoint()
     // BROADCAST the touched-key sides of every fold join when the
     // delta is small (guide §3.1): a localCheckpoint's LogicalRDD has
     // no size statistics, so the static planner would sort-merge every
@@ -451,8 +440,7 @@ object Materialized {
     // ONE tagged commit: fully-deleted keys ride along as n_rows = 0
     // tombstones (filtered at read) so there is no second commit a
     // crash could separate from this one
-    dbg("state-upsert")(
-      Snapshot.mergeMor(folded, state, "__mv_key", tag = Some(tag)))
+    Snapshot.mergeMor(folded, state, "__mv_key", tag = Some(tag))
     SidecarIo.writeStringAtomic(spark, s"$mv/baseline.json",
       s"""{"version":$until}""")
     Some((since, until))

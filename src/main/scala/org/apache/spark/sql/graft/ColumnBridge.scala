@@ -28,4 +28,9 @@ object ColumnBridge {
     classic.sessionState.functionRegistry
       .registerFunction(new FunctionIdentifier(name), info, builder)
   }
+
+  /** Blocks until every listener has seen every event posted so far
+    * (the listener bus is private[spark], hence this bridge). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -2,19 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (JVM-wide; suites use `lazy`). */
+/** One shared local session for all suites (JVM-wide; suites use `lazy`).
+  * Built through [[Session.start]], so the graft extensions are
+  * registered before any suite runs, whatever the suite order. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val conf = Session.verify(8) + ("spark.app.name" -> "graft-tests")
+  lazy val spark: SparkSession = Session.start(conf)
   val sf0001 = "/root/testdata/sf0.001"
 }
