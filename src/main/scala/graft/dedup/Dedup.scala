@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.SimHash64.simhash64
+import graft.ops.GlobalOrdinal
 import graft.text.Text
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
@@ -452,7 +453,8 @@ object Dedup {
     * N-deep. Convergence is checked with a count — a scalar to the
     * driver, never data. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          driverEdgeLimit: Long = 500000L): DataFrame = {
+                          driverEdgeLimit: Long =
+                            GlobalOrdinal.DriverRowCap): DataFrame = {
     val edges = pairs
       .select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
@@ -477,12 +479,11 @@ object Dedup {
     // graphs the iterative path's cost is pure scheduling (each sweep
     // is 2 joins + an aggregate + a checkpoint + a count action ≈ a
     // dozen jobs for 3 sweeps) — measured 2.0 s of q_curation's 4.6 s
-    // at sf0.1 on a ~300-edge graph. Below `driverEdgeLimit`
-    // (directed-edge rows; 500k ≈ 8 MB of longs — broadcast-sized,
-    // same ballpark as spark.sql.autoBroadcastJoinThreshold's intent)
-    // a driver union-find answers in one collect. The count that
-    // gates the switch is the cache materialization the iterative
-    // path needs anyway; above the limit nothing is ever collected.
+    // at sf0.1 on a ~300-edge graph. Up to `driverEdgeLimit`
+    // directed-edge rows a driver union-find answers from the one job
+    // of [[GlobalOrdinal.collectUpTo]] (which also fills the edges
+    // cache the iterative path reads); above it nothing is kept on
+    // the driver.
     // Fast path for integral ids (union-find over a long map) AND —
     // round 19 — string ids (the page-identity URL graph took the
     // iterative path's ~5 jobs for a 60-edge graph solely because its
@@ -492,13 +493,18 @@ object Dedup {
     val integralId = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
     val stringId = idType == org.apache.spark.sql.types.StringType
-    if ((integralId || stringId) && edges.count() <= driverEdgeLimit) {
+    val small =
+      if (integralId || stringId)
+        GlobalOrdinal.collectUpTo(edges, driverEdgeLimit)
+      else None
+    if (small.nonEmpty) {
+      val rows = small.get
       val spark = pairs.sparkSession
       import spark.implicits._
       val comps =
-        if (integralId) spark.createDataset(unionFind(
-          edges.select(col("src").cast("long"), col("dst").cast("long"))
-            .as[(Long, Long)].collect())).toDF("id", "component")
+        if (integralId) spark.createDataset(unionFind(rows.map(r =>
+          (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))))
+          .toDF("id", "component")
         else {
           // min-root order MUST match the iterative path's min(component)
           // on StringType, which is UTF8String order — unsigned UTF-8
@@ -509,8 +515,9 @@ object Dedup {
             java.util.Arrays.compareUnsigned(
               a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
               b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          spark.createDataset(unionFind(edges.as[(String, String)].collect())(
-            utf8Order)).toDF("id", "component")
+          spark.createDataset(unionFind(
+            rows.map(r => (r.getString(0), r.getString(1))))(utf8Order))
+            .toDF("id", "component")
         }
       return comps.select(col("id").cast(idType), col("component").cast(idType))
     }
@@ -852,9 +859,9 @@ object Dedup {
     * line-keyed exchanges). Above the limit it falls back to the
     * explode → left join on the line key → groupBy(doc) sorted-rebuild
     * form, whose shuffles are keyed on values that exist at any scale.
-    * The driver bound mirrors the CC union-find fast path: ≤ 500k
-    * removal lines collected, documented, with the distributed form as
-    * the automatic fallback.
+    * The driver bound mirrors the CC union-find fast path:
+    * [[GlobalOrdinal.DriverRowCap]] removal lines collected, with the
+    * distributed form as the automatic fallback.
     *
     * `byHash = true` keys the count shuffle on xxhash64(line) so the
     * exchange carries 8-byte keys instead of full line strings — the
@@ -866,7 +873,8 @@ object Dedup {
   def dedupLines(docs: DataFrame, textCol: String = "text",
                  idCol: String = "doc_id", minCount: Long = 2L,
                  byHash: Boolean = false,
-                 broadcastKeyLimit: Long = 500000L): DataFrame = {
+                 broadcastKeyLimit: Long = GlobalOrdinal.DriverRowCap)
+      : DataFrame = {
     val spark = docs.sparkSession
     val key: Column => Column =
       if (byHash) (c: Column) => xxhash64(c) else identity
@@ -878,23 +886,20 @@ object Dedup {
       .agg(count(lit(1)).as("__cnt"), min(col("__line")).as("__line"))
       .filter(col("__cnt") >= lit(minCount))
       .select(col("__k"), col("__line"))
-    // size probe and collection are ONE job: take limit+1 rows — if
-    // they all arrived, that IS the removal set (no separate count
-    // pass); if not, fall back to the join form (which recomputes the
-    // count aggregate — the over-limit case is the 100-TB-boilerplate
-    // shape where a second pass is the cost of not collecting it)
-    val probeLimit = math.min(broadcastKeyLimit, Int.MaxValue - 1L).toInt
-    val probe =
-      if (probeLimit > 0)
-        removal.select(col("__line")).limit(probeLimit + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (probeLimit > 0 && probe.length <= probeLimit) {
+    // size probe and collection are ONE job: if the removal set fits,
+    // the probe IS the set (no separate count pass); if not, fall back
+    // to the join form (which recomputes the count aggregate — the
+    // over-limit case is the 100-TB-boilerplate shape where a second
+    // pass is the cost of not collecting it)
+    val probe = GlobalOrdinal.collectUpTo(removal.select(col("__line")),
+      broadcastKeyLimit)
+    if (probe.nonEmpty) {
       // FAST PATH: broadcast the removal strings; rebuild every doc in
       // one map pass. One narrow shuffle total (the count), zero over
       // the corpus. A single UDF call per document — not a HOF chain —
       // so lines split exactly once per row.
       val bc = spark.sparkContext.broadcast(
-        probe.map(_.getString(0)).toSet)
+        probe.get.map(_.getString(0)).toSet)
       val rebuild = udf { text: String =>
         // -1 limit: keep trailing empty lines, matching SQL split()
         val all = text.split("\n", -1)

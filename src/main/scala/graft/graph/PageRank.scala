@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.ops.GlobalOrdinal
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -76,7 +77,8 @@ object PageRank {
                      dampNum: Long = 85L, dampDen: Long = 100L,
                      srcCol: String = "src", dstCol: String = "dst",
                      idCol: String = "id",
-                     driverEdgeLimit: Long = 500000L): DataFrame = {
+                     driverEdgeLimit: Long = GlobalOrdinal.DriverRowCap)
+      : DataFrame = {
     require(iters >= 0, s"bad iters $iters")
     require(scale > 0 && dampNum >= 0 && dampDen > dampNum,
       s"bad damping $dampNum/$dampDen @ scale $scale")
@@ -97,19 +99,18 @@ object PageRank {
     try {
     // ADAPTIVE SIZE SWITCH (the Dedup.connectedComponents pattern):
     // after candidate filtering a link graph is routinely far smaller
-    // than the corpus, and below `driverEdgeLimit` directed edges
-    // (500k ≈ 12 MB of longs — broadcast ballpark) the iterative
-    // path's cost is pure scheduling: each of `iters` rounds is 2
-    // joins + an aggregate + a lineage cut. The recurrence is
+    // than the corpus, and up to `driverEdgeLimit` directed edges the
+    // iterative path's cost is pure scheduling: each of `iters` rounds
+    // is 2 joins + an aggregate + a lineage cut. The recurrence is
     // integer-exact floor arithmetic, so the driver loop reproduces
     // the distributed path BIT-FOR-BIT (same `div`, same Σ over
-    // longs — order-free). The gating count is the persist
-    // materialization the iterative path needs anyway; above the
-    // limit nothing is ever collected.
-    if (e.count() <= driverEdgeLimit) {
+    // longs — order-free). The gating collect also fills the persist
+    // the iterative path reads; above the limit nothing is kept on
+    // the driver.
+    val small = GlobalOrdinal.collectUpTo(e, driverEdgeLimit)
+    if (small.nonEmpty) {
       import spark.implicits._
-      val es = e.select(col("src"), col("dst"), col("outdeg"))
-        .as[(Long, Long, Long)].collect()
+      val es = small.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val ns = n0.as[Long].collect()
       val rank = new java.util.HashMap[Long, java.lang.Long](ns.length * 2)
       ns.foreach(id => rank.put(id, scale))

@@ -1,7 +1,7 @@
 package graft.ml
 
+import graft.ops.GlobalOrdinal
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** DataFrame-native binary-classification metrics — the evaluation
@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * ==Scale==
   * One groupBy(score) then a prefix count over DISTINCT scores. The
-  * prefix is distributed — quantile buckets + broadcast offsets (the
-  * Packing pattern; see [[aucROC]]) — so no stage ever holds the
+  * prefix is distributed — quantile buckets + broadcast offsets
+  * ([[graft.ops.GlobalOrdinal.prefix]]) — so no stage ever holds the
   * distinct-score table in one partition. Never a window over raw
   * rows.
   */
@@ -113,21 +113,14 @@ object BinaryMetricsDF {
     * Single-class input (pos or neg = 0) raises at execution time
     * instead of emitting a null auc that callers would NPE on.
     *
-    * The prefix count over distinct scores is DISTRIBUTED (the
-    * [[graft.pipelines.Packing.concatChunks]] quantile-bucket
-    * pattern, guide §2 — the old spelling ran it as an
-    * `Exchange SinglePartition` window over every distinct score,
-    * one reducer at corpus scale): the distinct-score table is
-    * materialized once (localCheckpoint — the base frame is scanned
-    * exactly once, as before), approx quantiles of `s` cut it into
-    * balanced buckets (bucketing only PLACES rows — any monotone cut
-    * is exact), and `before` = Σ earlier buckets' masses + the
-    * in-bucket prefix sum. The per-bucket masses — bounded by the
-    * bucket space, never by score cardinality — are collected,
-    * prefix-summed on the driver and rejoined as a broadcast LOCAL
-    * relation, so no plan node holds more than one bucket in one
-    * partition. NaN scores sort last (Spark's ordering) and so take
-    * the top bucket explicitly. */
+    * The prefix count over distinct scores is DISTRIBUTED
+    * ([[graft.ops.GlobalOrdinal.prefix]] over quantile buckets of the
+    * score — the old spelling ran it as an `Exchange SinglePartition`
+    * window over every distinct score, one reducer at corpus scale):
+    * the distinct-score table is materialized once (localCheckpoint —
+    * the base frame is scanned exactly once, as before), and `before`
+    * = the mass of every smaller score. NaN scores sort last (Spark's
+    * ordering) and take the top bucket. */
   def aucROC(df: DataFrame, scoreCol: String, labelCol: String)
       : DataFrame = {
     val g = df
@@ -137,28 +130,10 @@ object BinaryMetricsDF {
       .groupBy(col("s"))
       .agg(count(lit(1)).as("m"), sum(col("l")).as("p"))
       .localCheckpoint()
-    val nBkt = math.max(8, g.rdd.getNumPartitions * 4)
-    val probes = (1 until nBkt).map(_.toDouble / nBkt).toArray
-    val bounds =
-      if (probes.isEmpty) Array.empty[Double]
-      else g.stat.approxQuantile("s", probes, 0.01)
-        .distinct.filterNot(_.isNaN)
-    val bktExpr = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col("s") > lit(b), 1).otherwise(0) }
-    val gb = g.withColumn("__bkt",
-      when(isnan(col("s")), lit(bounds.length + 1)).otherwise(bktExpr))
-    val wLocal = Window.partitionBy(col("__bkt")).orderBy(col("s"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val hist = gb.groupBy(col("__bkt")).agg(sum(col("m")).as("__bm"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offs = hist.map { case (b, n) => val o = (b, acc); acc += n; o }
-    import df.sparkSession.implicits._
-    val offsets = offs.toSeq.toDF("__bkt", "__boff")
-    val spr2 = gb
-      .withColumn("__local", coalesce(sum(col("m")).over(wLocal), lit(0L)))
-      .join(broadcast(offsets), Seq("__bkt"))
-      .withColumn("before", col("__boff") + col("__local"))
+    val (ranked, _) = GlobalOrdinal.prefix(g, Seq(GlobalOrdinal.Ordinal(
+      "before", GlobalOrdinal.quantileBucket(g, col("s")), Seq(col("s")))),
+      col("m"))
+    val spr2 = ranked
       .agg(sum(col("p") * (lit(2L) * col("before") + col("m") + 1L))
              .as("spr2"),
            sum(col("p")).as("pos"),

@@ -2174,63 +2174,31 @@ object Corpus {
     * the epoch seed yields the SAME order on any engine and a
     * DIFFERENT order per epoch.
     *
-    * The global row_number is DISTRIBUTED (the
-    * [[graft.pipelines.Packing.concatChunks]] bucket-prefix-sum
-    * pattern, guide §2.4 — the old spelling ran each epoch's
-    * row_number as an `Exchange SinglePartition` window, one reducer
-    * holding the whole corpus at 100 TB): the md5 key's first 3 hex
-    * chars are a BUCKET that is monotone in the key's lexicographic
-    * order (fixed-length hex: char order = digit-value order), so
-    * global position = Σ earlier buckets' counts + the row_number
-    * within the bucket's hash partition. ONE pass computes both
-    * epochs' bucket histograms (explode of a two-struct array over
-    * the thin projection, map-side combined); the ≤2·4096 collected
-    * counts — bounded by the bucket space, never data volume — are
-    * prefix-summed on the driver and rejoined as broadcast LOCAL
-    * relations, so no plan node ever holds more than one bucket in
-    * one partition and the offsets cost no recompute of the keyed
-    * projection. md5 uniformity keeps the 4096 buckets balanced.
+    * The global row_number is DISTRIBUTED ([[GlobalOrdinal.prefix]] —
+    * the old spelling ran each epoch's row_number as an
+    * `Exchange SinglePartition` window, one reducer holding the whole
+    * corpus at 100 TB): the md5 key's first 3 hex chars are a BUCKET
+    * that is monotone in the key's lexicographic order (fixed-length
+    * hex: char order = digit-value order), so global position = the
+    * count of earlier rows + 1. Both epochs' histograms come from ONE
+    * aggregate over the thin projection; md5 uniformity keeps the
+    * 4096 buckets balanced.
     * Production epoch re-shuffling remains
     * `writeShards(..., orderWithinShards = true, epoch = e)` —
     * shard-local sorts only (ShardingSpec pins that path's per-epoch
     * order directly from the written files). */
   def epochShuffle(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val d = Tables.documents(spark, dir).select(col("doc_id"))
-    def key(e: Long) =
-      graft.pipelines.Sharding.epochKey(col("doc_id"), e)
-    def bkt(k: org.apache.spark.sql.Column) =
-      conv(substring(k, 1, 3), 16, 10).cast("int")
-    val keyed = d.select(col("doc_id"),
-      key(0).as("__k0"), key(1).as("__k1"))
-      .withColumn("__b0", bkt(col("__k0")))
-      .withColumn("__b1", bkt(col("__k1")))
-    val hist = keyed.select(explode(array(
-        struct(lit(0).as("e"), col("__b0").as("b")),
-        struct(lit(1).as("e"), col("__b1").as("b")))).as("x"))
-      .groupBy(col("x.e").as("e"), col("x.b").as("b"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    def offsets(epoch: Int, bCol: String, oCol: String): DataFrame = {
-      val counts = hist.filter(_.getInt(0) == epoch)
-        .map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1)
-      var acc = 0L
-      counts.map { case (b, n) =>
-        val o = (b, acc); acc += n; o
-      }.toSeq.toDF(bCol, oCol)
-    }
-    keyed
-      .withColumn("__l0", row_number().over(
-        Window.partitionBy(col("__b0")).orderBy(col("__k0"), col("doc_id"))))
-      .withColumn("__l1", row_number().over(
-        Window.partitionBy(col("__b1")).orderBy(col("__k1"), col("doc_id"))))
-      .join(broadcast(offsets(0, "__b0", "__o0")), Seq("__b0"))
-      .join(broadcast(offsets(1, "__b1", "__o1")), Seq("__b1"))
-      // int like row_number: positions are bounded by the corpus size
-      .select(col("doc_id"),
-        (col("__o0") + col("__l0")).cast("int").as("pos_e0"),
-        (col("__o1") + col("__l1")).cast("int").as("pos_e1"))
+    val keyed = Tables.documents(spark, dir).select(col("doc_id"),
+      graft.pipelines.Sharding.epochKey(col("doc_id"), 0L).as("__k0"),
+      graft.pipelines.Sharding.epochKey(col("doc_id"), 1L).as("__k1"))
+    val (ranked, _) = GlobalOrdinal.prefix(keyed, Seq("0", "1").map(e =>
+      GlobalOrdinal.Ordinal(s"__p$e",
+        conv(substring(col(s"__k$e"), 1, 3), 16, 10),
+        Seq(col(s"__k$e"), col("doc_id")))), lit(1L))
+    // int like row_number: positions are bounded by the corpus size
+    ranked.select(col("doc_id"),
+        (col("__p0") + 1L).cast("int").as("pos_e0"),
+        (col("__p1") + 1L).cast("int").as("pos_e1"))
       .orderBy(col("doc_id"))
   }
 

@@ -171,40 +171,23 @@ object Stats {
     * to the low buckets, the SQL standard both engines share),
     * tie-broken by id so the assignment is deterministic.
     *
-    * The global rank is DISTRIBUTED (guide §2 — the old spelling ran
-    * ntile over the whole corpus in one `Exchange SinglePartition`
-    * reducer): approx quantiles of `n_chars` cut the corpus into
-    * balanced range buckets (every tie group lands in one bucket, so
-    * any cut is order-exact), global rank = Σ earlier buckets'
-    * counts + the in-bucket row_number, and the decile is ntile's
-    * closed form over that rank — with N = Σ counts known on the
-    * driver, rows ranked ≤ (⌊N/10⌋+1)·(N mod 10) fill the N mod 10
-    * big buckets, the rest the small ones (StatsSpec pins sizes,
-    * order and coverage; the oracle twin pins the full output). The
-    * per-bucket counts are bounded by the bucket space, never data
-    * volume; they are prefix-summed on the driver and rejoined as a
-    * broadcast LOCAL relation. Returns per-decile
+    * The global rank is DISTRIBUTED ([[GlobalOrdinal.prefix]] over
+    * quantile buckets of `n_chars` — the old spelling ran ntile over
+    * the whole corpus in one `Exchange SinglePartition` reducer), and
+    * the decile is ntile's closed form over that rank — with N known
+    * on the driver, rows ranked ≤ (⌊N/10⌋+1)·(N mod 10) fill the
+    * N mod 10 big buckets, the rest the small ones (StatsSpec pins
+    * sizes, order and coverage; the oracle twin pins the full
+    * output). Returns per-decile
     * `(decile, n_docs, sum_chars, min_chars, max_chars)`. */
   def charDeciles(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"))
       .localCheckpoint()
-    val nBkt = math.max(8, d.rdd.getNumPartitions * 4)
-    val probes = (1 until nBkt).map(_.toDouble / nBkt).toArray
-    val bounds =
-      if (probes.isEmpty) Array.empty[Double]
-      else d.stat.approxQuantile("n_chars", probes, 0.01).distinct
-    val bktExpr = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col("n_chars") > lit(b), 1).otherwise(0) }
-    val db = d.withColumn("__bkt", bktExpr)
-    val hist = db.groupBy(col("__bkt")).agg(count(lit(1)).as("__n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offs = hist.map { case (b, n) => val o = (b, acc); acc += n; o }
-    val total = acc
-    val offsets = offs.toSeq.toDF("__bkt", "__off")
+    val (ranked, Seq(total)) = GlobalOrdinal.prefix(d,
+      Seq(GlobalOrdinal.Ordinal("__before",
+        GlobalOrdinal.quantileBucket(d, col("n_chars")),
+        Seq(col("n_chars"), col("doc_id")))), lit(1L))
     val (big, small, rem) =
       (total / 10L + 1L, math.max(1L, total / 10L), total % 10L)
     // ntile's remainder-to-the-low-buckets closed form (integral
@@ -215,11 +198,7 @@ object Stats {
                   (__rank - 1) div $big + 1,
                   $rem + (__rank - 1 - ${big * rem}) div $small + 1)
                as int)""")
-    db.withColumn("__lr", row_number().over(
-        Window.partitionBy(col("__bkt"))
-          .orderBy(col("n_chars"), col("doc_id"))))
-      .join(broadcast(offsets), Seq("__bkt"))
-      .withColumn("__rank", col("__off") + col("__lr"))
+    ranked.withColumn("__rank", col("__before") + 1L)
       .select(col("n_chars"), decile.as("decile"))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_docs"),

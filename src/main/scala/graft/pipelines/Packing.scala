@@ -1,7 +1,7 @@
 package graft.pipelines
 
+import graft.ops.GlobalOrdinal
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -16,10 +16,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    chunk boundary. Implemented as a DISTRIBUTED prefix sum (a
   *    partition-less `Window.orderBy` would plan
   *    `Exchange SinglePartition` and funnel the corpus through one
-  *    task): quantile-bucket the order key, local prefix sums per
-  *    bucket, then add the tiny cumulative bucket totals back by
-  *    broadcast. SQL-expressible semantics → full DuckDB oracle
-  *    (`q_pack_chunks`).
+  *    task): [[graft.ops.GlobalOrdinal.prefix]]. SQL-expressible
+  *    semantics → full DuckDB oracle (`q_pack_chunks`).
   *
   *  - [[binPackGreedy]] — no-straddle packing (each sequence holds
   *    whole documents; leftover budget is padding): first-fit-
@@ -44,14 +42,13 @@ object Packing {
     *
     * `orderCol` must be a NUMERIC, unique order key (doc ids).
     *
-    * Plan: one eager approxQuantile pass fixes `buckets` boundary
+    * Plan: [[graft.ops.GlobalOrdinal.prefix]] over quantile buckets of
+    * the order key — one eager approx-quantile pass fixes the boundary
     * literals (collected once, so every branch sees identical
-    * buckets — no reliance on nondeterministic partitioner state);
-    * the corpus then takes one hash exchange on the bucket id for the
-    * local prefix-sum window, and the per-bucket totals (≤ `buckets`
-    * rows) are collected, prefix-summed on the driver and rejoined as
-    * a broadcast local relation. No single-partition plan node
-    * anywhere — not even a bounded one.
+    * buckets), one aggregate collects the per-bucket token totals, and
+    * the corpus takes one hash exchange on the bucket id for the
+    * local prefix-sum window. No single-partition plan node anywhere
+    * — not even a bounded one. Null token counts contribute 0.
     *
     * The operator OWNS ITS EVALUATION COUNT (VERDICT r7 #3): the plan
     * reads its input three times (range-bound probe, bucket-totals
@@ -67,58 +64,13 @@ object Packing {
     * when the caller already caches/checkpoints. */
   def concatChunks(docs: DataFrame, tokensCol: String, budget: Int,
                    orderCol: String = "doc_id",
-                   buckets: Int = 0,
                    ownInput: Boolean = true): DataFrame = {
     require(budget > 0, "budget must be positive")
-    val spark = docs.sparkSession
     val input = if (ownInput) docs.localCheckpoint(false) else docs
-    // bucket count tracks the INPUT's partition count, not the core
-    // count: buckets bound the per-bucket window sort (so they must
-    // grow with the data — 4 per input split keeps each well under a
-    // split's row count), while each extra bucket adds a branch to the
-    // quantile boundary chain (pure plan/codegen overhead — 256
-    // buckets over a 5k-row sf0.1 input was most of q_pack_chunks'
-    // wall, ConfigProbe r8). At cluster scale a 100 TB input has
-    // thousands of splits and gets thousands of buckets, as before.
-    val nBkt = if (buckets > 0) buckets
-               else math.max(8, input.rdd.getNumPartitions * 4)
-    val probes = (1 until nBkt).map(_.toDouble / nBkt).toArray
-    val bounds =
-      if (probes.isEmpty) Array.empty[Double]
-      else input.select(col(orderCol).cast("double").as("__ord"))
-        .stat.approxQuantile("__ord", probes, 0.01)
-    // bucket = #bounds strictly below the key — monotone in orderCol,
-    // so bucket order IS key order and equal keys share a bucket
-    val bktExpr = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col(orderCol).cast("double") > lit(b), 1).otherwise(0)
-    }
-    val local = input.withColumn("__bkt", bktExpr)
-    val wLocal = Window.partitionBy(col("__bkt")).orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // per-bucket token masses — ≤ nBkt rows by construction, never
-    // data volume — are COLLECTED, prefix-summed on the driver and
-    // rejoined as a broadcast local relation (the epochShuffle/aucROC
-    // pattern): the former window spelling kept an
-    // `Exchange SinglePartition` node in every consumer's plan (and a
-    // WindowExec single-partition warning per execution) for what is
-    // driver-scalar arithmetic. Null masses (a bucket whose tokens
-    // are all null) contribute 0, exactly as the windowed sum skipped
-    // them.
-    val hist = local.groupBy(col("__bkt"))
-      .agg(sum(col(tokensCol)).as("__btot"))
-      .collect()
-      .map(r => (r.getInt(0),
-        if (r.isNullAt(1)) 0L else r.getAs[Number](1).longValue))
-      .sortBy(_._1)
-    var acc = 0L
-    val offs = hist.map { case (b, t) => val o = (b, acc); acc += t; o }
-    import spark.implicits._
-    val offsets = offs.toSeq.toDF("__bkt", "__boff")
-    local
-      .withColumn("__local",
-        coalesce(sum(col(tokensCol)).over(wLocal), lit(0L)))
-      .join(broadcast(offsets), Seq("__bkt"))
-      .withColumn("offset", (col("__boff") + col("__local")).cast("long"))
+    val (ranked, _) = GlobalOrdinal.prefix(input, Seq(GlobalOrdinal.Ordinal(
+      "offset", GlobalOrdinal.quantileBucket(input, col(orderCol)),
+      Seq(col(orderCol)))), col(tokensCol))
+    ranked
       // integral division (`div`), never Column./ — the `/` operator is
       // double division, which silently loses integer precision once
       // offsets pass ~2^53 (a few PB of tokens, i.e. exactly the scale
@@ -127,7 +79,7 @@ object Packing {
         col("offset") + greatest(col(tokensCol).cast("long"), lit(1L)) - 1L)
       .withColumn("chunk", expr(s"offset div ${budget}L"))
       .withColumn("chunk_end", expr(s"__last div ${budget}L"))
-      .drop("__bkt", "__local", "__boff", "__last")
+      .drop("__last")
   }
 
   /** Whole-document first-fit packing: output (idCol, n_tokens,

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.ops.GlobalOrdinal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +37,7 @@ import org.apache.spark.sql.functions._
   * maxHops) shuffle rounds, all keyed on the url; no per-hop
   * iteration, cycles flagged without being walked. At 100 TB the
   * redirect frame is millions of rows — the 4 sweeps are seconds.
-  * Below `driverEdgeLimit` sources the identical recurrence replays
+  * Up to `driverEdgeLimit` sources the identical recurrence replays
   * on the driver in one collect (the connectedComponents adaptive
   * switch — sweep jobs are pure scheduling at that size); above it
   * nothing is ever collected.
@@ -60,7 +61,8 @@ object Redirects {
     *         distinct redirect source; `final_url`/`n_hops` null
     *         when unresolved. */
   def resolveChains(redirects: DataFrame, maxHops: Int = 16,
-                    driverEdgeLimit: Long = 500000L): DataFrame = {
+                    driverEdgeLimit: Long = GlobalOrdinal.DriverRowCap)
+      : DataFrame = {
     require(maxHops >= 1 && maxHops <= 1024,
       s"maxHops must be in [1, 1024], got $maxHops")
     val edges = redirects
@@ -74,7 +76,7 @@ object Redirects {
 
     // ADAPTIVE SIZE SWITCH (the connectedComponents/PageRank
     // pattern): a crawl window's redirect frame is routinely tiny
-    // after the 3xx filter, and below `driverEdgeLimit` sources the
+    // after the 3xx filter, and up to `driverEdgeLimit` sources the
     // sweeps' cost is pure scheduling — each is a self-join + an
     // eager checkpoint job (q_redirect_chain: 10 jobs for a 37-row
     // planted graph). The driver replays the IDENTICAL pointer-
@@ -82,13 +84,13 @@ object Redirects {
     // compose, same terminal test; the min-target collapse already
     // happened in the Spark aggregate above, so no driver-side string
     // ordering is involved, only equality (Java String equality ==
-    // UTF8String equality). The gating count reads the checkpoint the
-    // distributed path needs anyway; above the limit nothing is ever
-    // collected.
-    if (edges.count() <= driverEdgeLimit) {
+    // UTF8String equality). The gating collect reads the checkpoint
+    // the distributed path needs anyway; above the limit nothing is
+    // kept on the driver.
+    val small = GlobalOrdinal.collectUpTo(edges, driverEdgeLimit)
+    if (small.nonEmpty) {
       val spark = redirects.sparkSession
-      val es = edges.collect()
-        .map(r => (r.getString(0), r.getString(1)))
+      val es = small.get.map(r => (r.getString(0), r.getString(1)))
       var st = new java.util.HashMap[String, (String, Long)]()
       es.foreach { case (u, c) => st.put(u, (c, 1L)) }
       for (_ <- 0 until sweeps) {

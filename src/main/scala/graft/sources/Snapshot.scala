@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.ops.GlobalOrdinal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count,
   count_distinct, lit, max, min, sum, when}
@@ -158,10 +159,10 @@ object Snapshot {
 
   /** Cap on DRIVER-COLLECTED key sets for point-lookup pruning and
     * the merge paths' small-source fast path: at or under it, a key
-    * set collects once (a LIMIT — one early-out scan, not a full
-    * pass) and row count, duplicate check, range envelope and Bloom
-    * probes are driver arithmetic; above it the distributed aggregate
-    * spellings run unchanged. */
+    * set collects in one [[GlobalOrdinal.collectUpTo]] job and row
+    * count, duplicate check, range envelope and Bloom probes are
+    * driver arithmetic; above it the distributed aggregate spellings
+    * run unchanged. */
   private val MaxProbeKeys = 10000
 
   // ---- commit paths ---------------------------------------------------
@@ -752,16 +753,26 @@ object Snapshot {
     val base = currentManifest(spark, table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot in $table"))
     require(base.files.nonEmpty, s"empty table $table")
-    val (inRange, disjoint) = base.files.partition { f =>
-      fileStats(f, column, base.schemaChanges) match {
-        case None => true // unknown: must inspect
-        case Some(s) =>
-          val lo = reprOf(s.typ, lower)
-          val hi = reprOf(s.typ, upper)
-          cmp(s.typ, s.max, lo) >= 0 && cmp(s.typ, s.min, hi) <= 0
-      }
-    }
-    val (dropped, rewrite) = inRange.partition { f =>
+    val (disjoint, dropped, rewrite) =
+      rangeTriage(base, column, lower, upper)
+    val cond = col(column) >= lit(lower) && col(column) <= lit(upper)
+    // an interleaved append conflicts iff any of its files might hold
+    // a row INSIDE the delete range (its rows would dodge the delete)
+    deleteCommit(spark, table, base, disjoint, dropped, rewrite, cond,
+      appended => keptByRange(appended, column, lower, upper,
+        base.schemaChanges).nonEmpty)
+  }
+
+  /** The stats triage both range deletes share, over `base`'s files:
+    * (provably DISJOINT from `[lower, upper]`, wholly inside it and
+    * droppable outright, OVERLAPPING — stat-less, null-carrying or
+    * float files included). */
+  private def rangeTriage(base: Manifest, column: String, lower: Any,
+                          upper: Any)
+      : (Seq[FileEntry], Seq[FileEntry], Seq[FileEntry]) = {
+    val (inRange, disjoint) = base.files.partition(f => keptByRange(
+      Seq(f), column, lower, upper, base.schemaChanges).nonEmpty)
+    val (dropped, overlapping) = inRange.partition { f =>
       fileStats(f, column, base.schemaChanges) match {
         // floating-point columns NEVER wholesale-drop: parquet float
         // stats may silently ignore NaN values, and a NaN row matches
@@ -775,15 +786,10 @@ object Snapshot {
           val lo = reprOf(s.typ, lower)
           val hi = reprOf(s.typ, upper)
           cmp(s.typ, s.min, lo) >= 0 && cmp(s.typ, s.max, hi) <= 0
-        case _ => false // stat-less, null-carrying, or float: rewrite
+        case _ => false // stat-less, null-carrying, or float
       }
     }
-    val cond = col(column) >= lit(lower) && col(column) <= lit(upper)
-    // an interleaved append conflicts iff any of its files might hold
-    // a row INSIDE the delete range (its rows would dodge the delete)
-    deleteCommit(spark, table, base, disjoint, dropped, rewrite, cond,
-      appended => keptByRange(appended, column, lower, upper,
-        base.schemaChanges).nonEmpty)
+    (disjoint, dropped, overlapping)
   }
 
   /** Row-level DELETE by an arbitrary predicate, copy-on-write: one
@@ -901,25 +907,9 @@ object Snapshot {
     val base = currentManifest(spark, table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot in $table"))
     require(base.files.nonEmpty, s"empty table $table")
-    val (inRange, _) = base.files.partition { f =>
-      fileStats(f, column, base.schemaChanges) match {
-        case None => true
-        case Some(s) =>
-          val lo = reprOf(s.typ, lower)
-          val hi = reprOf(s.typ, upper)
-          cmp(s.typ, s.max, lo) >= 0 && cmp(s.typ, s.min, hi) <= 0
-      }
-    }
-    if (inRange.isEmpty) return base.version // provably nothing matches
-    val (dropped, overlapping) = inRange.partition { f =>
-      fileStats(f, column, base.schemaChanges) match {
-        case Some(s) if s.nulls == 0L && s.typ != "double" =>
-          val lo = reprOf(s.typ, lower)
-          val hi = reprOf(s.typ, upper)
-          cmp(s.typ, s.min, lo) >= 0 && cmp(s.typ, s.max, hi) <= 0
-        case _ => false
-      }
-    }
+    val (_, dropped, overlapping) = rangeTriage(base, column, lower, upper)
+    if (dropped.isEmpty && overlapping.isEmpty)
+      return base.version // provably nothing matches
     val typ = {
       val fromStats = base.files
         .flatMap(f => fileStats(f, column, base.schemaChanges))
@@ -2163,11 +2153,11 @@ object Snapshot {
       // the same sample — one Spark job where the old spelling ran a
       // min/max aggregate AND a collect over the same keys
       val sample =
-        if (hasBloom) distinctKeys.limit(MaxProbeKeys + 1).collect()
-        else Array.empty[org.apache.spark.sql.Row]
-      if (hasBloom && sample.length <= MaxProbeKeys) {
+        if (hasBloom) GlobalOrdinal.collectUpTo(distinctKeys, MaxProbeKeys)
+        else None
+      if (sample.nonEmpty) {
         keyCandidatesVals(files, changes, c,
-          sample.map(_.get(0)).filter(_ != null))
+          sample.get.map(_.get(0)).filter(_ != null))
       } else {
         // no Bloom coverage (or key set over the probe cap): the
         // envelope prune from one aggregate, exactly as before
@@ -2177,24 +2167,22 @@ object Snapshot {
       }
     } else files
 
-  /** The merge paths' SMALL-SOURCE probe: one bounded collect
-    * (`limit(MaxProbeKeys + 1)` — a LIMIT short-circuits, one
-    * early-out partition scan even over a huge source) classifies the
-    * source. Some(values, nulls included) = the WHOLE key set is in
-    * hand, so row count, duplicate check, candidate pruning and
-    * conflict tests become driver arithmetic; None = over the cap
-    * (fall back to the aggregate spellings) or a key type whose
-    * driver equality diverges from SQL's (binary compares by
-    * reference, nested types by element identity — the fast path
-    * would mis-judge distinctness). */
+  /** The merge paths' SMALL-SOURCE probe: one
+    * [[GlobalOrdinal.collectUpTo]] job (each task returns at most
+    * `MaxProbeKeys + 1` keys; an over-cap total cancels the rest of
+    * the job) classifies the source. Some(values, nulls included) =
+    * the WHOLE key set is in hand, so row count, duplicate check,
+    * candidate pruning and conflict tests become driver arithmetic;
+    * None = over the cap (fall back to the aggregate spellings) or a
+    * key type whose driver equality diverges from SQL's (binary
+    * compares by reference, nested types by element identity — the
+    * fast path would mis-judge distinctness). */
   private def smallKeySample(srcKeys: DataFrame): Option[Array[Any]] =
     srcKeys.schema.head.dataType match {
       case BinaryType | _: ArrayType | _: MapType | _: StructType =>
         None
       case _ =>
-        val rows = srcKeys.limit(MaxProbeKeys + 1).collect()
-        if (rows.length <= MaxProbeKeys) Some(rows.map(_.get(0)))
-        else None
+        GlobalOrdinal.collectUpTo(srcKeys, MaxProbeKeys).map(_.map(_.get(0)))
     }
 
   /** Driver-side distinct count matching SQL `count_distinct` for the
