@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count,
   count_distinct, lit, max, min, sum, when}
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Snapshot-isolated table commits — the manifest-based layout
   * (Iceberg-shape, public architecture) that closes [[Layout.compact]]'s
@@ -196,31 +197,8 @@ object Snapshot {
              tag: Option[String] = None,
              statsCols: Seq[String] = Nil,
              bloomCols: Seq[String] = Nil,
-             branch: String = "main"): Long = {
-    val spark = df.sparkSession
-    requireBloomTracked(statsCols, bloomCols)
-    tag.flatMap(t => findTag(spark, table, t)) match {
-      case Some(v) => return v // replayed batch: already committed
-      case None => ()
-    }
-    val (staged0, stagedRows) = withStatsAndRows(spark, table,
-      stage(spark, df, table, Nil, bloomCols), statsCols)
-    val staged = withBlooms(spark, table, staged0, bloomCols)
-    commitRetryingOn(spark, table, branch) { (parent, v) =>
-      tag.flatMap(t => findTag(spark, table, t)).foreach { v =>
-        throw new DuplicateTag(v) } // raced replayer landed it first
-      requireSameLayout(parent, Nil)
-      Manifest(v, parent.version, "append",
-        parent.rows + stagedRows,
-        parent.files ++ staged.map(_.copy(seq = v)),
-        tag.getOrElse(""),
-        rangeDeletes = parent.rangeDeletes, eqDeletes = parent.eqDeletes,
-        schemaChanges = parent.schemaChanges)
-    } match {
-      case Right(v) => v
-      case Left(v) => v // duplicate detected mid-retry
-    }
-  }
+             branch: String = "main"): Long =
+    appendStaged(df, table, Nil, tag, statsCols, bloomCols, branch)
 
   /** [[append]] with a Hive-partitioned staging layout
     * (`data/<uuid>/k=v/part-*.parquet`): the partition columns stay
@@ -239,18 +217,29 @@ object Snapshot {
                         bloomCols: Seq[String] = Nil,
                         branch: String = "main"): Long = {
     require(partitionCols.nonEmpty, "use append for unpartitioned data")
+    appendStaged(df, table, partitionCols, tag, statsCols, bloomCols,
+      branch)
+  }
+
+  /** The one append body: stage `df` under `partitionCols` (which
+    * must match the table's declared layout), then commit the staged
+    * files on top of whatever the parent holds — its pending deletes
+    * and schema changes carry unchanged. */
+  private def appendStaged(df: DataFrame, table: String,
+                           partitionCols: Seq[String],
+                           tag: Option[String], statsCols: Seq[String],
+                           bloomCols: Seq[String], branch: String): Long = {
     val spark = df.sparkSession
     requireBloomTracked(statsCols, bloomCols)
     tag.flatMap(t => findTag(spark, table, t)) match {
-      case Some(v) => return v
+      case Some(v) => return v // replayed batch: already committed
       case None => ()
     }
-    val (staged0, stagedRows) = withStatsAndRows(spark, table,
-      stage(spark, df, table, partitionCols, bloomCols), statsCols)
-    val staged = withBlooms(spark, table, staged0, bloomCols)
+    val (staged, stagedRows) = stageWrite(spark, table, df, partitionCols,
+      statsCols, bloomCols)
     commitRetryingOn(spark, table, branch) { (parent, v) =>
       tag.flatMap(t => findTag(spark, table, t)).foreach { v =>
-        throw new DuplicateTag(v) }
+        throw new DuplicateTag(v) } // raced replayer landed it first
       requireSameLayout(parent, partitionCols)
       Manifest(v, parent.version, "append",
         parent.rows + stagedRows,
@@ -258,10 +247,7 @@ object Snapshot {
         tag.getOrElse(""),
         rangeDeletes = parent.rangeDeletes, eqDeletes = parent.eqDeletes,
         schemaChanges = parent.schemaChanges)
-    } match {
-      case Right(v) => v
-      case Left(v) => v
-    }
+    }.merge
   }
 
   /** Committed version carrying `tag`, if any (scans the retained
@@ -314,14 +300,12 @@ object Snapshot {
     val spark = df.sparkSession
     requireBloomTracked(statsCols, bloomCols)
     val base = currentManifest(spark, table)
-    val pCols = base.map(declaredLayout).getOrElse(Nil)
     val effBloom =
       if (bloomCols.nonEmpty) bloomCols
       else base.map(currentBloomColsOf).getOrElse(Nil)
         .filter(statsCols.contains)
-    val (staged0, stagedRows) = withStatsAndRows(spark, table,
-      stage(spark, df, table, pCols, effBloom), statsCols)
-    val staged = withBlooms(spark, table, staged0, effBloom)
+    val (staged, stagedRows) = stageWrite(spark, table, df,
+      base.map(declaredLayout).getOrElse(Nil), statsCols, effBloom)
     commitRetrying(spark, table) { (parent, v) =>
       Manifest(v, parent.version, "overwrite",
         stagedRows, staged.map(_.copy(seq = v)))
@@ -362,46 +346,7 @@ object Snapshot {
                        targetFileBytes: Long = 128L << 20,
                        branch: String = "main"): Long = {
     require(targetFileBytes > 0)
-    val base = headManifest(spark, table, branch).getOrElse(
-      throw new IllegalStateException(
-        s"no committed snapshot on '$branch' in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
-    val totalBytes = base.files.map(_.bytes).sum
-    val nf = math.max(1L, (totalBytes + targetFileBytes - 1)
-      / targetFileBytes).toInt
-    // a partitioned table's rewrite preserves its layout: partition
-    // columns are recovered from the manifest's own k=v path segments
-    // (coalesce bounds files per WRITE, so each partition dir gets at
-    // most nf files — the writePartitionedCompact shape)
-    val pCols = declaredLayout(base)
-    // the rewrite reads LIVE rows: pending merge-on-read deletes fold
-    // into the new files here and the committed manifest is clean
-    val src = readLive(spark, table, base, base.files)
-    val rewrite =
-      if (clusterCols.isEmpty) src.coalesce(nf)
-      else src.repartitionByRange(nf, clusterCols.map(col): _*)
-        .sortWithinPartitions(clusterCols.map(col): _*)
-    // the rewrite keeps the table's stats AND bloom coverage:
-    // whatever the parent tracked is re-gathered over the new files
-    val (staged0, rewrittenRows) = withStatsAndRows(spark, table,
-      stage(spark, rewrite, table, pCols, currentBloomColsOf(base)),
-      currentStatsColsOf(base))
-    val staged = withBlooms(spark, table, staged0,
-      currentBloomColsOf(base))
-    require(rewrittenRows == base.rows,
-      s"compact row mismatch: snapshot=${base.rows} " +
-        s"rewritten=$rewrittenRows — nothing committed")
-    commitRetryingOn(spark, table, branch) { (parent, v) =>
-      // a value-preserving rewrite of base's LIVE rows overlaps
-      // nothing an append adds: interleaved appends carry forward by
-      // reference (their files stay newer than every folded delete /
-      // schema change, so the clean manifest is still exact for them)
-      val carriedAppends = carriedOrAbort(spark, table, base, parent,
-        "compact", _ => false)
-      Manifest(v, parent.version, "compact",
-        base.rows + (parent.rows - base.rows),
-        staged.map(_.copy(seq = v)) ++ carriedAppends)
-    }.merge
+    compactFiles(spark, table, branch, clusterCols, targetFileBytes, None)
   }
 
   /** BIN-PACKING small-file compaction: rewrite ONLY the files under
@@ -432,40 +377,55 @@ object Snapshot {
                    minInputFiles: Int = 2,
                    branch: String = "main"): Long = {
     require(smallBytes > 0 && targetFileBytes > 0 && minInputFiles >= 2)
-    val base = headManifest(spark, table, branch).getOrElse(
-      throw new IllegalStateException(
-        s"no committed snapshot on '$branch' in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
-    val (small, kept) = base.files.partition(_.bytes < smallBytes)
-    if (small.size < minInputFiles) return base.version
-    val pCols = declaredLayout(base)
-    val src = readLive(spark, table, base, small)
-    // the verification count: manifest footer rows when no pending
-    // delete applies to the small set (driver math, no job); else one
-    // read bounded by the same small-file mass as the rewrite itself
-    val expect = liveRowsFromMeta(base, small).getOrElse(src.count())
-    val totalBytes = small.map(_.bytes).sum
-    val nf = math.max(1L, (totalBytes + targetFileBytes - 1)
+    compactFiles(spark, table, branch, Nil, targetFileBytes,
+      Some((smallBytes, minInputFiles)))
+  }
+
+  /** The one compaction: a file selector plus one rewrite. `small =
+    * None` selects every file of `branch`'s head; `Some((smallBytes,
+    * minInputFiles))` selects the files under `smallBytes` and commits
+    * nothing when fewer than `minInputFiles` qualify. The selection's
+    * LIVE rows (pending deletes and schema changes fold in here) are
+    * rewritten into ~`targetFileBytes` files, range-partitioned and
+    * sorted on `clusterCols` when given; the manifest drops its
+    * pending entries only when the selection covered every file.
+    *
+    * Row-verified before anything commits: a whole-table selection
+    * against `base.rows` (driver arithmetic — [[liveRowsFromMeta]] is
+    * None under pending deletes and would cost a count job), a partial
+    * one against its footer rows when no pending delete applies, else
+    * one count bounded by the selection. */
+  private def compactFiles(spark: SparkSession, table: String,
+                           branch: String, clusterCols: Seq[String],
+                           targetFileBytes: Long,
+                           small: Option[(Long, Int)]): Long = {
+    val base = writeBase(spark, table, branch)
+    val picked = small.fold(base.files) { case (bytes, _) =>
+      base.files.filter(_.bytes < bytes) }
+    if (small.exists(_._2 > picked.size)) return base.version
+    val expect =
+      if (small.isEmpty) base.rows else liveCount(spark, table, base, picked)
+    val nf = math.max(1L, (picked.map(_.bytes).sum + targetFileBytes - 1)
       / targetFileBytes).toInt
-    val (staged0, rewrittenRows) = withStatsAndRows(spark, table,
-      stage(spark, src.coalesce(nf), table, pCols,
-        currentBloomColsOf(base)),
-      currentStatsColsOf(base))
-    val staged = withBlooms(spark, table, staged0,
-      currentBloomColsOf(base))
-    require(rewrittenRows == expect,
-      s"compactSmall row mismatch: small-file live rows=$expect " +
-        s"rewritten=$rewrittenRows — nothing committed")
-    val clean = kept.isEmpty // full coverage: pending entries fold away
-    commitRetryingOn(spark, table, branch) { (parent, v) =>
-      val carriedAppends = carriedOrAbort(spark, table, base, parent,
-        "compactSmall", _ => false)
-      Manifest(v, parent.version, "compact", parent.rows,
-        kept ++ staged.map(_.copy(seq = v)) ++ carriedAppends,
-        rangeDeletes = if (clean) Nil else base.rangeDeletes,
-        eqDeletes = if (clean) Nil else base.eqDeletes,
-        schemaChanges = if (clean) Nil else base.schemaChanges)
-    }.merge
+    // coalesce bounds files per WRITE, so each partition dir of a
+    // partitioned table gets at most nf files (the
+    // writePartitionedCompact shape)
+    val src = readLive(spark, table, base, picked)
+    val rewrite =
+      if (clusterCols.isEmpty) src.coalesce(nf)
+      else src.repartitionByRange(nf, clusterCols.map(col): _*)
+        .sortWithinPartitions(clusterCols.map(col): _*)
+    val (staged, rewritten) = stageRewrite(spark, table, base, rewrite)
+    val op = if (small.isEmpty) "compact" else "compactSmall"
+    require(rewritten == expect, s"$op row mismatch: selected live " +
+      s"rows=$expect rewritten=$rewritten — nothing committed")
+    // a value-preserving rewrite of base's LIVE rows overlaps nothing
+    // an append adds: interleaved appends carry forward by reference
+    // (their files stay newer than every folded delete / schema
+    // change, so a clean manifest is still exact for them)
+    commitPlan(spark, table, Plan(base, "compact", op, picked, staged,
+      expect, rewritten, _ => false,
+      foldPending = picked.size == base.files.size, branch = branch))
   }
 
   /** MERGE (upsert) `source` into the table by `key`, COPY-ON-WRITE:
@@ -494,28 +454,11 @@ object Snapshot {
     * `source` is empty). */
   def merge(source: DataFrame, table: String, key: String): Long = {
     val spark = source.sparkSession
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
-    // ONE aggregate answers row count, duplicate-key check and the
-    // key bounds (formerly three jobs over the source): distinct-count
-    // spells count_distinct + a null adjustment, matching
-    // `select(key).distinct().count()` exactly (nulls collapse to one)
-    val sagg = source.agg(count(lit(1)), count(col(key)),
-      count_distinct(col(key)), min(col(key)), max(col(key))).head()
-    val srcRows = sagg.getLong(0)
+    val base = writeBase(spark, table)
+    // stage 1: manifest stats drop files outside the source key range
+    val (srcRows, ranged) = sourceKeyAgg(source, key, base)
     if (srcRows == 0L) return base.version
     requireUnrenamed(base, Seq(key), "merge key")
-    val distinctKeyCount = sagg.getLong(2) +
-      (if (sagg.getLong(0) > sagg.getLong(1)) 1L else 0L)
-    require(distinctKeyCount == srcRows,
-      s"merge source carries duplicate '$key' values — upsert would be " +
-        "order-dependent; dedup the source first")
-    // stage 1: manifest stats drop files outside the source key range
-    val ranged =
-      if (sagg.isNullAt(3)) Nil // all-null source keys match no row
-      else keptByRange(base.files, key, sagg.get(3), sagg.get(4),
-        base.schemaChanges)
     // a probe-cap source with Bloom coverage on any ranged survivor
     // buys per-file Bloom probes for one bounded collect: files that
     // provably hold none of the keys skip stage 2's scan entirely,
@@ -526,58 +469,25 @@ object Snapshot {
               .exists(_.bloom.nonEmpty))) None
       else smallKeySample(source.select(col(key)))
         .map(_.filter(_ != null))
-    val candidates = smallKeys match {
-      case Some(vs) =>
-        keptByKeyBloomVals(ranged, key, vs, base.schemaChanges)
-      case None => ranged
-    }
+    val candidates = smallKeys.fold(ranged)(vs =>
+      keptByKeyBloomVals(ranged, key, vs, base.schemaChanges))
     // stage 2: which candidate files truly contain a matched key
-    val srcKeys = source.select(col(key).as("__merge_key"))
-    val touchedPaths: Set[String] =
-      if (candidates.isEmpty) Set.empty
-      else readFilesWithPath(spark, table, candidates, Seq(key))
-        .join(srcKeys, col(key) === col("__merge_key"), "left_semi")
-        .select("__file").distinct()
-        .collect().map(_.getString(0)).toSet // bounded by file count
-    val touched = candidates.filter(e =>
-      touchedPaths.exists(p => p.endsWith("/" + e.path)))
-    val touchedSet = touched.map(_.path).toSet
-    val carried = base.files.filterNot(f => touchedSet.contains(f.path))
+    val touched =
+      if (candidates.isEmpty) Nil
+      else hitFiles(candidates,
+        readFilesWithPath(spark, table, candidates, Some(Seq(key)))
+          .join(source.select(col(key).as("__merge_key")),
+            col(key) === col("__merge_key"), "left_semi"))
     // the rewrite: surviving rows of the hit files + ALL source rows
     // (replacements and inserts land together in the new files)
     val newData = (if (touched.isEmpty) source
                    else readLive(spark, table, base, touched)
                      .join(source.select(col(key)), Seq(key), "left_anti")
                      .unionByName(source))
-    val pCols = declaredLayout(base)
-    val (staged0, stagedRows) = withStatsAndRows(spark, table,
-      stage(spark, newData, table, pCols, currentBloomColsOf(base)),
-      currentStatsColsOf(base))
-    val staged = withBlooms(spark, table, staged0,
-      currentBloomColsOf(base))
-    val touchedRows =
-      if (touched.isEmpty) 0L
-      else liveRowsFromMeta(base, touched).getOrElse(
-        readLive(spark, table, base, touched).count())
-    commitRetrying(spark, table) { (parent, v) =>
-      // an interleaved append conflicts iff it might contain a merge
-      // key (its rows would dodge the upsert): stats/Bloom-proven
-      // disjoint appends carry forward, anything else aborts
-      val carriedAppends = carriedOrAbort(spark, table, base, parent,
-        "merge", appended => (smallKeys match {
-          case Some(vs) => keyCandidatesVals(appended,
-            base.schemaChanges, key, vs)
-          case None => keyCandidatesIn(appended, base.schemaChanges,
-            source.select(col(key)), Seq(key))
-        }).nonEmpty)
-      Manifest(v, parent.version, "merge",
-        base.rows - touchedRows + stagedRows
-          + (parent.rows - base.rows),
-        carried ++ carriedAppends ++
-          staged.map(_.copy(seq = v)),
-        rangeDeletes = base.rangeDeletes, eqDeletes = base.eqDeletes,
-        schemaChanges = base.schemaChanges)
-    }.merge
+    val (staged, stagedRows) = stageRewrite(spark, table, base, newData)
+    commitPlan(spark, table, Plan(base, "merge", "merge", touched, staged,
+      liveCount(spark, table, base, touched), stagedRows,
+      keyConflicts(base, Seq(key), smallKeys, source.select(col(key)))))
   }
 
   /** MERGE (upsert), MERGE-ON-READ — the at-scale spelling of
@@ -614,120 +524,94 @@ object Snapshot {
       case Some(v) => return v
       case None => ()
     }
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
+    val base = writeBase(spark, table)
     val srcKeys = source.select(col(key))
-    val dupMsg =
-      s"merge source carries duplicate '$key' values — upsert would " +
-        "be order-dependent; dedup the source first"
     // ONE bounded collect replaces the count/duplicate aggregate AND
     // the candidate probe's own collect (guide §1.2): a source at or
     // under the probe cap — the micro-batch/MV-state upsert shape
     // this MoR spelling exists for — yields row count, duplicate
     // check, range envelope and Bloom probes as driver arithmetic in
-    // one job; a bigger source pays the LIMIT's early-out scan and
-    // falls back to the aggregate spelling unchanged
-    val smallVals: Option[Array[Any]] = smallKeySample(srcKeys)
-    // candidate files (stats- and bloom-pruned as in [[deleteKeysMor]]:
-    // files that provably hold none of the source keys never join the
-    // accounting scan) + the emptiness/distinct-keys contract
-    val (candidates, smallKeys) = smallVals match {
+    // one job; a bigger source has that job cancelled past the cap
+    // ([[GlobalOrdinal.collectUpTo]]) and pays the aggregate spelling.
+    // Candidate files are stats- and bloom-pruned as in
+    // [[deleteKeysMor]]: files that provably hold none of the source
+    // keys never join the accounting scan.
+    val (candidates, smallKeys) = smallKeySample(srcKeys) match {
       case Some(vals) =>
         if (vals.isEmpty) return base.version
         val nonNull = vals.filter(_ != null)
         require(vals.length - nonNull.length <= 1 &&
-          sqlDistinctCount(nonNull) == nonNull.length, dupMsg)
-        (keyCandidatesVals(base.files, base.schemaChanges, key,
-          nonNull), Some(nonNull))
+          sqlDistinctCount(nonNull) == nonNull.length, duplicateKeys(key))
+        (keyHits(base.files, base.schemaChanges, Seq(key), Some(nonNull),
+          srcKeys), Some(nonNull))
       case None =>
-        // count_distinct + null adjustment ==
-        // `select(key).distinct().count()` exactly
-        val sagg = source.agg(count(lit(1)), count(col(key)),
-          count_distinct(col(key)), min(col(key)), max(col(key)))
-          .head()
-        val srcRows = sagg.getLong(0)
+        val (srcRows, ranged) = sourceKeyAgg(source, key, base)
         if (srcRows == 0L) return base.version
-        require(sagg.getLong(2) +
-          (if (sagg.getLong(0) > sagg.getLong(1)) 1L else 0L)
-            == srcRows, dupMsg)
-        val cands =
-          if (sagg.isNullAt(3)) Nil // all-null keys match nothing
-          else keptByRange(base.files, key, sagg.get(3), sagg.get(4),
-            base.schemaChanges)
-        (cands, None)
+        (ranged, None)
     }
     // matched keys + exact dead-row accounting in ONE pass: the
     // candidates' live rows semi-join the source keys and group to
     // the distinct matched keys — which ARE the equality-delete
     // file's rows — while the pre-group row count (the rows the
     // delete kills) and the matched-key count ride the SAME job as
-    // CollectMetrics observations. The old spelling ran a count job
-    // AND a write job over the same join.
-    val (rel, delBytes, nMatched, dead) =
-      if (candidates.isEmpty) ("", 0L, 0L, 0L)
+    // CollectMetrics observations: one write job, no count job.
+    val eq: Option[(EqDelete, Long)] =
+      if (candidates.isEmpty) None
       else {
         val obs = new org.apache.spark.sql.Observation()
-        val matched = readLive(spark, table, base, candidates)
-          .select(col(key))
-          .join(srcKeys, Seq(key), "left_semi")
-          .groupBy(col(key)).agg(count(lit(1)).as("__graft_live"))
-          .observe(obs,
-            coalesce(sum(col("__graft_live")), lit(0L)).as("dead"),
-            count(lit(1)).as("matched"))
-          .select(col(key))
-        val r = s"deletes/${java.util.UUID.randomUUID()}"
-        matched.write.mode("errorifexists")
-          .option("mapreduce.fileoutputcommitter.algorithm.version",
-            "2") // published by the manifest CAS, as in [[stage]]
-          .parquet(s"$table/$r")
+        val d = writeEqDelete(spark, table,
+          readLive(spark, table, base, candidates)
+            .select(col(key))
+            .join(srcKeys, Seq(key), "left_semi")
+            .groupBy(col(key)).agg(count(lit(1)).as("__graft_live"))
+            .observe(obs,
+              coalesce(sum(col("__graft_live")), lit(0L)).as("dead"),
+              count(lit(1)).as("matched"))
+            .select(col(key)), Seq(key))
         val killed = obs.get("dead").asInstanceOf[Long]
-        stagedSchemaCache.put(s"$table/$r", matched.schema) // as in stage()
-        val fs = hadoopFs(spark, table)
-        if (killed == 0L) {
+        if (killed > 0L)
+          Some((d.copy(rows = obs.get("matched").asInstanceOf[Long]),
+            killed))
+        else {
           // pure inserts: no delete entry lands (unmatched keys would
           // anti-join nothing but cost every read's accounting); the
           // empty unpublished dir is garbage — remove it now
-          fs.delete(new org.apache.hadoop.fs.Path(s"$table/$r"), true)
-          ("", 0L, 0L, 0L)
-        } else {
-          var bytes = 0L
-          val it = fs.listFiles(
-            new org.apache.hadoop.fs.Path(s"$table/$r"), true)
-          while (it.hasNext) bytes += it.next().getLen
-          (r, bytes, obs.get("matched").asInstanceOf[Long], killed)
+          hadoopFs(spark, table).delete(
+            new org.apache.hadoop.fs.Path(s"$table/${d.dir}"), true)
+          None
         }
       }
-    val pCols = declaredLayout(base)
-    val (staged0, stagedRows) = withStatsAndRows(spark, table,
-      stage(spark, source, table, pCols, currentBloomColsOf(base)),
-      currentStatsColsOf(base))
-    val staged = withBlooms(spark, table, staged0,
-      currentBloomColsOf(base))
-    commitRetrying(spark, table) { (parent, v) =>
-      tag.flatMap(t => findTag(spark, table, t)).foreach { v =>
-        throw new DuplicateTag(v) } // raced replayer landed it first
-      // same conflict rule as [[merge]]: a disjointness-proven append
-      // carries forward (the new EqDelete applies to it by seq, but
-      // provably touches none of its rows — accounting stays exact).
-      // With the collected sample the test is driver arithmetic.
-      val carriedAppends = carriedOrAbort(spark, table, base, parent,
-        "merge", appended => (smallKeys match {
-          case Some(vs) => keyCandidatesVals(appended,
-            base.schemaChanges, key, vs)
-          case None => keyCandidatesIn(appended, base.schemaChanges,
-            srcKeys, Seq(key))
-        }).nonEmpty)
-      Manifest(v, parent.version, "merge-mor",
-        base.rows - dead + stagedRows + (parent.rows - base.rows),
-        base.files ++ carriedAppends ++ staged.map(_.copy(seq = v)),
-        tag.getOrElse(""),
-        rangeDeletes = base.rangeDeletes,
-        eqDeletes = base.eqDeletes ++ (
-          if (dead == 0L) Nil
-          else Seq(EqDelete(rel, delBytes, nMatched, Seq(key), v))),
-        schemaChanges = base.schemaChanges)
-    }.merge
+    val (staged, stagedRows) = stageRewrite(spark, table, base, source)
+    // same conflict rule as [[merge]]: a disjointness-proven append
+    // carries forward (the new EqDelete applies to it by seq, but
+    // provably touches none of its rows — accounting stays exact)
+    commitPlan(spark, table, Plan(base, "merge-mor", "merge", Nil, staged,
+      eq.fold(0L)(_._2), stagedRows,
+      keyConflicts(base, Seq(key), smallKeys, srcKeys),
+      eqDelete = eq.map(_._1), tag = tag))
+  }
+
+  private def duplicateKeys(key: String): String =
+    s"merge source carries duplicate '$key' values — upsert would be " +
+      "order-dependent; dedup the source first"
+
+  /** ONE aggregate over a merge source answers its row count, the
+    * duplicate-key check (rejected loudly) and the key envelope:
+    * distinct-count spells count_distinct + a null adjustment,
+    * matching `select(key).distinct().count()` exactly (nulls
+    * collapse to one). Returns the row count and `base`'s files whose
+    * key stats admit the envelope — none for all-null keys, which
+    * match no row. */
+  private def sourceKeyAgg(source: DataFrame, key: String,
+                           base: Manifest): (Long, Seq[FileEntry]) = {
+    val a = source.agg(count(lit(1)), count(col(key)),
+      count_distinct(col(key)), min(col(key)), max(col(key))).head()
+    require(a.getLong(2) + (if (a.getLong(0) > a.getLong(1)) 1L else 0L)
+      == a.getLong(0), duplicateKeys(key))
+    (a.getLong(0),
+      if (a.isNullAt(3)) Nil
+      else keptByRange(base.files, key, a.get(3), a.get(4),
+        base.schemaChanges))
   }
 
   /** Row-level RANGE DELETE (`lower ≤ column ≤ upper`, inclusive),
@@ -749,144 +633,8 @@ object Snapshot {
     * the range carry forward; an append that might hold an in-range
     * row aborts loudly. Returns the committed version. */
   def deleteRange(spark: SparkSession, table: String, column: String,
-                  lower: Any, upper: Any): Long = {
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
-    val (disjoint, dropped, rewrite) =
-      rangeTriage(base, column, lower, upper)
-    val cond = col(column) >= lit(lower) && col(column) <= lit(upper)
-    // an interleaved append conflicts iff any of its files might hold
-    // a row INSIDE the delete range (its rows would dodge the delete)
-    deleteCommit(spark, table, base, disjoint, dropped, rewrite, cond,
-      appended => keptByRange(appended, column, lower, upper,
-        base.schemaChanges).nonEmpty)
-  }
-
-  /** The stats triage both range deletes share, over `base`'s files:
-    * (provably DISJOINT from `[lower, upper]`, wholly inside it and
-    * droppable outright, OVERLAPPING — stat-less, null-carrying or
-    * float files included). */
-  private def rangeTriage(base: Manifest, column: String, lower: Any,
-                          upper: Any)
-      : (Seq[FileEntry], Seq[FileEntry], Seq[FileEntry]) = {
-    val (inRange, disjoint) = base.files.partition(f => keptByRange(
-      Seq(f), column, lower, upper, base.schemaChanges).nonEmpty)
-    val (dropped, overlapping) = inRange.partition { f =>
-      fileStats(f, column, base.schemaChanges) match {
-        // floating-point columns NEVER wholesale-drop: parquet float
-        // stats may silently ignore NaN values, and a NaN row matches
-        // no range predicate, so it must survive the delete — only
-        // the rewrite path (whose null-safe keep filter NaN also
-        // passes, NaN failing every bounded BETWEEN) can guarantee
-        // that. Range READS stay stats-pruned for doubles: a pruned
-        // read only needs "no row MATCHES in this file", which holds
-        // for NaN under any bounded range.
-        case Some(s) if s.nulls == 0L && s.typ != "double" =>
-          val lo = reprOf(s.typ, lower)
-          val hi = reprOf(s.typ, upper)
-          cmp(s.typ, s.min, lo) >= 0 && cmp(s.typ, s.max, hi) <= 0
-        case _ => false // stat-less, null-carrying, or float
-      }
-    }
-    (disjoint, dropped, overlapping)
-  }
-
-  /** Row-level DELETE by an arbitrary predicate, copy-on-write: one
-    * predicate-column scan names the files that contain a matching
-    * row (columnar — only the referenced columns leave disk); only
-    * those are rewritten with the null-safe keep filter, everything
-    * else carries by reference. No wholesale file drops here — an
-    * arbitrary `Column` can't be proven against min/max stats; use
-    * [[deleteRange]] when the predicate is a range on a tracked
-    * column. Returns the committed version. */
-  def deleteWhere(spark: SparkSession, table: String,
-                  cond: Column): Long = {
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
-    requireUnrenamed(base, {
-      // the predicate's referenced columns, read off the ANALYZED
-      // filter (a Spark-4 Column is an opaque node tree until it
-      // resolves against a frame; analysis costs no job)
-      val probe = readLive(spark, table, base, base.files)
-        .filter(coalesce(cond, lit(false)))
-      probe.queryExecution.analyzed.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition.references.map(_.name).toSeq
-      }.flatten.distinct
-    }, "deleteWhere predicate")
-    val hit: Set[String] =
-      readFilesAllWithPath(spark, table, base.files)
-        .filter(coalesce(cond, lit(false)))
-        .select("__file").distinct()
-        .collect().map(_.getString(0)).toSet
-    val rewrite = base.files.filter(e =>
-      hit.exists(p => p.endsWith("/" + e.path)))
-    val rewriteSet = rewrite.map(_.path).toSet
-    val carried = base.files.filterNot(f => rewriteSet.contains(f.path))
-    // an arbitrary predicate proves nothing about appended files:
-    // ANY interleaved append is a conflict (abort, rerun)
-    deleteCommit(spark, table, base, carried, Nil, rewrite, cond,
-      _.nonEmpty)
-  }
-
-  /** Shared delete tail: stage the null-safe-kept rows of the rewrite
-    * files, account rows (wholesale drops counted off their footers —
-    * a metadata read, no data scan), commit `carried ++ staged` with
-    * the parent-unchanged guard. */
-  private def deleteCommit(spark: SparkSession, table: String,
-                           base: Manifest, carried: Seq[FileEntry],
-                           dropped: Seq[FileEntry],
-                           rewrite: Seq[FileEntry], cond: Column,
-                           appendConflicts: Seq[FileEntry] => Boolean)
-      : Long = {
-    if (dropped.isEmpty && rewrite.isEmpty)
-      return base.version // nothing can match: no-op, nothing committed
-    val pCols = declaredLayout(base)
-    val keep = !coalesce(cond, lit(false)) // NULL never deletes
-    val (staged, stagedRows, rewriteRows) =
-      if (rewrite.isEmpty) (Nil: Seq[FileEntry], 0L, 0L)
-      else {
-        val src = readLive(spark, table, base, rewrite)
-        // ONE pass answers both accounting counts (kept and total —
-        // formerly two jobs over the same files); the keep filter is
-        // never null, so the conditional count is exact
-        val cnts = src.agg(count(lit(1)),
-          count(when(keep, lit(1)))).head()
-        val rewriteCount = cnts.getLong(0)
-        val keptCount = cnts.getLong(1)
-        val st =
-          if (keptCount == 0L) Nil // every row deleted: stage nothing
-          else withBlooms(spark, table,
-            withStats(spark, table,
-              stage(spark, src.filter(keep), table, pCols,
-                currentBloomColsOf(base)),
-              currentStatsColsOf(base)),
-            currentBloomColsOf(base))
-        (st, keptCount, rewriteCount)
-      }
-    // wholesale drops: counted off the manifest's stored footer rows
-    // when no pending delete applies (pure driver math); the scan is
-    // only the legacy-manifest fallback
-    val droppedRows =
-      if (dropped.isEmpty) 0L
-      else liveRowsFromMeta(base, dropped).getOrElse(
-        readLive(spark, table, base, dropped).count())
-    commitRetrying(spark, table) { (parent, v) =>
-      val carriedAppends = carriedOrAbort(spark, table, base, parent,
-        "delete", appendConflicts)
-      Manifest(v, parent.version, "delete",
-        base.rows - droppedRows - (rewriteRows - stagedRows)
-          + (parent.rows - base.rows),
-        carried ++ carriedAppends ++
-          staged.map(_.copy(seq = v)),
-        rangeDeletes = base.rangeDeletes, eqDeletes = base.eqDeletes,
-        schemaChanges = base.schemaChanges)
-    }.merge
-  }
-
-  // ---- merge-on-read deletes --------------------------------------------
+                  lower: Any, upper: Any): Long =
+    deleteInRange(spark, table, column, lower, upper, mor = false)
 
   /** Row-level RANGE DELETE, MERGE-ON-READ — the at-scale spelling of
     * [[deleteRange]]: the commit REWRITES ZERO DATA FILES. Files whose
@@ -903,57 +651,82 @@ object Snapshot {
     * the affected files (a read, never a write). Same
     * revalidate-and-retry contract as [[deleteRange]]. */
   def deleteRangeMor(spark: SparkSession, table: String, column: String,
-                     lower: Any, upper: Any): Long = {
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
-    val (_, dropped, overlapping) = rangeTriage(base, column, lower, upper)
-    if (dropped.isEmpty && overlapping.isEmpty)
-      return base.version // provably nothing matches
-    val typ = {
-      val fromStats = base.files
-        .flatMap(f => fileStats(f, column, base.schemaChanges))
-        .headOption.map(_.typ)
-      fromStats.getOrElse {
-        val field = readFiles(spark, table, base.files).schema
-          .find(_.name == column).getOrElse(throw new
-            IllegalArgumentException(s"no column '$column' in $table"))
-        statTyp(field.dataType).getOrElse(throw new
-          IllegalArgumentException(
-            s"range delete unsupported for '$column': ${field.dataType}"))
-      }
-    }
-    val cond = col(column) >= lit(lower) && col(column) <= lit(upper)
-    val deadDropped =
-      if (dropped.isEmpty) 0L
-      else liveRowsFromMeta(base, dropped).getOrElse(
-        readLive(spark, table, base, dropped).count())
-    val deadOverlap =
-      if (overlapping.isEmpty) 0L
-      else readLive(spark, table, base, overlapping)
-        .filter(coalesce(cond, lit(false))).count()
-    if (deadDropped + deadOverlap == 0L && dropped.isEmpty)
-      return base.version // nothing matches: no-op, nothing committed
-    val droppedSet = dropped.map(_.path).toSet
-    commitRetrying(spark, table) { (parent, v) =>
-      val carriedAppends = carriedOrAbort(spark, table, base, parent,
-        "delete", appended => keptByRange(appended, column, lower,
-          upper, base.schemaChanges).nonEmpty)
-      val newRange =
-        if (deadOverlap > 0L)
-          Seq(RangeDelete(column, reprOf(typ, lower), reprOf(typ, upper),
-            typ, v))
-        else Nil // overlap was a stats over-approximation: no residual
-      Manifest(v, parent.version, "delete-mor",
-        base.rows - deadDropped - deadOverlap
-          + (parent.rows - base.rows),
-        base.files.filterNot(f => droppedSet.contains(f.path))
-          ++ carriedAppends,
-        rangeDeletes = base.rangeDeletes ++ newRange,
-        eqDeletes = base.eqDeletes,
-        schemaChanges = base.schemaChanges)
-    }.merge
+                     lower: Any, upper: Any): Long =
+    deleteInRange(spark, table, column, lower, upper, mor = true)
+
+  /** Both range deletes: the stats triage selects the files to drop
+    * wholesale and the overlapping ones, which are rewritten, or with
+    * `mor` left in place under a residual. An interleaved append
+    * conflicts iff any of its files might hold a row INSIDE the range
+    * (its rows would dodge the delete). */
+  private def deleteInRange(spark: SparkSession, table: String,
+                            column: String, lower: Any, upper: Any,
+                            mor: Boolean): Long = {
+    val base = writeBase(spark, table)
+    val (dropped, overlapping) = rangeTriage(base, column, lower, upper)
+    deletePlanned(spark, table, base, dropped, overlapping,
+      if (mor) Residual(column, lower, upper)
+      else Rewrite(col(column) >= lit(lower) && col(column) <= lit(upper)),
+      appended => keptByRange(appended, column, lower, upper,
+        base.schemaChanges).nonEmpty)
   }
+
+  /** The stats triage both range deletes share, over `base`'s files:
+    * (wholly inside `[lower, upper]` and droppable outright,
+    * OVERLAPPING — stat-less, null-carrying or float files included);
+    * every other file is provably disjoint. */
+  private def rangeTriage(base: Manifest, column: String, lower: Any,
+                          upper: Any): (Seq[FileEntry], Seq[FileEntry]) =
+    keptByRange(base.files, column, lower, upper, base.schemaChanges)
+      .partition { f =>
+        fileStats(f, column, base.schemaChanges) match {
+          // floating-point columns NEVER wholesale-drop: parquet float
+          // stats may silently ignore NaN values, and a NaN row matches
+          // no range predicate, so it must survive the delete — only
+          // the rewrite path (whose null-safe keep filter NaN also
+          // passes, NaN failing every bounded BETWEEN) can guarantee
+          // that. Range READS stay stats-pruned for doubles: a pruned
+          // read only needs "no row MATCHES in this file", which holds
+          // for NaN under any bounded range.
+          case Some(s) if s.nulls == 0L && s.typ != "double" =>
+            val lo = reprOf(s.typ, lower)
+            val hi = reprOf(s.typ, upper)
+            cmp(s.typ, s.min, lo) >= 0 && cmp(s.typ, s.max, hi) <= 0
+          case _ => false // stat-less, null-carrying, or float
+        }
+      }
+
+  /** Row-level DELETE by an arbitrary predicate, copy-on-write: one
+    * predicate-column scan names the files that contain a matching
+    * row (columnar — only the referenced columns leave disk); only
+    * those are rewritten with the null-safe keep filter, everything
+    * else carries by reference. No wholesale file drops here — an
+    * arbitrary `Column` can't be proven against min/max stats; use
+    * [[deleteRange]] when the predicate is a range on a tracked
+    * column. Returns the committed version. */
+  def deleteWhere(spark: SparkSession, table: String,
+                  cond: Column): Long = {
+    val base = writeBase(spark, table)
+    requireUnrenamed(base, {
+      // the predicate's referenced columns, read off the ANALYZED
+      // filter (a Spark-4 Column is an opaque node tree until it
+      // resolves against a frame; analysis costs no job)
+      val probe = readLive(spark, table, base, base.files)
+        .filter(coalesce(cond, lit(false)))
+      probe.queryExecution.analyzed.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          f.condition.references.map(_.name).toSeq
+      }.flatten.distinct
+    }, "deleteWhere predicate")
+    val hit = hitFiles(base.files,
+      readFilesWithPath(spark, table, base.files, None)
+        .filter(coalesce(cond, lit(false))))
+    // an arbitrary predicate proves nothing about appended files:
+    // ANY interleaved append is a conflict (abort, rerun)
+    deletePlanned(spark, table, base, Nil, hit, Rewrite(cond), _.nonEmpty)
+  }
+
+  // ---- merge-on-read deletes --------------------------------------------
 
   /** Row-level DELETE BY KEY, MERGE-ON-READ (the Iceberg v2
     * equality-delete shape): `keys` — one row per dead key over any
@@ -977,9 +750,7 @@ object Snapshot {
       case Some(v) => return v
       case None => ()
     }
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
+    val base = writeBase(spark, table)
     val cols = keys.columns.toSeq
     require(cols.nonEmpty, "empty key frame")
     val distinctKeys0 = keys.distinct()
@@ -987,11 +758,11 @@ object Snapshot {
     // and replays as a LOCAL relation: candidate pruning and the
     // commit's conflict test become driver arithmetic, and the
     // accounting scan's semi-join side and the delete-file write stop
-    // re-evaluating (and re-shuffling) the caller's lineage — the old
-    // spelling ran the distinct three times (probe, count, write)
-    val smallKeys: Option[Array[Any]] =
+    // re-evaluating (and re-shuffling) the caller's lineage, which
+    // would otherwise run the distinct three times (probe, count, write)
+    val sample: Option[Array[Any]] =
       if (cols.size == 1) smallKeySample(distinctKeys0) else None
-    val distinctKeys = smallKeys match {
+    val distinctKeys = sample match {
       case Some(vals) =>
         spark.createDataFrame(
           java.util.Arrays.asList(
@@ -1005,50 +776,251 @@ object Snapshot {
     // match nothing by anti-join semantics — zero candidates), and
     // per-file Bloom filters drop range-overlapping files that
     // provably hold none of the keys
-    val candidates = smallKeys match {
-      case Some(vals) => keyCandidatesVals(base.files,
-        base.schemaChanges, cols.head, vals.filter(_ != null))
-      case None => keyCandidates(base, distinctKeys, cols)
-    }
-    val dead =
-      if (candidates.isEmpty) 0L
-      else readLive(spark, table, base, candidates)
-        .select(cols.map(col): _*)
-        .join(distinctKeys, cols, "left_semi").count()
-    if (dead == 0L) return base.version
-    val rel = s"deletes/${java.util.UUID.randomUUID()}"
-    distinctKeys.write.mode("errorifexists")
-      .option("mapreduce.fileoutputcommitter.algorithm.version",
-        "2") // published by the manifest CAS, as in [[stage]]
-      .parquet(s"$table/$rel")
-    stagedSchemaCache.put(s"$table/$rel", distinctKeys.schema) // as in stage()
-    val fs = hadoopFs(spark, table)
-    var bytes = 0L
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$table/$rel"),
-      true)
-    while (it.hasNext) bytes += it.next().getLen
-    // key count off the just-written footers — a metadata read, not
-    // another Spark job re-running the distinct
-    val nKeys = footerRowsUnder(spark, s"$table/$rel")
-    commitRetrying(spark, table) { (parent, v) =>
-      tag.flatMap(t => findTag(spark, table, t)).foreach { v =>
-        throw new DuplicateTag(v) }
-      val carriedAppends = carriedOrAbort(spark, table, base, parent,
-        "delete", appended => (smallKeys match {
-          case Some(vs) => keyCandidatesVals(appended,
-            base.schemaChanges, cols.head, vs.filter(_ != null))
-          case None => keyCandidatesIn(appended, base.schemaChanges,
-            distinctKeys, cols)
-        }).nonEmpty)
-      Manifest(v, parent.version, "delete-mor",
-        base.rows - dead + (parent.rows - base.rows),
-        base.files ++ carriedAppends,
-        tag.getOrElse(""),
-        rangeDeletes = base.rangeDeletes,
-        eqDeletes = base.eqDeletes :+
-          EqDelete(rel, bytes, nKeys, cols, v),
-        schemaChanges = base.schemaChanges)
+    val smallKeys = sample.map(_.filter(_ != null))
+    deletePlanned(spark, table, base, Nil,
+      keyHits(base.files, base.schemaChanges, cols, smallKeys, distinctKeys),
+      KeyFile(distinctKeys, cols),
+      keyConflicts(base, cols, smallKeys, distinctKeys), tag)
+  }
+
+  // ---- the write planner -------------------------------------------------
+  //
+  // Every data-rewriting commit above is planned against the head it
+  // read (`base`) as one [[Plan]] and committed by [[commitPlan]]: a
+  // selector names the files an op touches (every file or the small
+  // ones for the compactions; stats triage, a predicate scan over
+  // `__file`, or key candidates for deletes and merges), the op turns
+  // them into staged files and row counts, and the one commit tail
+  // builds the manifest, carries disjoint mid-flight appends and runs
+  // the replay-tag check.
+
+  /** One data-rewriting commit against `base`: `removed` leave the
+    * manifest, `staged` join it (stamped with the commit's version),
+    * `deadRows` leave and `addedRows` join the row count, and a new
+    * [[RangeDelete]]/[[EqDelete]] (its `seq` stamped at commit) lands
+    * beside `base`'s pending entries — or, with `foldPending`, every
+    * pending delete and schema change folds away (the rewrite covered
+    * every file). `conflicts` is the test an interleaved append must
+    * fail to be carried forward ([[carriableAppends]]); `op` names the
+    * operation in the abort; `tag` is the replay token. */
+  private final case class Plan(
+      base: Manifest, action: String, op: String,
+      removed: Seq[FileEntry], staged: Seq[FileEntry],
+      deadRows: Long, addedRows: Long,
+      conflicts: Seq[FileEntry] => Boolean,
+      rangeDelete: Option[RangeDelete] = None,
+      eqDelete: Option[EqDelete] = None,
+      foldPending: Boolean = false,
+      tag: Option[String] = None,
+      branch: String = "main")
+
+  /** Commit `p` on `p.branch`, revalidating against whatever the head
+    * became: only pure appends `p.conflicts` clears may have landed
+    * since `p.base` (they carry forward by reference); anything else
+    * aborts loudly. Returns the committed version, or the version of
+    * an earlier commit carrying `p.tag`. */
+  private def commitPlan(spark: SparkSession, table: String,
+                         p: Plan): Long = {
+    val gone = p.removed.map(_.path).toSet
+    val kept = p.base.files.filterNot(f => gone.contains(f.path))
+    commitRetryingOn(spark, table, p.branch) { (parent, v) =>
+      p.tag.flatMap(t => findTag(spark, table, t)).foreach { v =>
+        throw new DuplicateTag(v) } // raced replayer landed it first
+      val carried = carriableAppends(spark, table, p.base, parent,
+        p.conflicts).getOrElse(throw new IllegalStateException(
+          s"table advanced v${p.base.version} -> v${parent.version} " +
+            s"during ${p.op} with a CONFLICTING commit (a rewrite/" +
+            "delete/schema change, or an append the rewrite's rows " +
+            s"could overlap); rerun ${p.op} against the new snapshot"))
+      val fresh = p.staged.map(_.copy(seq = v))
+      def pending[A](entries: Seq[A], added: Option[A]): Seq[A] =
+        if (p.foldPending) Nil else entries ++ added
+      Manifest(v, parent.version, p.action,
+        parent.rows - p.deadRows + p.addedRows,
+        // a compaction lists its rewrite before the carried appends
+        if (p.action == "compact") kept ++ fresh ++ carried
+        else kept ++ carried ++ fresh,
+        p.tag.getOrElse(""),
+        rangeDeletes = pending(p.base.rangeDeletes,
+          p.rangeDelete.map(_.copy(seq = v))),
+        eqDeletes = pending(p.base.eqDeletes, p.eqDelete.map(_.copy(seq = v))),
+        schemaChanges = pending(p.base.schemaChanges, None))
     }.merge
+  }
+
+  /** How a delete disposes of the files its selector hit. */
+  private sealed trait DeleteMode
+  /** Copy-on-write: rewrite each hit file through the null-safe keep
+    * filter `NOT coalesce(cond, false)` (NULL never deletes). */
+  private final case class Rewrite(cond: Column) extends DeleteMode
+  /** Merge-on-read: a [[RangeDelete]] residual over the hit files. */
+  private final case class Residual(column: String, lower: Any,
+                                    upper: Any) extends DeleteMode
+  /** Merge-on-read: one equality-delete file of `keys` over `cols`. */
+  private final case class KeyFile(keys: DataFrame, cols: Seq[String])
+      extends DeleteMode
+
+  /** The one delete planner. `dropped` — files the selector proved
+    * wholly inside the delete — leave the manifest outright, counted
+    * off their footers when no pending delete applies (a metadata
+    * read, no data scan); `hit` — files that may hold a match — go
+    * through `mode`. Returns `base.version` when nothing matches
+    * (nothing commits), else the version [[commitPlan]] commits with
+    * `conflicts` as the mid-flight append test. */
+  private def deletePlanned(spark: SparkSession, table: String,
+                            base: Manifest, dropped: Seq[FileEntry],
+                            hit: Seq[FileEntry], mode: DeleteMode,
+                            conflicts: Seq[FileEntry] => Boolean,
+                            tag: Option[String] = None): Long = {
+    if (dropped.isEmpty && hit.isEmpty) return base.version
+    val plan = mode match {
+      case Rewrite(cond) =>
+        val keep = !coalesce(cond, lit(false))
+        val (staged, hitRows, keptRows) =
+          if (hit.isEmpty) (Nil, 0L, 0L)
+          else {
+            val src = readLive(spark, table, base, hit)
+            // ONE pass answers both accounting counts (kept and
+            // total); the keep filter is never null, so the
+            // conditional count is exact
+            val c = src.agg(count(lit(1)), count(when(keep, lit(1)))).head()
+            (if (c.getLong(1) == 0L) Nil // every row deleted: stage nothing
+             else stageRewrite(spark, table, base, src.filter(keep))._1,
+             c.getLong(0), c.getLong(1))
+          }
+        Plan(base, "delete", "delete", dropped ++ hit, staged,
+          liveCount(spark, table, base, dropped) + hitRows, keptRows,
+          conflicts)
+      case Residual(column, lower, upper) =>
+        val typ = base.files
+          .flatMap(f => fileStats(f, column, base.schemaChanges))
+          .headOption.map(_.typ).getOrElse {
+            val field = readFiles(spark, table, base.files).schema
+              .find(_.name == column).getOrElse(throw new
+                IllegalArgumentException(s"no column '$column' in $table"))
+            statTyp(field.dataType).getOrElse(throw new
+              IllegalArgumentException(
+                s"range delete unsupported for '$column': ${field.dataType}"))
+          }
+        val deadDropped = liveCount(spark, table, base, dropped)
+        val deadHit =
+          if (hit.isEmpty) 0L
+          else readLive(spark, table, base, hit).filter(coalesce(
+            col(column) >= lit(lower) && col(column) <= lit(upper),
+            lit(false))).count()
+        if (deadDropped + deadHit == 0L && dropped.isEmpty)
+          return base.version // nothing matches: no-op, nothing committed
+        Plan(base, "delete-mor", "delete", dropped, Nil,
+          deadDropped + deadHit, 0L, conflicts,
+          // a hit that matched nothing was a stats over-approximation:
+          // no residual
+          rangeDelete =
+            if (deadHit == 0L) None
+            else Some(RangeDelete(column, reprOf(typ, lower),
+              reprOf(typ, upper), typ, 0L)))
+      case KeyFile(keys, cols) =>
+        val dead = readLive(spark, table, base, hit)
+          .select(cols.map(col): _*).join(keys, cols, "left_semi").count()
+        if (dead == 0L) return base.version
+        val d = writeEqDelete(spark, table, keys, cols)
+        // key count off the just-written footers — a metadata read,
+        // not another Spark job re-running the distinct
+        Plan(base, "delete-mor", "delete", Nil, Nil, dead, 0L, conflicts,
+          eqDelete = Some(d.copy(rows = footerRowsUnder(spark,
+            s"$table/${d.dir}"))), tag = tag)
+    }
+    commitPlan(spark, table, plan)
+  }
+
+  /** Stage `df` under `layout`, then read footer stats over
+    * `statsCols`, then build Blooms over `bloomCols` — every write's
+    * staging. Returns the entries and their footer row count. */
+  private def stageWrite(spark: SparkSession, table: String, df: DataFrame,
+                         layout: Seq[String], statsCols: Seq[String],
+                         bloomCols: Seq[String]): (Seq[FileEntry], Long) = {
+    val (entries, rows) = withStatsAndRows(spark, table,
+      stage(spark, df, table, layout, bloomCols), statsCols)
+    (withBlooms(spark, table, entries, bloomCols), rows)
+  }
+
+  /** [[stageWrite]] for a rewrite of `base`'s rows: the new files keep
+    * the table's declared layout and whatever stats and Bloom coverage
+    * it tracks under the current schema. */
+  private def stageRewrite(spark: SparkSession, table: String,
+                           base: Manifest,
+                           df: DataFrame): (Seq[FileEntry], Long) =
+    stageWrite(spark, table, df, declaredLayout(base),
+      currentStatsColsOf(base), currentBloomColsOf(base))
+
+  /** Write `keys` as an equality-delete file under `deletes/<uuid>` —
+    * unpublished until the manifest CAS references it, as in [[stage]]
+    * — and seed the schema cache as [[stage]] does. The entry's `rows`
+    * is left to the caller (each knows its key count without a job)
+    * and its `seq` to [[commitPlan]]. */
+  private def writeEqDelete(spark: SparkSession, table: String,
+                            keys: DataFrame, cols: Seq[String]): EqDelete = {
+    val rel = s"deletes/${java.util.UUID.randomUUID()}"
+    keys.write.mode("errorifexists")
+      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .parquet(s"$table/$rel")
+    stagedSchemaCache.put(s"$table/$rel", keys.schema)
+    var bytes = 0L
+    val it = hadoopFs(spark, table)
+      .listFiles(new org.apache.hadoop.fs.Path(s"$table/$rel"), true)
+    while (it.hasNext) bytes += it.next().getLen
+    EqDelete(rel, bytes, -1L, cols, 0L)
+  }
+
+  /** Live rows of `files` under `m`: [[liveRowsFromMeta]]'s footer
+    * arithmetic when provable, else one count over exactly them. */
+  private def liveCount(spark: SparkSession, table: String, m: Manifest,
+                        files: Seq[FileEntry]): Long =
+    if (files.isEmpty) 0L
+    else liveRowsFromMeta(m, files).getOrElse(
+      readLive(spark, table, m, files).count())
+
+  /** The key selector: the files of `files` that may hold one of the
+    * keys — driver arithmetic over a collected non-null key set
+    * (`small`), else the distributed prune over `keys`. */
+  private def keyHits(files: Seq[FileEntry], changes: Seq[SchemaChange],
+                      cols: Seq[String], small: Option[Array[Any]],
+                      keys: DataFrame): Seq[FileEntry] = small match {
+    case Some(vs) => keyCandidatesVals(files, changes, cols.head, vs)
+    case None => keyCandidatesIn(files, changes, keys, cols)
+  }
+
+  /** The key ops' mid-flight conflict test: an interleaved append
+    * conflicts iff it might contain one of the keys (its rows would
+    * dodge the upsert or delete). */
+  private def keyConflicts(base: Manifest, cols: Seq[String],
+                           small: Option[Array[Any]],
+                           keys: DataFrame): Seq[FileEntry] => Boolean =
+    appended =>
+      keyHits(appended, base.schemaChanges, cols, small, keys).nonEmpty
+
+  /** The files of `files` that `hits` — a frame carrying `__file` —
+    * names: one distinct-path collect, bounded by the file count. */
+  private def hitFiles(files: Seq[FileEntry],
+                       hits: DataFrame): Seq[FileEntry] = {
+    val named = byEntryPath(files,
+      hits.select("__file").distinct().collect().map(_.getString(0)))
+    files.filter(f => named.contains(f.path))
+  }
+
+  /** Resolve absolute `_metadata.file_path` values to the
+    * table-relative paths of the `files` they name (entry path ->
+    * value). The entries are indexed once and each value probes one
+    * suffix per entry depth: O(values × depths), where matching every
+    * (entry, value) pair by `endsWith` is O(files × values). */
+  private def byEntryPath(files: Seq[FileEntry],
+                          abs: Iterable[String]): Map[String, String] = {
+    val paths = files.iterator.map(_.path).toSet
+    val depths = files.iterator.map(_.path.count(_ == '/') + 1).toSet
+    abs.iterator.flatMap { a =>
+      val segs = a.split('/')
+      depths.iterator.filter(_ < segs.length)
+        .map(d => segs.takeRight(d).mkString("/")).find(paths).map(_ -> a)
+    }.toMap
   }
 
   // ---- metadata tables ---------------------------------------------------
@@ -1137,9 +1109,7 @@ object Snapshot {
     * column: old files' data stays under `to`. */
   def renameColumn(spark: SparkSession, table: String,
                    from: String, to: String): Long = {
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
+    val base = writeBase(spark, table)
     require(from != to, "rename to the same name is a no-op")
     require(!isPartitionColumn(base, from),
       s"'$from' is a partition column — its name is the directory " +
@@ -1171,9 +1141,7 @@ object Snapshot {
                   column: String, toTyp: String): Long = {
     require(toTyp == "long" || toTyp == "double",
       s"widen target must be 'long' or 'double', got '$toTyp'")
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
+    val base = writeBase(spark, table)
     require(!isPartitionColumn(base, column),
       s"'$column' is a partition column — its values live in the " +
         "directory layout; rewrite via compact instead")
@@ -1208,9 +1176,7 @@ object Snapshot {
     * Partition columns cannot drop (directory layout). */
   def dropColumn(spark: SparkSession, table: String,
                  column: String): Long = {
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
+    val base = writeBase(spark, table)
     require(!isPartitionColumn(base, column),
       s"'$column' is a partition column — rewrite via compact instead")
     require(!base.eqDeletes.exists(_.cols.contains(column)) &&
@@ -1251,9 +1217,7 @@ object Snapshot {
     * directory-count sanity (the [[appendPartitioned]] contract). */
   def repartitionTable(spark: SparkSession, table: String,
                        partitionCols: Seq[String]): Long = {
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
+    val base = writeBase(spark, table)
     if (declaredLayout(base) == partitionCols) return base.version
     val cur = readLive(spark, table, base, base.files).columns.toSeq
     partitionCols.foreach(c => require(cur.contains(c),
@@ -1285,9 +1249,7 @@ object Snapshot {
     * keys is required. */
   def deleteWhereMor(spark: SparkSession, table: String, cond: Column,
                      keyCol: String): Long = {
-    val base = currentManifest(spark, table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(base.files.nonEmpty, s"empty table $table")
+    val base = writeBase(spark, table)
     val matches = readLive(spark, table, base, base.files)
       .filter(coalesce(cond, lit(false)))
     val nullKeyMatches = matches.filter(col(keyCol).isNull).count()
@@ -1402,8 +1364,8 @@ object Snapshot {
       throw new NoSuchElementException(
         s"no snapshot v$sinceVersion in $table (expired or never " +
           "committed)"))
-    val cur = currentManifest(spark, table).getOrElse(
-      throw new NoSuchElementException(s"no committed snapshot in $table"))
+    val cur = headOrFail(spark, table,
+      missing = new NoSuchElementException(_))
     // lineage walk (see readChangesBetween): version-range arithmetic
     // would mix branch lineages once refs exist
     val chain = scala.collection.mutable.ArrayBuffer.empty[Manifest]
@@ -1467,8 +1429,8 @@ object Snapshot {
     * churn. */
   def readChangesSince(spark: SparkSession, table: String,
                        sinceVersion: Long): DataFrame = {
-    val cur = currentManifest(spark, table).getOrElse(
-      throw new NoSuchElementException(s"no committed snapshot in $table"))
+    val cur = headOrFail(spark, table,
+      missing = new NoSuchElementException(_))
     readChangesBetween(spark, table, sinceVersion, cur.version)
   }
 
@@ -1827,8 +1789,8 @@ object Snapshot {
       .map(s => new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(s).path("version").asLong(0L))
       .getOrElse(0L)
-    val cur = currentManifest(spark, table).getOrElse(
-      throw new NoSuchElementException(s"no committed snapshot in $table"))
+    val cur = headOrFail(spark, table,
+      missing = new NoSuchElementException(_))
     if (cur.version <= since) return None
     val changes =
       if (since == 0L) read(spark, table, Some(cur.version))
@@ -1838,20 +1800,6 @@ object Snapshot {
     SidecarIo.writeStringAtomic(spark, statePath,
       s"""{"version":${cur.version}}""")
     Some((since, cur.version))
-  }
-
-  /** [[readFilesWithPath]] carrying EVERY table column (for predicate
-    * scans whose referenced columns aren't statically known). */
-  private def readFilesAllWithPath(spark: SparkSession, table: String,
-                                   files: Seq[FileEntry]): DataFrame = {
-    val byCommit = files.groupBy(f =>
-      f.path.split('/').take(2).mkString("/")).toSeq.sortBy(_._1)
-    byCommit.map { case (root, fs) =>
-      val df = readStaged(spark, s"$table/$root",
-        stageDirPath(table, fs))
-      df.select(col("_metadata.file_path").as("__file") +:
-        df.columns.toSeq.map(col): _*)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   // ---- read paths ------------------------------------------------------
@@ -2046,8 +1994,8 @@ object Snapshot {
     case Some(v) => readManifest(spark, table, v).getOrElse(
       throw new NoSuchElementException(s"no snapshot v$v in $table " +
         "(expired or never committed)"))
-    case None => currentManifest(spark, table).getOrElse(
-      throw new NoSuchElementException(s"no committed snapshot in $table"))
+    case None => headOrFail(spark, table,
+      missing = new NoSuchElementException(_))
   }
 
   /** The stats of `column` in file `f` — keyed by the name the file
@@ -2258,22 +2206,6 @@ object Snapshot {
     }
   }
 
-  /** Plan a frame over an explicit manifest file list. Partitioned
-    * layouts ([[appendPartitioned]]) need one `basePath` per COMMIT
-    * (Spark's partition discovery refuses multiple roots under a
-    * single basePath), so files group by their `data/<uuid>` staging
-    * root, each group reads with its own basePath (partition columns
-    * parse from the k=v dirs, pruning binds per group), and groups
-    * union. Commit-count is bounded by compaction cadence — a
-    * compacted snapshot is ONE group.
-    *
-    * The union allows MISSING columns (ADDITIVE schema evolution: a
-    * commit may introduce new columns; rows from earlier commits read
-    * them as null — the Iceberg add-column semantic). The one-layout
-    * rule (same partition columns on every commit, or none) is
-    * enforced LOUDLY at append time, where the writer can fix it —
-    * with permissive unions a read-side mismatch would otherwise
-    * null-fill silently. */
   /** Driver-side schema cache for IMMUTABLE parquet directories (a
     * commit's `data/<uuid>` staging root and `deletes/<uuid>` key
     * dirs are written ONCE, `errorifexists`, and never change): the
@@ -2304,6 +2236,22 @@ object Snapshot {
     }
   }
 
+  /** Plan a frame over an explicit manifest file list. Partitioned
+    * layouts ([[appendPartitioned]]) need one `basePath` per COMMIT
+    * (Spark's partition discovery refuses multiple roots under a
+    * single basePath), so files group by their `data/<uuid>` staging
+    * root, each group reads with its own basePath (partition columns
+    * parse from the k=v dirs, pruning binds per group), and groups
+    * union. Commit-count is bounded by compaction cadence — a
+    * compacted snapshot is ONE group.
+    *
+    * The union allows MISSING columns (ADDITIVE schema evolution: a
+    * commit may introduce new columns; rows from earlier commits read
+    * them as null — the Iceberg add-column semantic). The one-layout
+    * rule (same partition columns on every commit, or none) is
+    * enforced LOUDLY at append time, where the writer can fix it —
+    * with permissive unions a read-side mismatch would otherwise
+    * null-fill silently. */
   private def readFiles(spark: SparkSession, table: String,
                         files: Seq[FileEntry]): DataFrame = {
     val byCommit = files.groupBy(f =>
@@ -2328,21 +2276,22 @@ object Snapshot {
         "— repartitionTable to change the layout")
   }
 
-  /** [[readFiles]] narrowed to `cols` plus the provenance column
-    * `__file` (the absolute file path). `_metadata` only resolves on a
-    * bare file relation — it must be projected per commit group BEFORE
-    * the union, so this cannot be spelled as a select on
-    * [[readFiles]]'s result. */
+  /** [[readFiles]] narrowed to `cols` (None: every column, for
+    * predicate scans whose referenced columns aren't statically known)
+    * plus the provenance column `__file` (the absolute file path).
+    * `_metadata` only resolves on a bare file relation — it must be
+    * projected per commit group BEFORE the union, so this cannot be
+    * spelled as a select on [[readFiles]]'s result. */
   private def readFilesWithPath(spark: SparkSession, table: String,
                                 files: Seq[FileEntry],
-                                cols: Seq[String]): DataFrame = {
+                                cols: Option[Seq[String]]): DataFrame = {
     val byCommit = files.groupBy(f =>
       f.path.split('/').take(2).mkString("/")).toSeq.sortBy(_._1)
     byCommit.map { case (root, fs) =>
-      readStaged(spark, s"$table/$root", stageDirPath(table, fs))
-        .select(col("_metadata.file_path").as("__file") +:
-          cols.map(col): _*)
-    }.reduce(_ unionByName _)
+      val df = readStaged(spark, s"$table/$root", stageDirPath(table, fs))
+      df.select(col("_metadata.file_path").as("__file") +:
+        cols.getOrElse(df.columns.toSeq).map(col): _*)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** All committed versions, oldest first: (version, action, files,
@@ -2486,9 +2435,7 @@ object Snapshot {
     while (attempt < MaxRetries) {
       val cur = refsOf(spark, table)
       val mainHead = cur.flatMap(_.heads.get("main"))
-        .orElse(latestVersion(spark, table))
-        .getOrElse(throw new IllegalStateException(
-          s"no committed snapshot in $table to branch from"))
+        .getOrElse(headOrFail(spark, table).version)
       val target = at.getOrElse(mainHead)
       require(readManifest(spark, table, target).nonEmpty,
         s"no snapshot v$target in $table to branch from")
@@ -3042,19 +2989,6 @@ object Snapshot {
     if (conflicts(appended)) None else Some(appended)
   }
 
-  /** [[carriableAppends]] or the loud abort — the shared tail every
-    * rewrite commit's build closure calls first. */
-  private def carriedOrAbort(spark: SparkSession, table: String,
-                             base: Manifest, parent: Manifest, op: String,
-                             conflicts: Seq[FileEntry] => Boolean)
-      : Seq[FileEntry] =
-    carriableAppends(spark, table, base, parent, conflicts).getOrElse(
-      throw new IllegalStateException(
-        s"table advanced v${base.version} -> v${parent.version} during " +
-          s"$op with a CONFLICTING commit (a rewrite/delete/schema " +
-          "change, or an append the rewrite's rows could overlap); " +
-          s"rerun $op against the new snapshot"))
-
   /** Test seam: consumed (reset to no-op) and invoked once at the
     * start of a commit's CAS loop — SnapshotSpec injects a mid-flight
     * append here to exercise the conflict-scoped retry
@@ -3234,14 +3168,16 @@ object Snapshot {
 
   // ---- per-file column stats ---------------------------------------------
 
-  /** Gather per-file min/max for `statsCols` over freshly staged
-    * entries and attach them. No-op for empty `statsCols`.
-    * Unsupported column types are rejected loudly — silent stat-less
-    * columns would silently disable skipping. */
-  private def withStats(spark: SparkSession, table: String,
-                        entries: Seq[FileEntry],
-                        statsCols: Seq[String]): Seq[FileEntry] =
-    withStatsAndRows(spark, table, entries, statsCols)._1
+  /** Per-file bytes ceiling for the DRIVER-SIDE bloom build: below
+    * it, every staged file's column is read through parquet-hadoop on
+    * the driver (the same process that just read the footers) and
+    * hashed with the SAME XXH64 kernel Spark's `xxhash64` runs —
+    * zero Spark jobs for the micro-batch/fixture-sized commits where
+    * the job-launch overhead dwarfs the hashing. Above it (real
+    * at-scale files) the distributed aggregate below runs unchanged.
+    * `private[sources]` so the parity spec can force the Spark path
+    * and compare filters byte-for-byte. */
+  private[sources] var bloomDriverMaxBytes: Long = 8L << 20
 
   /** Attach per-file Bloom filters over `bloomCols` to freshly staged
     * entries — one narrow distributed aggregate per column over ONLY
@@ -3254,17 +3190,6 @@ object Snapshot {
     * [[ColStats]] (its typed repr is the probe's hash input). Files
     * with no stats on the column (all-null slices) get no filter and
     * are never pruned. */
-  /** Per-file bytes ceiling for the DRIVER-SIDE bloom build: below
-    * it, every staged file's column is read through parquet-hadoop on
-    * the driver (the same process that just read the footers) and
-    * hashed with the SAME XXH64 kernel Spark's `xxhash64` runs —
-    * zero Spark jobs for the micro-batch/fixture-sized commits where
-    * the job-launch overhead dwarfs the hashing. Above it (real
-    * at-scale files) the distributed aggregate below runs unchanged.
-    * `private[sources]` so the parity spec can force the Spark path
-    * and compare filters byte-for-byte. */
-  private[sources] var bloomDriverMaxBytes: Long = 8L << 20
-
   private def withBlooms(spark: SparkSession, table: String,
                          entries: Seq[FileEntry],
                          bloomCols: Seq[String]): Seq[FileEntry] = {
@@ -3285,7 +3210,7 @@ object Snapshot {
           else None
         val byFile: Seq[(String, Seq[Int])] =
           driverBuilt.getOrElse(
-          readFilesWithPath(spark, table, out, Seq(c))
+          readFilesWithPath(spark, table, out, Some(Seq(c)))
             .filter(col(c).isNotNull)
             .select(col("__file"),
               explode(array(FileBloom.positionExprs(xxhash64(
@@ -3294,11 +3219,13 @@ object Snapshot {
             .agg(collect_set(col("__pos")).as("ps"))
             .collect().toSeq
             .map(r => r.getString(0) -> r.getSeq[Int](1)))
+        val positions = byFile.toMap
+        val named = byEntryPath(out, positions.keys)
         out = out.map { e =>
           e.stats.get(c) match {
             case Some(st) =>
-              byFile.find(_._1.endsWith("/" + e.path))
-                .flatMap { case (_, ps) => FileBloom.fold(ps) } match {
+              named.get(e.path)
+                .flatMap(a => FileBloom.fold(positions(a))) match {
                 case Some(b) => e.copy(stats = e.stats
                   .updated(c, st.copy(bloom = b)))
                 case None => e // saturated: no filter beats a useless one
@@ -3418,7 +3345,7 @@ object Snapshot {
         }
       }
     })
-  } catch { case _: Throwable => None }
+  } catch { case NonFatal(_) => None }
 
   /** The Bloom coverage of an existing snapshot under the current
     * schema — the columns a rewrite ([[compact]], [[merge]]) must
@@ -3677,11 +3604,6 @@ object Snapshot {
     else Some(ColStats(mn, mx, typ, if (nullsKnown) nulls else -1L))
   }
 
-  /** The stats coverage of an existing snapshot — the columns a
-    * rewrite ([[compact]], [[merge]]) must keep tracking. */
-  private def statsColsOf(files: Seq[FileEntry]): Seq[String] =
-    files.flatMap(_.stats.keys).distinct.sorted
-
   /** The tracked stats columns of a manifest under the CURRENT
     * schema: each file's stat keys walked through the schema changes
     * that apply to it (renames follow, dropped columns leave the
@@ -3796,6 +3718,25 @@ object Snapshot {
                            branch: String): Option[Manifest] =
     headVersionOf(spark, table, branch).flatMap(v =>
       readManifest(spark, table, v))
+
+  /** `branch`'s head manifest, or the one failure for a table with no
+    * committed snapshot: `missing` builds it (reads raise
+    * NoSuchElementException, writes IllegalStateException). */
+  private def headOrFail(spark: SparkSession, table: String,
+                         branch: String = "main",
+                         missing: String => RuntimeException =
+                           new IllegalStateException(_)): Manifest =
+    headManifest(spark, table, branch).getOrElse(throw missing(
+      "no committed snapshot" +
+        (if (branch == "main") "" else s" on '$branch'") + s" in $table"))
+
+  /** The head a write works against: committed and non-empty. */
+  private def writeBase(spark: SparkSession, table: String,
+                        branch: String = "main"): Manifest = {
+    val base = headOrFail(spark, table, branch)
+    require(base.files.nonEmpty, s"empty table $table")
+    base
+  }
 
   /** The committed manifest at `v`, if retained — the user-facing
     * metadata surface (file accounting, stats inspection, wholesale-
