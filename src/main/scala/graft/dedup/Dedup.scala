@@ -121,11 +121,14 @@ object Dedup {
     * k-shingles. Output: (id_a, id_b, jaccard_sim), id_a < id_b,
     * jaccard_sim ≥ minJaccard.
     *
-    * Plan shape: shingle (map) → HashingTF (map) → MinHash signatures
-    * (map) → approxSimilarityJoin = posexplode over hash tables +
-    * equi-join on (table, band hash) + exact key-distance filter. The
-    * only shuffles are the banded join's — candidate-bounded, never
-    * |D|². numFeatures 2²⁰ keeps shingle collisions ~|shingles|/2²⁰. */
+    * Plan shape: shingle (map) → HashingTF (map) → the id-only LSH
+    * self-join ([[graft.ops.Pairs.lshJoin]]): MinHash values
+    * posexplode into (id, table, hash) rows, equi-join on
+    * (table, hash) with id_a < id_b, `distinct` id pairs, the sparse
+    * vectors join back for the exact Jaccard filter. The shuffles
+    * carry ids, hash values and, for the candidates only, the
+    * vectors — candidate-bounded, never |D|². numFeatures 2²⁰ keeps
+    * shingle collisions ~|shingles|/2²⁰. `idCol` must be unique. */
   def minhashNearDuplicates(docs: DataFrame, textCol: String = "text",
                             idCol: String = "doc_id", k: Int = 5,
                             minJaccard: Double = 0.7,
@@ -137,8 +140,8 @@ object Dedup {
       .filter(size(col("sh")) > 0)
     val tf = new HashingTF().setInputCol("sh").setOutputCol("features")
       .setNumFeatures(numFeatures).setBinary(true)
-    // localCheckpoint (NOT cache) serves BOTH sides of the self
-    // approxSimilarityJoin: the shingle+hash pass runs exactly once,
+    // localCheckpoint (NOT cache) serves BOTH sides of the LSH
+    // self-join: the shingle+hash pass runs exactly once,
     // and unlike cache() the blocks are (a) never registered in
     // CacheManager's canonicalized-plan map — so a later identical
     // plan over overwritten input can't be silently served stale
@@ -154,11 +157,8 @@ object Dedup {
     val vec = tf.transform(sh).localCheckpoint()
     val mh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
       .setNumHashTables(numHashTables).setSeed(seed)
-    val model = mh.fit(vec)
-    model.approxSimilarityJoin(vec, vec, 1.0 - minJaccard, "dist")
-      .filter(col("datasetA.id") < col("datasetB.id"))
-      .select(col("datasetA.id").as("id_a"),
-              col("datasetB.id").as("id_b"),
+    graft.ops.Pairs.lshJoin(mh.fit(vec), vec, None, 1.0 - minJaccard)
+      .select(col("id_a"), col("id_b"),
               (lit(1.0) - col("dist")).as("jaccard_sim"))
   }
 

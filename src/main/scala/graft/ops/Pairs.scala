@@ -1,7 +1,9 @@
 package graft.ops
 
+import org.apache.spark.ml.Model
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.ml.graft.LshBridge
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pair-enumeration primitives — the scale-critical core of every
@@ -101,11 +103,53 @@ object Pairs {
     val vec = tf.transform(base)
     val mh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
       .setNumHashTables(numHashTables).setSeed(seed)
-    val model = mh.fit(vec)
-    model.approxSimilarityJoin(vec, vec, 1.0 - minJaccard, "dist")
-      .filter(col("datasetA.id") < col("datasetB.id"))
-      .select(col("datasetA.id").as("id_a"),
-              col("datasetB.id").as("id_b"),
+    lshJoin(mh.fit(vec), vec, None, 1.0 - minJaccard)
+      .select(col("id_a"), col("id_b"),
               (lit(1.0) - col("dist")).as("jaccard_sim"))
+  }
+
+  /** The LSH similarity join, run on ids: the pairs whose hashes under
+    * `model` (a MinHash or bucketed-random-projection model) collide
+    * in at least one hash table and whose key distance (Jaccard for
+    * MinHash, Euclidean for bucketed random projection) is below
+    * `threshold` — MLlib's `LSHModel` join semantics, pair for pair and
+    * distance for distance. `a` and `b` carry an `id` column, unique
+    * per side, and the model's input vector column. `b = None` is the
+    * self-join: each unordered pair once, as id_a < id_b. Output:
+    * (id_a, id_b, dist).
+    *
+    * Plan: each side's hash values posexplode into narrow
+    * (id, table, hash) rows; the equi-join on (table, hash) and the
+    * `distinct` that folds pairs colliding in several tables move only
+    * those rows and the id pairs; the vectors join back once per side
+    * for the exact distance filter. (MLlib's own join carries each
+    * whole row — vector, hash array, every other column — through the
+    * band join and runs `distinct` over row pairs.) */
+  def lshJoin(model: Model[_], a: DataFrame, b: Option[DataFrame],
+              threshold: Double): DataFrame = {
+    val in = LshBridge.inputCol(model)
+    val hashValues = udf(LshBridge.hashValues(model))
+    // non-deterministic only to the optimizer: it keeps the threshold
+    // filter above the projection instead of pushing a second copy of
+    // the distance below it, so each pair's distance is computed once
+    val distance =
+      udf(LshBridge.keyDistance(model)).asNondeterministic()
+    def bands(df: DataFrame, id: String): DataFrame =
+      df.select(col("id").as(id),
+          posexplode(hashValues(col(in))).as(Seq("__table", "__hash")))
+    def vectors(df: DataFrame, id: String, v: String): DataFrame =
+      df.select(col("id").as(id), col(in).as(v))
+    val other = b.getOrElse(a)
+    val banded = bands(a, "id_a").join(bands(other, "id_b"),
+      Seq("__table", "__hash"))
+    val candidates = (if (b.isEmpty) banded.filter(col("id_a") < col("id_b"))
+                      else banded)
+      .select(col("id_a"), col("id_b")).distinct()
+    candidates
+      .join(vectors(a, "id_a", "__va"), "id_a")
+      .join(vectors(other, "id_b", "__vb"), "id_b")
+      .select(col("id_a"), col("id_b"),
+              distance(col("__va"), col("__vb")).as("dist"))
+      .filter(col("dist") < lit(threshold))
   }
 }

@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
   * and customer_segmentation_2.py (correlation validation of the twins
   * against random pairs).
   *
-  * The LSH pipeline is also the scalable near-duplicate-detection
-  * primitive reused by graft.dedup: at 100 TB the candidate-pair space is
-  * pruned by banding (equi-join on hash-table index + hash value) instead
-  * of an |U|² cross join.
+  * The LSH join ([[graft.ops.Pairs.lshJoin]]) is also the scalable
+  * near-duplicate-detection primitive of graft.dedup: at 100 TB the
+  * candidate-pair space is pruned by banding (equi-join on hash-table
+  * index + hash value, over user ids only) instead of an |U|² cross
+  * join, and the movie vectors meet only the candidate pairs.
   */
 object Segmentation {
 
@@ -30,8 +31,10 @@ object Segmentation {
 
   /** Top-`topK` most-similar user pairs by approximate Jaccard similarity
     * (customer_segmentation_1.py:22-39). CountVectorizer(binary) →
-    * MinHashLSH(numHashTables, seeded) → approxSimilarityJoin at
-    * 1−similarity threshold → dedup with userA < userB → top-k.
+    * MinHashLSH(numHashTables, seeded) → the LSH self-join at
+    * 1−similarity threshold ([[graft.ops.Pairs.lshJoin]]: banded on
+    * user ids, each pair once as userA < userB, the vectors joined
+    * back only for the Jaccard check) → top-k.
     *
     * Ties at the top-k boundary are broken by (userA, userB) so the
     * output set is deterministic (the reference's bare
@@ -43,22 +46,18 @@ object Segmentation {
     val cv = new CountVectorizer()
       .setInputCol("movies").setOutputCol("features").setBinary(true)
     // load-bearing: CountVectorizer.fit scans sets, then transform +
-    // both approxSimilarityJoin sides re-read it. localCheckpoint —
+    // both sides of the LSH join re-read it. localCheckpoint —
     // see Dedup.minhashNearDuplicates for the lifecycle contract
     // (eager, cleaner-reclaimed, no CacheManager registration).
-    val featured = cv.fit(sets).transform(sets).localCheckpoint()
+    val featured = cv.fit(sets).transform(sets)
+      .select(col("userId").as("id"), col("features")).localCheckpoint()
 
     val mh = new MinHashLSH()
       .setInputCol("features").setOutputCol("hashes")
       .setNumHashTables(numHashTables).setSeed(seed)
-    val model = mh.fit(featured)
-    val hashed = model.transform(featured)
-
-    model.approxSimilarityJoin(hashed, hashed, threshold, "JaccardDist")
-      .filter(col("datasetA.userId") < col("datasetB.userId"))
-      .select(col("datasetA.userId").as("userA"),
-              col("datasetB.userId").as("userB"),
-              (lit(1.0) - col("JaccardDist")).as("similarity"))
+    graft.ops.Pairs.lshJoin(mh.fit(featured), featured, None, threshold)
+      .select(col("id_a").as("userA"), col("id_b").as("userB"),
+              (lit(1.0) - col("dist")).as("similarity"))
       .orderBy(col("similarity").desc, col("userA"), col("userB"))
       .limit(topK)
   }

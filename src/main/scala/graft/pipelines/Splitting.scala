@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.ops.GlobalOrdinal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +15,18 @@ import org.apache.spark.sql.functions._
   *     the final validation/test                                 [:27-39]
   *
   * Deviations from the reference (idiomatic, same semantics):
-  *  - the "join a distinct key list to filter" steps use `left_semi`
-  *    joins — the key lists' columns are never needed, so the right side
-  *    never shuffles its payload (SURVEY §2.3 J2);
+  *  - the popular-filtered ratings are materialized once
+  *    (`localCheckpoint`): the three random splits and both fold-back
+  *    key sets read that one copy instead of each re-deriving the
+  *    per-movie counts and their filter;
+  *  - a fold-back key set is collected to the driver in one job
+  *    ([[graft.ops.GlobalOrdinal.collectUpTo]], at most `DriverRowCap`
+  *    keys) and applied as an `isin` / `NOT isin` filter, which leaves
+  *    every row in its split's partition; past the cap it stays a
+  *    distributed `left_semi` / `left_anti` join pair. Either way the
+  *    key lists' columns are never needed, so only keys move
+  *    (SURVEY §2.3 J2). `split` is therefore eager: the checkpoint
+  *    and the two key collects run when it is called;
   *  - no `coalesce(1)` on write — an anti-pattern at scale
   *    (splitting_data.py:48-50); callers choose their own layout.
   *
@@ -30,7 +40,13 @@ object Splitting {
                           test: DataFrame)
 
   def split(ratings: DataFrame, seed: Long = 42L,
-            minRatings: Long = 5L): Splits = {
+            minRatings: Long = 5L): Splits =
+    splitWith(ratings, seed, minRatings, GlobalOrdinal.DriverRowCap)
+
+  /** [[split]] with the fold-back keys' driver cap as a parameter, so
+    * tests can force the distributed join path (cap 0). */
+  private[pipelines] def splitWith(ratings: DataFrame, seed: Long,
+                                   minRatings: Long, keyCap: Long): Splits = {
     val cleaned = ratings.na.drop(Seq("userId", "movieId", "rating"))
 
     val popular = cleaned.groupBy(col("movieId"))
@@ -38,21 +54,28 @@ object Splitting {
       .filter(col("rating_count") >= lit(minRatings))
       .select(col("movieId"))
     val filtered = cleaned.join(popular, Seq("movieId"), "left_semi")
+      .localCheckpoint()
 
     val Array(train0, val0, test0) =
       filtered.randomSplit(Array(0.8, 0.1, 0.1), seed)
 
-    // The kept 60% is "everything not folded back" — expressed as an
-    // ANTI join against the fold-back keys: one broadcast of the key
-    // list serves both sides, instead of materializing the second
-    // randomSplit branch (the reference re-joins both branches,
-    // splitting_data.py:33-39; semi+anti over one branch is equivalent
-    // because the branches partition the key set — property-tested).
+    // The kept 60% is "everything not folded back" — the complement of
+    // the fold-back keys within the split, instead of materializing the
+    // second randomSplit branch (the reference re-joins both branches,
+    // splitting_data.py:33-39; keep/complement over one branch is
+    // equivalent because the branches partition the key set —
+    // property-tested).
     def foldBack(split: DataFrame): (DataFrame, DataFrame) = {
       val ids = split.select(col("movieId")).distinct()
       val Array(back, _) = ids.randomSplit(Array(0.4, 0.6), seed)
-      (split.join(back, Seq("movieId"), "left_semi"),
-       split.join(back, Seq("movieId"), "left_anti"))
+      GlobalOrdinal.collectUpTo(back, keyCap) match {
+        case Some(rows) =>
+          val isBack = col("movieId").isInCollection(rows.map(_.get(0)))
+          (split.filter(isBack), split.filter(!isBack))
+        case None =>
+          (split.join(back, Seq("movieId"), "left_semi"),
+           split.join(back, Seq("movieId"), "left_anti"))
+      }
     }
     val (valBack, valKeep)   = foldBack(val0)
     val (testBack, testKeep) = foldBack(test0)

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.ops.Pairs
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
@@ -81,8 +82,9 @@ object Similarity {
   }
 
   /** All pairs with cosine ≥ minCosine via random-hyperplane LSH:
-    * normalize → BucketedRandomProjectionLSH → banded candidate join →
-    * exact distance filter at radius √(2(1−t)). Output:
+    * normalize → BucketedRandomProjectionLSH → the id-only banded
+    * self-join ([[graft.ops.Pairs.lshJoin]]) → exact distance filter
+    * at radius √(2(1−t)). `idCol` must be unique. Output:
     * (id_a, id_b, cos), id_a < id_b. Zero-norm vectors are dropped
     * (cosine undefined). */
   def cosinePairsLsh(emb: DataFrame, vecCol: String = "embedding",
@@ -102,12 +104,9 @@ object Similarity {
       .setInputCol("v").setOutputCol("hashes")
       .setBucketLength(bucketLength).setNumHashTables(numHashTables)
       .setSeed(seed)
-    val model = brp.fit(unit)
     val radius = math.sqrt(2.0 * (1.0 - minCosine))
-    model.approxSimilarityJoin(unit, unit, radius, "dist")
-      .filter(col("datasetA.id") < col("datasetB.id"))
-      .select(col("datasetA.id").as("id_a"),
-              col("datasetB.id").as("id_b"),
+    Pairs.lshJoin(brp.fit(unit), unit, None, radius)
+      .select(col("id_a"), col("id_b"),
               (lit(1.0) - col("dist") * col("dist") / 2.0).as("cos"))
   }
 
@@ -266,10 +265,9 @@ object Similarity {
     val radius = math.sqrt(2.0 * (1.0 - minCosine))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    model.approxSimilarityJoin(q, c, radius, "dist")
-      .filter(col("datasetA.id") =!= col("datasetB.id"))
-      .select(col("datasetA.id").as("query_id"),
-              col("datasetB.id").as("neighbor_id"),
+    Pairs.lshJoin(model, q, Some(c), radius)
+      .filter(col("id_a") =!= col("id_b"))
+      .select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"),
               (lit(1.0) - col("dist") * col("dist") / 2.0).as("cos_raw"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= lit(k))

@@ -750,9 +750,6 @@ object Snapshot {
       case Some(v) => return v
       case None => ()
     }
-    val base = writeBase(spark, table)
-    val cols = keys.columns.toSeq
-    require(cols.nonEmpty, "empty key frame")
     val distinctKeys0 = keys.distinct()
     // a single-column key set at or under the probe cap collects ONCE
     // and replays as a LOCAL relation: candidate pruning and the
@@ -760,8 +757,20 @@ object Snapshot {
     // accounting scan's semi-join side and the delete-file write stop
     // re-evaluating (and re-shuffling) the caller's lineage, which
     // would otherwise run the distinct three times (probe, count, write)
-    val sample: Option[Array[Any]] =
-      if (cols.size == 1) smallKeySample(distinctKeys0) else None
+    deleteKeys(distinctKeys0, table, tag,
+      if (keys.columns.length == 1) smallKeySample(distinctKeys0) else None)
+  }
+
+  /** [[deleteKeysMor]] over DISTINCT `distinctKeys0`, with the
+    * [[smallKeySample]] of a single key column already taken (None
+    * past the probe cap or for a composite key). */
+  private def deleteKeys(distinctKeys0: DataFrame, table: String,
+                         tag: Option[String],
+                         sample: Option[Array[Any]]): Long = {
+    val spark = distinctKeys0.sparkSession
+    val base = writeBase(spark, table)
+    val cols = distinctKeys0.columns.toSeq
+    require(cols.nonEmpty, "empty key frame")
     val distinctKeys = sample match {
       case Some(vals) =>
         spark.createDataFrame(
@@ -1252,12 +1261,20 @@ object Snapshot {
     val base = writeBase(spark, table)
     val matches = readLive(spark, table, base, base.files)
       .filter(coalesce(cond, lit(false)))
-    val nullKeyMatches = matches.filter(col(keyCol).isNull).count()
-    require(nullKeyMatches == 0L,
-      s"$nullKeyMatches matching row(s) carry a NULL '$keyCol' — an " +
+    val keys = matches.select(col(keyCol)).distinct()
+    // the probe that collects the key set also shows a NULL key (the
+    // distinct keeps one); only past the probe cap does a NULL need a
+    // scan of its own
+    val sample = smallKeySample(keys)
+    val nullKey = sample match {
+      case Some(vs) => vs.contains(null)
+      case None => !matches.filter(col(keyCol).isNull).isEmpty
+    }
+    require(!nullKey,
+      s"matching row(s) carry a NULL '$keyCol' — an " +
         "equality delete cannot reach them; use deleteWhere " +
         "(copy-on-write) or a non-null key column")
-    deleteKeysMor(matches.select(col(keyCol)).distinct(), table)
+    deleteKeys(keys, table, None, sample)
   }
 
   /** The typed literal a stored stat/delete repr deserializes to —

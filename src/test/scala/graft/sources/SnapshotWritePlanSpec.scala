@@ -89,7 +89,7 @@ class SnapshotWritePlanSpec extends AnyFunSuite {
       _ -- Seq(42L, 250L), Expect(5, "delete", 2196L, 3, 0, 1)),
     ("deleteWhereMor",
       t => Snapshot.deleteWhereMor(bench, t, whereCond, "id"),
-      _ -- Seq(42L, 250L), Expect(8, "delete-mor", 2196L, 3, 0, 2)),
+      _ -- Seq(42L, 250L), Expect(6, "delete-mor", 2196L, 3, 0, 2)),
     ("deleteKeysMor",
       t => Snapshot.deleteKeysMor(rows(Seq(7L, 8L, 260L), doc)
         .select("id"), t),
