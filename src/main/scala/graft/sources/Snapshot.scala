@@ -163,7 +163,8 @@ object Snapshot {
     * set collects in one [[GlobalOrdinal.collectUpTo]] job and row
     * count, duplicate check, range envelope and Bloom probes are
     * driver arithmetic; above it the distributed aggregate spellings
-    * run unchanged. */
+    * run unchanged. Also the longest IN list [[readIn]] probes against
+    * per-file Bloom filters. */
   private val MaxProbeKeys = 10000
 
   // ---- commit paths ---------------------------------------------------
@@ -390,11 +391,12 @@ object Snapshot {
     * sorted on `clusterCols` when given; the manifest drops its
     * pending entries only when the selection covered every file.
     *
-    * Row-verified before anything commits: a whole-table selection
-    * against `base.rows` (driver arithmetic — [[liveRowsFromMeta]] is
-    * None under pending deletes and would cost a count job), a partial
-    * one against its footer rows when no pending delete applies, else
-    * one count bounded by the selection. */
+    * Row-verified before anything commits: a selection of every file
+    * (a small-file one included) against `base.rows` (driver
+    * arithmetic — [[liveRowsFromMeta]] is None under pending deletes
+    * and would cost a count job), a partial one against its footer rows
+    * when no pending delete applies, else one count bounded by the
+    * selection. */
   private def compactFiles(spark: SparkSession, table: String,
                            branch: String, clusterCols: Seq[String],
                            targetFileBytes: Long,
@@ -403,8 +405,8 @@ object Snapshot {
     val picked = small.fold(base.files) { case (bytes, _) =>
       base.files.filter(_.bytes < bytes) }
     if (small.exists(_._2 > picked.size)) return base.version
-    val expect =
-      if (small.isEmpty) base.rows else liveCount(spark, table, base, picked)
+    val whole = picked.size == base.files.size
+    val expect = if (whole) base.rows else liveCount(spark, table, base, picked)
     val nf = math.max(1L, (picked.map(_.bytes).sum + targetFileBytes - 1)
       / targetFileBytes).toInt
     // coalesce bounds files per WRITE, so each partition dir of a
@@ -424,8 +426,7 @@ object Snapshot {
     // (their files stay newer than every folded delete / schema
     // change, so a clean manifest is still exact for them)
     commitPlan(spark, table, Plan(base, "compact", op, picked, staged,
-      expect, rewritten, _ => false,
-      foldPending = picked.size == base.files.size, branch = branch))
+      expect, rewritten, _ => false, foldPending = whole, branch = branch))
   }
 
   /** MERGE (upsert) `source` into the table by `key`, COPY-ON-WRITE:
@@ -904,7 +905,9 @@ object Snapshot {
         val typ = base.files
           .flatMap(f => fileStats(f, column, base.schemaChanges))
           .headOption.map(_.typ).getOrElse {
-            val field = readFiles(spark, table, base.files).schema
+            // the live schema: a renamed column is absent from the
+            // files written before the rename
+            val field = emptyRead(spark, table, base).schema
               .find(_.name == column).getOrElse(throw new
                 IllegalArgumentException(s"no column '$column' in $table"))
             statTyp(field.dataType).getOrElse(throw new
@@ -1127,18 +1130,15 @@ object Snapshot {
     require(cur.contains(from), s"no column '$from' in $table " +
       cur.mkString("[", ", ", "]"))
     require(!cur.contains(to), s"column '$to' already exists in $table")
-    commitRetrying(spark, table) { (parent, v) =>
-      require(parent.version == base.version,
-        s"table advanced v${base.version} -> v${parent.version} during " +
-          "rename; rerun against the new snapshot")
-      Manifest(v, parent.version, "schema", base.rows, base.files,
-        rangeDeletes = base.rangeDeletes.map(d =>
+    commitMetadata(spark, table, base, "rename", "schema") { (m, v) =>
+      m.copy(
+        rangeDeletes = m.rangeDeletes.map(d =>
           if (d.column == from) d.copy(column = to) else d),
-        eqDeletes = base.eqDeletes.map(d =>
+        eqDeletes = m.eqDeletes.map(d =>
           d.copy(cols = d.cols.map(c => if (c == from) to else c))),
-        schemaChanges = base.schemaChanges :+
+        schemaChanges = m.schemaChanges :+
           SchemaChange("rename", from, to, "", v))
-    }.merge
+    }
   }
 
   /** WIDEN a column's type (`int→long` family → `"long"`,
@@ -1165,16 +1165,10 @@ object Snapshot {
     }
     require(ok, s"cannot widen ${field.dataType} to $toTyp — only " +
       "int-family to long and float-family to double are lossless")
-    commitRetrying(spark, table) { (parent, v) =>
-      require(parent.version == base.version,
-        s"table advanced v${base.version} -> v${parent.version} during " +
-          "widen; rerun against the new snapshot")
-      Manifest(v, parent.version, "schema", base.rows, base.files,
-        rangeDeletes = base.rangeDeletes,
-        eqDeletes = base.eqDeletes,
-        schemaChanges = base.schemaChanges :+
-          SchemaChange("widen", column, column, toTyp, v))
-    }.merge
+    commitMetadata(spark, table, base, "widen", "schema") { (m, v) =>
+      m.copy(schemaChanges = m.schemaChanges :+
+        SchemaChange("widen", column, column, toTyp, v))
+    }
   }
 
   /** DROP a column — metadata-only: reads of pre-drop files project
@@ -1196,16 +1190,10 @@ object Snapshot {
     require(cur.contains(column), s"no column '$column' in $table " +
       cur.mkString("[", ", ", "]"))
     require(cur.size > 1, s"cannot drop the only column of $table")
-    commitRetrying(spark, table) { (parent, v) =>
-      require(parent.version == base.version,
-        s"table advanced v${base.version} -> v${parent.version} during " +
-          "drop; rerun against the new snapshot")
-      Manifest(v, parent.version, "schema", base.rows, base.files,
-        rangeDeletes = base.rangeDeletes,
-        eqDeletes = base.eqDeletes,
-        schemaChanges = base.schemaChanges :+
-          SchemaChange("drop", column, "", "", v))
-    }.merge
+    commitMetadata(spark, table, base, "drop", "schema") { (m, v) =>
+      m.copy(schemaChanges = m.schemaChanges :+
+        SchemaChange("drop", column, "", "", v))
+    }
   }
 
   /** PARTITION EVOLUTION — change the table's partition layout as a
@@ -1231,17 +1219,24 @@ object Snapshot {
     val cur = readLive(spark, table, base, base.files).columns.toSeq
     partitionCols.foreach(c => require(cur.contains(c),
       s"no column '$c' in $table " + cur.mkString("[", ", ", "]")))
+    commitMetadata(spark, table, base, "repartition", "layout") {
+      (m, _) => m.copy(layout = Some(partitionCols)) }
+  }
+
+  /** A METADATA-ONLY commit on main: `base`'s rows, files and pending
+    * entries as version `v` under `action`, then `edit` applied. The
+    * change was validated against `base`, so a head that moved since
+    * aborts loudly (`op` names the change in the message). */
+  private def commitMetadata(spark: SparkSession, table: String,
+                             base: Manifest, op: String, action: String)
+                            (edit: (Manifest, Long) => Manifest): Long =
     commitRetrying(spark, table) { (parent, v) =>
       require(parent.version == base.version,
         s"table advanced v${base.version} -> v${parent.version} during " +
-          "repartition; rerun against the new snapshot")
-      Manifest(v, parent.version, "layout",
-        base.rows, base.files,
-        rangeDeletes = base.rangeDeletes, eqDeletes = base.eqDeletes,
-        schemaChanges = base.schemaChanges,
-        layout = Some(partitionCols))
+          s"$op; rerun against the new snapshot")
+      edit(base.copy(version = v, parent = parent.version, action = action,
+        tag = ""), v)
     }.merge
-  }
 
   /** Row-level DELETE BY PREDICATE, MERGE-ON-READ — the arbitrary-
     * condition face of [[deleteKeysMor]]: one schema-mapped scan
@@ -1315,56 +1310,68 @@ object Snapshot {
       if (i < 0) seqs.length else i
     }
     buckets.toSeq.sortBy(_._1).map { case (idx, fs) =>
-      var df = readFiles(spark, table, fs)
-      if (idx < seqs.length) {
-        val applicable = seqs.drop(idx).toSet
-        // schema changes FIRST (in commit order): delete entries are
-        // rekeyed to post-change names when the change commits
-        // ([[renameColumn]]), so the delete filters below always see
-        // the mapped frame
-        m.schemaChanges.filter(c => applicable.contains(c.seq))
-          .sortBy(_.seq).foreach { c =>
-            c.kind match {
-              case "rename" =>
-                if (df.columns.contains(c.from))
-                  df = df.withColumnRenamed(c.from, c.to)
-              case "widen" =>
-                if (df.columns.contains(c.from))
-                  df = df.withColumn(c.from, col(c.from).cast(
-                    if (c.typ == "double") DoubleType else LongType))
-              case "drop" =>
-                if (df.columns.contains(c.from)) df = df.drop(c.from)
-              case other => throw new IllegalStateException(
-                s"unknown schema change kind '$other' in manifest")
-            }
-          }
-        m.rangeDeletes.filter(d => applicable.contains(d.seq))
-          .foreach { d =>
-            // keep = outside the range, null, or NaN. This OR-of-
-            // comparisons spelling (rather than NOT coalesce(BETWEEN))
-            // is parquet-PUSHDOWN-friendly: row groups inside
-            // surviving files still skip. NaN keeps through `> hi`
-            // (Spark orders NaN above every double), null through the
-            // explicit isNull — same rows as the null-safe NOT-BETWEEN.
-            df = df.filter(
-              col(d.column) < reprToLit(d.typ, d.lo) ||
-                col(d.column) > reprToLit(d.typ, d.hi) ||
-                col(d.column).isNull)
-          }
-        m.eqDeletes.filter(d => applicable.contains(d.seq))
-          .groupBy(_.cols).toSeq.sortBy(_._1.mkString(","))
-          .foreach { case (cols, ds) =>
-            val keys = ds.map(d =>
-                readStaged(spark, s"$table/${d.dir}",
-                  Seq(s"$table/${d.dir}")))
-              .reduce(_ unionByName _)
-              .select(cols.map(col): _*).distinct()
-            df = df.join(keys, cols, "left_anti")
-          }
-      }
-      df
+      val applicable = seqs.drop(idx).toSet
+      // schema changes FIRST: delete entries are rekeyed to post-change
+      // names when the change commits ([[renameColumn]]), so the delete
+      // filters below always see the mapped frame
+      val mapped = mapSchema(readFiles(spark, table, fs),
+        m.schemaChanges.filter(c => applicable.contains(c.seq)))
+      // keep = outside the range, null, or NaN. This OR-of-comparisons
+      // spelling (rather than NOT coalesce(BETWEEN)) is parquet-
+      // PUSHDOWN-friendly: row groups inside surviving files still
+      // skip. NaN keeps through `> hi` (Spark orders NaN above every
+      // double), null through the explicit isNull — same rows as the
+      // null-safe NOT-BETWEEN.
+      val ranged = m.rangeDeletes.filter(d => applicable.contains(d.seq))
+        .foldLeft(mapped) { (df, d) =>
+          df.filter(col(d.column) < reprToLit(d.typ, d.lo) ||
+            col(d.column) > reprToLit(d.typ, d.hi) || col(d.column).isNull)
+        }
+      m.eqDeletes.filter(d => applicable.contains(d.seq))
+        .groupBy(_.cols).toSeq.sortBy(_._1.mkString(","))
+        .foldLeft(ranged) { case (df, (cols, ds)) =>
+          df.join(ds.map(d => eqDeleteKeys(spark, table, d))
+            .reduce(_ unionByName _).select(cols.map(col): _*).distinct(),
+            cols, "left_anti")
+        }
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
+
+  /** A frame written before `changes` in the shape after them: each
+    * change applied in commit order to a column the frame still has —
+    * rename (skipped when the target name already exists), widen (cast
+    * to long or double) or drop. An unknown kind fails loudly. The one
+    * schema mapping: [[readLive]] applies a file's pending changes, the
+    * CDC differ a delta's in-window ones. */
+  private def mapSchema(df: DataFrame,
+                        changes: Seq[SchemaChange]): DataFrame =
+    changes.sortBy(_.seq).foldLeft(df) { (d, c) =>
+      c.kind match {
+        case "rename" | "widen" | "drop" if !d.columns.contains(c.from) => d
+        case "rename" =>
+          if (d.columns.contains(c.to)) d else d.withColumnRenamed(c.from, c.to)
+        case "widen" => d.withColumn(c.from, col(c.from).cast(
+          if (c.typ == "double") DoubleType else LongType))
+        case "drop" => d.drop(c.from)
+        case other => throw new IllegalStateException(
+          s"unknown schema change kind '$other' in manifest")
+      }
+    }
+
+  /** An equality delete's key file. */
+  private def eqDeleteKeys(spark: SparkSession, table: String,
+                           d: EqDelete): DataFrame =
+    readStaged(spark, s"$table/${d.dir}", Seq(s"$table/${d.dir}"))
+
+  /** No rows, in the columns and types [[read]] answers at `m`: every
+    * file through its commit's schema mapping ([[readLive]] without the
+    * deletes, which cannot change the shape), the scan folded away
+    * under the false filter. Every pruned read that keeps no file
+    * answers this, so an empty answer has the live schema. */
+  private def emptyRead(spark: SparkSession, table: String,
+                        m: Manifest): DataFrame =
+    readLive(spark, table, m.copy(rangeDeletes = Nil, eqDeletes = Nil),
+      m.files).filter(lit(false))
 
   /** Incremental consumption: the rows appended AFTER `sinceVersion`,
     * read straight off the file-list DIFF of the two manifests — the
@@ -1377,37 +1384,46 @@ object Snapshot {
     * snapshot instead of silently double-reading rewritten rows. */
   def readAppendsSince(spark: SparkSession, table: String,
                        sinceVersion: Long): DataFrame = {
-    val from = readManifest(spark, table, sinceVersion).getOrElse(
-      throw new NoSuchElementException(
-        s"no snapshot v$sinceVersion in $table (expired or never " +
-          "committed)"))
+    val from = manifestAt(spark, table, Some(sinceVersion))
     val cur = headOrFail(spark, table,
       missing = new NoSuchElementException(_))
-    // lineage walk (see readChangesBetween): version-range arithmetic
-    // would mix branch lineages once refs exist
-    val chain = scala.collection.mutable.ArrayBuffer.empty[Manifest]
-    var walker: Option[Manifest] = Some(cur)
-    while (walker.exists(_.version > sinceVersion)) {
-      chain += walker.get
-      val pv = walker.get.parent
-      walker = if (pv == 0L) Some(Manifest(0L, -1L, "init", 0L, Nil))
-               else readManifest(spark, table, pv)
-    }
-    if (!walker.exists(_.version == sinceVersion))
+    // a lineage walk, not version-range arithmetic, which would mix
+    // branch lineages once refs exist
+    val (win, since) = windowOf(spark, table, cur, sinceVersion)
+    if (since.isEmpty)
       throw new IllegalStateException(
         s"v$sinceVersion is not an ancestor of the current head " +
           s"v${cur.version} in $table (expired, or another lineage); " +
           "re-baseline the consumer on the current snapshot")
-    chain.find(_.action != "append").foreach { m =>
+    win.find(_.action != "append").foreach { m =>
       throw new IllegalStateException(
         s"v${m.version} is a '${m.action}' — the interval " +
           s"($sinceVersion, ${cur.version}] is not append-only; " +
           "re-baseline the consumer on the current snapshot")
     }
-    val known = from.files.map(_.path).toSet
-    val fresh = cur.files.filterNot(f => known.contains(f.path))
-    if (fresh.isEmpty)
-      readFiles(spark, table, cur.files).filter(lit(false))
+    appendDiff(spark, table, from, cur)
+  }
+
+  /** The lineage window `(since, until]`: `until` and its ancestors
+    * newer than `since`, newest first, plus the manifest at `since`
+    * when the walk lands on it (None: a link expired, or `since` is on
+    * another lineage). */
+  private def windowOf(spark: SparkSession, table: String, until: Manifest,
+                       since: Long): (Seq[Manifest], Option[Manifest]) = {
+    val walk = lineage(spark, table, until).buffered
+    val win = Seq.newBuilder[Manifest]
+    while (walk.hasNext && walk.head.version > since) win += walk.next()
+    (win.result(), walk.nextOption().filter(_.version == since))
+  }
+
+  /** The rows an append-only window adds: the files of `until` that
+    * `since` lacks (the manifest file diff — no old-snapshot read), or
+    * [[emptyRead]] when there are none. */
+  private def appendDiff(spark: SparkSession, table: String,
+                         since: Manifest, until: Manifest): DataFrame = {
+    val known = since.files.map(_.path).toSet
+    val fresh = until.files.filterNot(f => known.contains(f.path))
+    if (fresh.isEmpty) emptyRead(spark, table, until)
     else readFiles(spark, table, fresh)
   }
 
@@ -1459,46 +1475,22 @@ object Snapshot {
   def readChangesBetween(spark: SparkSession, table: String,
                          sinceVersion: Long,
                          untilVersion: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{abs, count => fCount,
-      explode, first, least, lit => fLit, sequence, shiftright,
-      struct, sum => fSum, when}
+    import org.apache.spark.sql.functions.{abs, explode, first, least,
+      sequence, shiftright, struct}
     require(untilVersion >= sinceVersion,
       s"inverted interval: ($sinceVersion, $untilVersion]")
     val cur = manifestAt(spark, table, Some(untilVersion))
-    // the window is a LINEAGE, not a version range: walk parent
-    // pointers from `until` down to `since` (identical to the version
-    // range on a linear chain; with branch refs, version numbers are
-    // shared across lineages and range arithmetic would mix them)
-    val lineageBuf =
-      scala.collection.mutable.ArrayBuffer.empty[Manifest]
-    var walker: Option[Manifest] = Some(cur)
-    while (walker.exists(_.version > sinceVersion)) {
-      lineageBuf += walker.get
-      val pv = walker.get.parent
-      walker = if (pv == 0L) Some(Manifest(0L, -1L, "init", 0L, Nil))
-               else readManifest(spark, table, pv)
-    }
-    // walked exactly onto `since` = the chain is trustable; an
-    // expired link or a `since` on another lineage falls back to the
-    // endpoint multiset diff (always correct between two states)
-    val sinceManifest: Option[Manifest] =
-      walker.filter(_.version == sinceVersion)
-    val windowManifests = lineageBuf.reverse.toSeq
-    val lineageComplete = sinceManifest.nonEmpty
-    val appendOnly = lineageComplete &&
-      windowManifests.forall(_.action == "append")
-    if (appendOnly) {
-      // the file-diff fast path against the BOUNDED end: fresh files
-      // of `until` not in `since` (readAppendsSince spells the same
-      // diff against the current version only)
-      val from = sinceManifest.get
-      val known = from.files.map(_.path).toSet
-      val fresh = cur.files.filterNot(f => known.contains(f.path))
-      return (if (fresh.isEmpty)
-                readFiles(spark, table, cur.files).filter(lit(false))
-              else readFiles(spark, table, fresh))
-        .withColumn("_change", fLit("insert"))
-    }
+    // the window is a LINEAGE, not a version range (identical on a
+    // linear chain; with branch refs, version numbers are shared across
+    // lineages and range arithmetic would mix them). Walked exactly
+    // onto `since`, the chain is trustable; an expired link or a
+    // `since` on another lineage falls back to the endpoint multiset
+    // diff (always correct between two states)
+    val (newest, sinceManifest) = windowOf(spark, table, cur, sinceVersion)
+    val win = newest.reverse
+    if (sinceManifest.nonEmpty && win.forall(_.action == "append"))
+      return appendDiff(spark, table, sinceManifest.get, cur)
+        .withColumn("_change", lit("insert"))
     val after = read(spark, table, Some(cur.version))
     val cols = after.columns.toSeq
     // IN-WINDOW schema changes must map every delta frame (and, on
@@ -1512,32 +1504,15 @@ object Snapshot {
     // in the window (not just `until`'s pending list — a compaction
     // inside the window folds and clears it) and applied in commit
     // order, exactly as the read path does.
-    val winChanges = windowManifests.flatMap(_.schemaChanges)
-      .filter(c => c.seq > sinceVersion && c.seq <= cur.version)
-      .distinct.sortBy(_.seq)
+    val winChanges = win.flatMap(_.schemaChanges)
+      .filter(c => c.seq > sinceVersion && c.seq <= cur.version).distinct
     // conform a frame produced in the schema of `fromVersion` to the
     // until-schema: later in-window changes applied, added columns
     // null-filled, column order fixed
     def conform(df: DataFrame, fromVersion: Long): DataFrame = {
-      val mapped = winChanges.filter(_.seq > fromVersion)
-        .foldLeft(df) { (d, c) =>
-          c.kind match {
-            case "rename" =>
-              if (d.columns.contains(c.from) &&
-                  !d.columns.contains(c.to))
-                d.withColumnRenamed(c.from, c.to) else d
-            case "widen" =>
-              if (d.columns.contains(c.from))
-                d.withColumn(c.from, col(c.from).cast(
-                  if (c.typ == "double") DoubleType else LongType))
-              else d
-            case "drop" =>
-              if (d.columns.contains(c.from)) d.drop(c.from) else d
-            case _ => d
-          }
-        }
+      val mapped = mapSchema(df, winChanges.filter(_.seq > fromVersion))
       cols.foldLeft(mapped) { (d, c) =>
-        if (d.columns.contains(c)) d else d.withColumn(c, fLit(null))
+        if (d.columns.contains(c)) d else d.withColumn(c, lit(null))
       }.select(cols.map(col): _*)
     }
     val fp = graft.ops.Diff.rowFingerprint(cols)
@@ -1545,8 +1520,15 @@ object Snapshot {
     // pre-aggregated by fingerprint so the global combine sums counts
     def weighted(df: DataFrame, w: Int) = df
       .groupBy(fp.as("__fp"))
-      .agg((fCount(fLit(1)) * w).cast("long").as("__w"),
+      .agg((count(lit(1)) * w).cast("long").as("__w"),
         first(struct(cols.map(col): _*)).as("__row"))
+    // the one combine: weighted deltas (or already-netted segment
+    // frames — the same (__fp, __w, __row) shape) sum to the net
+    def combine(ws: Seq[DataFrame]): DataFrame =
+      ws.reduce(_ unionByName _)
+        .groupBy(col("__fp"))
+        .agg(sum(col("__w")).as("__w"), first(col("__row")).as("__row"))
+        .filter(col("__w") =!= 0L)
 
     // ==CHAIN-WALK DIFF (the at-scale path)==
     // Instead of fingerprinting BOTH endpoint snapshots (O(table) no
@@ -1555,89 +1537,64 @@ object Snapshot {
     // identity `until - since = Σ per-commit deltas` makes the union
     // of weighted deltas net to exactly the endpoint diff, and rows
     // inserted then deleted inside the window cancel in the combine:
-    //  - append: +fresh files (a file read, no old-snapshot scan);
     //  - compact: NOTHING — the rewrite is row-count-verified and
     //    value-preserving by construction, the whole point: a
     //    maintenance pass contributes zero diff work (the Iceberg v3
     //    row-lineage goal achieved from the manifest chain alone,
     //    with no lineage columns in the data);
-    //  - schema: nothing (metadata-only; conform handles rendering);
+    //  - schema / layout: nothing (metadata-only; conform handles
+    //    rendering);
     //  - delete-mor / merge-mor: ±only the files the new delete
     //    entries can AFFECT (stats/bloom-pruned exactly like the
     //    operation's own accounting scan) plus dropped/fresh files —
     //    unaffected files have identical live sets on both sides and
     //    are never read;
-    //  - CoW delete / merge / overwrite: ±only the files the commit
-    //    actually swapped (removed on the parent side, staged on the
-    //    child side); carried files are never read. overwrite
-    //    degenerates to the full table — honest, it replaced it.
+    //  - append / CoW delete / merge / overwrite: ±only the files the
+    //    commit swapped (removed on the parent side, staged on the
+    //    child side; an append removes none); carried files are never
+    //    read. overwrite degenerates to the full table — honest, it
+    //    replaced it.
     // Work scales with CHANGED rows (+ the pruning-kept superset),
     // not table size. Falls back to the endpoint diff when the chain
     // is incomplete or carries an unrecognized action.
-    val byV = windowManifests.map(m => m.version -> m).toMap
-    val versions: Seq[Long] = windowManifests.map(_.version)
-    val knownActions = Set("append", "compact", "schema", "layout",
-      "delete", "merge", "overwrite", "delete-mor", "merge-mor")
-    // each window manifest's parent is its lineage predecessor (the
-    // since manifest for the first)
-    val parentByV: Map[Long, Manifest] =
-      windowManifests.zip(sinceManifest.toSeq ++ windowManifests)
-        .map { case (m, par) => m.version -> par }.toMap
-    def parentOf(v: Long): Option[Manifest] = parentByV.get(v)
-    val chainComplete = lineageComplete &&
-      windowManifests.forall(m => knownActions.contains(m.action))
-    // plan-size guard: each delta-contributing commit adds a grouped
-    // subtree to the union; a consumer that fell months behind could
-    // otherwise hand Catalyst hundreds of them. Past the cap the
-    // window walks in SEGMENTS of <= MaxChainDeltas delta commits,
-    // each segment's net materialized before the next plans — still
-    // O(changed rows), never the two-full-scan endpoint diff.
-    val MaxChainDeltas = 24
-    val deltaCommits = versions.count(v => byV.get(v).exists(m =>
-      !Set("compact", "schema", "layout").contains(m.action)))
-    def deltasOf(vs: Seq[Long]): Seq[DataFrame] = vs.flatMap { v =>
-        val m = byV(v)
-        val parent = parentOf(v).get
-        val childPaths = m.files.map(_.path).toSet
-        val parentPaths = parent.files.map(_.path).toSet
-        m.action match {
-          case "compact" | "schema" | "layout" => Nil
-          case "append" =>
-            val fresh = m.files.filterNot(f =>
-              parentPaths.contains(f.path))
-            if (fresh.isEmpty) Nil
-            else Seq(weighted(
-              conform(readFiles(spark, table, fresh), v), 1))
-          case "delete-mor" | "merge-mor" =>
-            val dropped = parent.files.filterNot(f =>
-              childPaths.contains(f.path))
-            val newRanges = m.rangeDeletes.filter(_.seq == v)
-            val newEqs = m.eqDeletes.filter(_.seq == v)
-            val affected = (dropped ++
-              newRanges.flatMap(d =>
-                keptByRangeRepr(parent.files, d.column, d.lo, d.hi,
-                  parent.schemaChanges)) ++
-              newEqs.flatMap(d =>
-                keyCandidates(parent,
-                  readStaged(spark, s"$table/${d.dir}",
-                    Seq(s"$table/${d.dir}")).distinct(),
-                  d.cols))).distinctBy(_.path)
-            val fresh = m.files.filterNot(f =>
-              parentPaths.contains(f.path))
-            if (newRanges.size + newEqs.size == 1 && affected.forall(
-                  f => childPaths.contains(f.path) ||
-                    dropped.exists(_.path == f.path))) {
-              // ==KILLED-ROWS SHORTCUT== (the common shape: one MoR
-              // commit carries exactly ONE new delete entry): for a
-              // surviving affected file, child-live = parent-live −
-              // rows the new entry matches, so the ± sides cancel on
-              // everything EXCEPT the matched rows — emit ONLY those,
-              // weighted −1, off one pushdown-filtered read (a range
-              // predicate reaches the parquet scan; the old spelling
-              // read every affected row TWICE with no filter), plus
-              // the fresh files +1. Dropped files' rows all match by
-              // the wholesale-drop containment proof, so the filter
-              // spelling covers them too.
+    val inert = Set("compact", "schema", "layout")
+    val known = inert ++ Set("append", "delete", "merge", "overwrite",
+      "delete-mor", "merge-mor")
+    def side(files: Seq[FileEntry], under: Manifest,
+             w: Int): Seq[DataFrame] =
+      if (files.isEmpty) Nil
+      else Seq(weighted(conform(readLive(spark, table, under, files),
+        under.version), w))
+    // commit `m`'s own delta against its lineage predecessor `parent`
+    def deltas(m: Manifest, parent: Manifest): Seq[DataFrame] = {
+      val childPaths = m.files.map(_.path).toSet
+      val parentPaths = parent.files.map(_.path).toSet
+      val removed = parent.files.filterNot(f => childPaths.contains(f.path))
+      val added = m.files.filterNot(f => parentPaths.contains(f.path))
+      m.action match {
+        case a if inert(a) => Nil
+        case "delete-mor" | "merge-mor" =>
+          val newRanges = m.rangeDeletes.filter(_.seq == m.version)
+          val newEqs = m.eqDeletes.filter(_.seq == m.version)
+          val affected = (removed ++
+            newRanges.flatMap(d =>
+              keptByRangeRepr(parent.files, d.column, d.lo, d.hi,
+                parent.schemaChanges)) ++
+            newEqs.flatMap(d =>
+              keyCandidates(parent, eqDeleteKeys(spark, table, d).distinct(),
+                d.cols))).distinctBy(_.path)
+          if (newRanges.size + newEqs.size == 1) {
+            // ==KILLED-ROWS SHORTCUT== (the common shape: one MoR
+            // commit carries exactly ONE new delete entry): every
+            // affected file is a parent file, so for a surviving one
+            // child-live = parent-live − rows the new entry matches,
+            // and the ± sides cancel on everything EXCEPT the matched
+            // rows — emit ONLY those, weighted −1, off one pushdown-
+            // filtered read (a range predicate reaches the parquet
+            // scan), plus the fresh files +1. Dropped files' rows all
+            // match by the wholesale-drop containment proof, so the
+            // filter spelling covers them too.
+            (if (affected.isEmpty) Nil else {
               val live = readLive(spark, table, parent, affected)
               val killed = newRanges.headOption match {
                 case Some(d) =>
@@ -1645,109 +1602,68 @@ object Snapshot {
                     col(d.column) <= reprToLit(d.typ, d.hi))
                 case None =>
                   val d = newEqs.head
-                  live.join(
-                    readStaged(spark, s"$table/${d.dir}",
-                      Seq(s"$table/${d.dir}"))
-                      .select(d.cols.map(col): _*).distinct(),
+                  live.join(eqDeleteKeys(spark, table, d)
+                    .select(d.cols.map(col): _*).distinct(),
                     d.cols, "left_semi")
               }
-              (if (affected.isEmpty) Nil
-               else Seq(weighted(
-                 conform(killed, parent.version), -1))) ++
-              (if (fresh.isEmpty) Nil
-               else Seq(weighted(conform(
-                 readLive(spark, table, m, fresh), v), 1)))
-            } else {
-              // several new entries in one commit (no current writer
-              // does this): the general two-sided spelling
-              val survivors = affected.filter(f =>
-                childPaths.contains(f.path))
-              val plusSide = survivors ++ fresh
-              (if (affected.isEmpty) Nil
-               else Seq(weighted(conform(
-                 readLive(spark, table, parent, affected),
-                 parent.version), -1))) ++
-              (if (plusSide.isEmpty) Nil
-               else Seq(weighted(conform(
-                 readLive(spark, table, m, plusSide), v), 1)))
-            }
-          case _ => // delete | merge | overwrite: the swapped files
-            val removed = parent.files.filterNot(f =>
-              childPaths.contains(f.path))
-            val staged = m.files.filterNot(f =>
-              parentPaths.contains(f.path))
-            (if (removed.isEmpty) Nil
-             else Seq(weighted(conform(
-               readLive(spark, table, parent, removed),
-               parent.version), -1))) ++
-            (if (staged.isEmpty) Nil
-             else Seq(weighted(conform(
-               readLive(spark, table, m, staged), v), 1)))
-        }
+              Seq(weighted(conform(killed, parent.version), -1))
+            }) ++ side(added, m, 1)
+          } else {
+            // several new entries in one commit (no current writer
+            // does this): the general two-sided spelling
+            side(affected, parent, -1) ++
+              side(affected.filter(f => childPaths.contains(f.path)) ++
+                added, m, 1)
+          }
+        case _ => side(removed, parent, -1) ++ side(added, m, 1)
       }
-    // the shared final combine: weighted deltas (or already-netted
-    // segment frames — same (__fp, __w, __row) shape) sum to the net
-    def combined(ws: Seq[DataFrame]): DataFrame =
-      ws.reduce(_ unionByName _)
-        .groupBy(col("__fp"))
-        .agg(fSum(col("__w")).as("__delta"),
-          first(col("__row")).as("__row"))
-        .filter(col("__delta") =!= 0L)
+    }
     val emptyDiff = after.filter(lit(false))
-      .withColumn("_change", fLit("insert"))
+      .withColumn("_change", lit("insert"))
     val net =
-      if (!chainComplete) {
+      if (sinceManifest.isEmpty || !win.forall(m => known(m.action))) {
         // endpoint multiset diff: two full snapshot scans — the
         // honest lower bound when the chain cannot be trusted
         val before = conform(read(spark, table, Some(sinceVersion)),
           sinceVersion)
-        combined(Seq(weighted(before, -1), weighted(after, 1)))
-      } else if (deltaCommits <= MaxChainDeltas) {
-        val ws = deltasOf(versions)
-        if (ws.isEmpty) return emptyDiff
-        combined(ws)
+        combine(Seq(weighted(before, -1), weighted(after, 1)))
       } else {
-        // ==SEGMENTED chain walk== (a consumer that fell MONTHS
-        // behind): past the plan-size cap the window splits into
-        // consecutive segments of <= MaxChainDeltas delta commits;
-        // each segment's deltas combine and MATERIALIZE
-        // (localCheckpoint — the segment net is bounded by the
-        // segment's CHANGED rows, and the checkpoint truncates its
-        // grouped-union subtree out of the outer plan), then the
-        // materialized nets sum exactly like per-commit deltas (the
-        // multiset identity telescopes across segments; rows
-        // inserted in one segment and deleted in another still
-        // cancel in the outer combine). Work stays O(changed rows)
+        // plan-size guard: each delta-contributing commit adds a
+        // grouped subtree to the union; a consumer that fell months
+        // behind could otherwise hand Catalyst hundreds of them. The
+        // window walks in consecutive SEGMENTS of <= MaxChainDeltas
+        // delta commits (one segment, the common case, combines
+        // directly); past one, each segment's net MATERIALIZES
+        // (localCheckpoint — bounded by the segment's CHANGED rows,
+        // and the checkpoint truncates its grouped-union subtree out
+        // of the outer plan) before the next plans, then the nets sum
+        // exactly like per-commit deltas (the multiset identity
+        // telescopes across segments; rows inserted in one segment and
+        // deleted in another still cancel). Work stays O(changed rows)
         // for arbitrarily long windows; Catalyst only ever sees
         // MaxChainDeltas grouped subtrees at once. The checkpoint
-        // trades re-computability for bounded plans — a lost
-        // executor during the diff recomputes the READ (rerun the
-        // poll), it never corrupts it.
-        val segs = scala.collection.mutable.ArrayBuffer(
-          scala.collection.mutable.ArrayBuffer.empty[Long])
-        var cnt = 0
-        versions.foreach { v =>
-          val isDelta = !Set("compact", "schema", "layout")
-            .contains(byV(v).action)
-          if (isDelta && cnt == MaxChainDeltas) {
-            segs += scala.collection.mutable.ArrayBuffer.empty[Long]
-            cnt = 0
-          }
-          segs.last += v
-          if (isDelta) cnt += 1
+        // trades re-computability for bounded plans — a lost executor
+        // during the diff recomputes the READ (rerun the poll), it
+        // never corrupts it.
+        val MaxChainDeltas = 24
+        val steps = win.zip(sinceManifest.toSeq ++ win)
+        def deltaCount(seg: Seq[(Manifest, Manifest)]) =
+          seg.count(s => !inert(s._1.action))
+        val segs = steps.foldLeft(Vector.empty[Vector[(Manifest, Manifest)]]) {
+          (acc, step) =>
+            if (acc.nonEmpty && (inert(step._1.action) ||
+                deltaCount(acc.last) < MaxChainDeltas))
+              acc.init :+ (acc.last :+ step)
+            else acc :+ Vector(step)
         }
-        val segNets = segs.toSeq.flatMap { seg =>
-          val ws = deltasOf(seg.toSeq)
+        val nets = segs.flatMap { seg =>
+          val ws = seg.flatMap { case (m, parent) => deltas(m, parent) }
           if (ws.isEmpty) None
-          else Some(ws.reduce(_ unionByName _)
-            .groupBy(col("__fp"))
-            .agg(fSum(col("__w")).as("__w"),
-              first(col("__row")).as("__row"))
-            .filter(col("__w") =!= 0L)
-            .localCheckpoint())
+          else if (segs.size == 1) Some(combine(ws))
+          else Some(combine(ws).localCheckpoint())
         }
-        if (segNets.isEmpty) return emptyDiff
-        combined(segNets)
+        if (nets.isEmpty) return emptyDiff
+        if (segs.size == 1) nets.head else combine(nets)
       }
     // per-row copies via a TWO-LEVEL expansion: a single explode of
     // sequence(1, |delta|) materializes one |delta|-long array in one
@@ -1758,16 +1674,16 @@ object Snapshot {
     // the same way only above Chunk² ≈ 4.3e9 copies of ONE row).
     val Chunk = 65536L // 2^16: shiftright is the exact integer divide
     net
-      .select(col("__row"), col("__delta"),
-        explode(sequence(fLit(0L),
-          shiftright(abs(col("__delta")) - 1L, 16))).as("__c"))
-      .select(col("__row"), col("__delta"),
-        explode(sequence(fLit(1L),
-          least(fLit(Chunk),
-            abs(col("__delta")) - col("__c") * Chunk))).as("__k"))
+      .select(col("__row"), col("__w"),
+        explode(sequence(lit(0L),
+          shiftright(abs(col("__w")) - 1L, 16))).as("__c"))
+      .select(col("__row"), col("__w"),
+        explode(sequence(lit(1L),
+          least(lit(Chunk),
+            abs(col("__w")) - col("__c") * Chunk))).as("__k"))
       .select(cols.map(c => col("__row." + c)) :+
-        when(col("__delta") > 0L, fLit("insert"))
-          .otherwise(fLit("delete")).as("_change"): _*)
+        when(col("__w") > 0L, lit("insert"))
+          .otherwise(lit("delete")).as("_change"): _*)
   }
 
   /** A DURABLE incremental consumer — the polling loop every
@@ -1796,7 +1712,6 @@ object Snapshot {
   def consumeChanges(spark: SparkSession, table: String,
                      stateDir: String)
                     (handler: DataFrame => Unit): Option[(Long, Long)] = {
-    import org.apache.spark.sql.functions.{lit => fLit}
     // baseline state goes through Hadoop FS ([[SidecarIo]]): a
     // consumer whose stateDir is hdfs:// or s3a:// must find its
     // baseline there — the java.nio spelling reported it absent and
@@ -1811,7 +1726,7 @@ object Snapshot {
     if (cur.version <= since) return None
     val changes =
       if (since == 0L) read(spark, table, Some(cur.version))
-        .withColumn("_change", fLit("insert"))
+        .withColumn("_change", lit("insert"))
       else readChangesBetween(spark, table, since, cur.version)
     handler(changes)
     SidecarIo.writeStringAtomic(spark, statePath,
@@ -1825,11 +1740,22 @@ object Snapshot {
     * frame plans from the manifest's explicit file list — it IS the
     * pinned snapshot; later commits cannot change what it reads. */
   def read(spark: SparkSession, table: String,
-           version: Option[Long] = None): DataFrame = {
+           version: Option[Long] = None): DataFrame =
+    prunedRead(spark, table, version, _.files, None)
+
+  /** The one pruned read: resolve `version`'s manifest (non-empty),
+    * keep the files `select` admits, and read them live under the
+    * `residual` filter — or, when no file is kept, [[emptyRead]]. */
+  private def prunedRead(spark: SparkSession, table: String,
+                         version: Option[Long],
+                         select: Manifest => Seq[FileEntry],
+                         residual: Option[Column]): DataFrame = {
     val m = manifestAt(spark, table, version)
     if (m.files.isEmpty)
       throw new NoSuchElementException(s"snapshot v${m.version} is empty")
-    readLive(spark, table, m, m.files)
+    val kept = select(m)
+    if (kept.isEmpty) emptyRead(spark, table, m)
+    else residual.foldLeft(readLive(spark, table, m, kept))(_.filter(_))
   }
 
   /** A RANGE-SELECTIVE read (`lower ≤ column ≤ upper`, both bounds
@@ -1845,20 +1771,10 @@ object Snapshot {
     * `java.sql.Date`; `java.sql.Timestamp`/`Instant`). */
   def readWhere(spark: SparkSession, table: String, column: String,
                 lower: Any, upper: Any,
-                version: Option[Long] = None): DataFrame = {
-    val m = manifestAt(spark, table, version)
-    if (m.files.isEmpty)
-      throw new NoSuchElementException(s"snapshot v${m.version} is empty")
-    val kept = keptByRange(m.files, column, lower, upper,
-      m.schemaChanges)
-    val residual: Column =
-      col(column) >= lit(lower) && col(column) <= lit(upper)
-    if (kept.isEmpty)
-      // every file provably out of range: an empty frame with the
-      // table schema (Catalyst folds the scan away under filter-false)
-      readFiles(spark, table, m.files).filter(lit(false))
-    else readLive(spark, table, m, kept).filter(residual)
-  }
+                version: Option[Long] = None): DataFrame =
+    prunedRead(spark, table, version,
+      m => keptByRange(m.files, column, lower, upper, m.schemaChanges),
+      Some(col(column) >= lit(lower) && col(column) <= lit(upper)))
 
   /** TIME TRAVEL BY TIMESTAMP: the table as of wall-clock `tsMicros`
     * (epoch micros) — the latest committed version whose commit stamp
@@ -1900,16 +1816,9 @@ object Snapshot {
     * applies, and a filterless or saturated Bloom only keeps more
     * files, never drops a matching one. */
   def readEquals(spark: SparkSession, table: String, column: String,
-                 value: Any, version: Option[Long] = None): DataFrame = {
-    val m = manifestAt(spark, table, version)
-    if (m.files.isEmpty)
-      throw new NoSuchElementException(s"snapshot v${m.version} is empty")
-    val kept = keptByEquals(m.files, column, value, m.schemaChanges)
-    if (kept.isEmpty)
-      readFiles(spark, table, m.files).filter(lit(false))
-    else readLive(spark, table, m, kept)
-      .filter(col(column) === lit(value))
-  }
+                 value: Any, version: Option[Long] = None): DataFrame =
+    prunedRead(spark, table, version, keptByValues(_, column, Seq(value)),
+      Some(col(column) === lit(value)))
 
   /** An IN-LIST read (`column IN (values)`) with the same two-index
     * manifest pruning as [[readEquals]]: a file is planned iff at
@@ -1921,33 +1830,36 @@ object Snapshot {
              values: Seq[Any],
              version: Option[Long] = None): DataFrame = {
     require(values.nonEmpty, "empty IN list")
-    val m = manifestAt(spark, table, version)
-    if (m.files.isEmpty)
-      throw new NoSuchElementException(s"snapshot v${m.version} is empty")
-    // Per-value work is hoisted OUT of the per-file loop: reprs and
-    // Bloom hashes compute once per stat type (one table shares it),
-    // and each file's filter base64-decodes once — the values × files
-    // inner loop is comparisons and bit tests, never re-hashing (the
-    // keptByKeyBlooms discipline). Past the probe cap the Bloom layer
-    // is skipped (range pruning stands — a thousands-strong IN list
-    // hits most files anyway and the residual isin is always exact).
-    val MaxBloomProbeValues = 10000
+    prunedRead(spark, table, version, keptByValues(_, column, values),
+      Some(col(column).isin(values: _*)))
+  }
+
+  /** The files of `m` that may hold a row with `column` equal to one of
+    * `values`: some value inside the file's min/max AND, when the file
+    * has a Bloom filter and the list is within [[MaxProbeKeys]], one
+    * such value Bloom-possible (files without stats on the column
+    * keep). Per-value work is hoisted OUT of the per-file loop: reprs
+    * and Bloom hashes compute once per stat type (one table shares
+    * it), and each filter base64-decodes once — the values × files
+    * loop is comparisons and bit tests. Past the cap the Bloom layer is
+    * skipped: range pruning stands, a list that long hits most files
+    * anyway, and the caller's residual is always exact. */
+  private def keptByValues(m: Manifest, column: String,
+                           values: Seq[Any]): Seq[FileEntry] = {
     val reprCache =
       scala.collection.mutable.Map.empty[String, Array[String]]
     val hashCache =
       scala.collection.mutable.Map.empty[String, Array[Long]]
-    val kept = m.files.filter { f =>
+    m.files.filter { f =>
       fileStats(f, column, m.schemaChanges) match {
         case None => true
         case Some(s) =>
           val reprs = reprCache.getOrElseUpdate(s.typ,
             values.map(v => reprOf(s.typ, v)).toArray)
-          val admitted = reprs.indices.filter(i =>
-            cmp(s.typ, s.max, reprs(i)) >= 0 &&
-              cmp(s.typ, s.min, reprs(i)) <= 0)
+          val admitted =
+            reprs.indices.filter(i => admits(s, reprs(i), reprs(i)))
           if (admitted.isEmpty) false
-          else if (s.bloom.isEmpty ||
-              values.size > MaxBloomProbeValues) true
+          else if (s.bloom.isEmpty || values.size > MaxProbeKeys) true
           else {
             val hs = hashCache.getOrElseUpdate(s.typ,
               reprs.map(r => FileBloom.hashRepr(s.typ, r)))
@@ -1956,10 +1868,6 @@ object Snapshot {
           }
       }
     }
-    if (kept.isEmpty)
-      readFiles(spark, table, m.files).filter(lit(false))
-    else readLive(spark, table, m, kept)
-      .filter(col(column).isin(values: _*))
   }
 
   /** (files in the snapshot, files a [[readEquals]] would open) —
@@ -1968,8 +1876,7 @@ object Snapshot {
                        column: String, value: Any,
                        version: Option[Long] = None): (Int, Int) = {
     val m = manifestAt(spark, table, version)
-    (m.files.size,
-      keptByEquals(m.files, column, value, m.schemaChanges).size)
+    (m.files.size, keptByValues(m, column, Seq(value)).size)
   }
 
   /** (files in the snapshot, files a [[deleteKeysMor]] /
@@ -1981,29 +1888,6 @@ object Snapshot {
     val m = manifestAt(spark, table, version)
     (m.files.size,
       keyCandidates(m, keys.distinct(), keys.columns.toSeq).size)
-  }
-
-  /** Files whose stats and Bloom filter both ADMIT equality with
-    * `value` (files without stats/filter on the column keep). The
-    * value's repr and Bloom hash compute once per stat type — the
-    * per-file loop is a comparison plus bit tests. */
-  private def keptByEquals(files: Seq[FileEntry], column: String,
-                           value: Any, changes: Seq[SchemaChange])
-      : Seq[FileEntry] = {
-    val reprCache = scala.collection.mutable.Map.empty[String, String]
-    val hashCache = scala.collection.mutable.Map.empty[String, Long]
-    files.filter { f =>
-      fileStats(f, column, changes) match {
-        case None => true
-        case Some(s) =>
-          val r = reprCache.getOrElseUpdate(s.typ, reprOf(s.typ, value))
-          cmp(s.typ, s.max, r) >= 0 && cmp(s.typ, s.min, r) <= 0 &&
-            (s.bloom.isEmpty || FileBloom.mayContainHash(
-              java.util.Base64.getDecoder.decode(s.bloom),
-              hashCache.getOrElseUpdate(s.typ,
-                FileBloom.hashRepr(s.typ, r))))
-      }
-    }
   }
 
   private def manifestAt(spark: SparkSession, table: String,
@@ -2060,15 +1944,8 @@ object Snapshot {
                           lower: Any, upper: Any,
                           changes: Seq[SchemaChange] = Nil)
       : Seq[FileEntry] =
-    files.filter { f =>
-      fileStats(f, column, changes) match {
-        case None => true
-        case Some(s) =>
-          val lo = reprOf(s.typ, lower)
-          val hi = reprOf(s.typ, upper)
-          cmp(s.typ, s.max, lo) >= 0 && cmp(s.typ, s.min, hi) <= 0
-      }
-    }
+    files.filter(f => fileStats(f, column, changes).forall(s =>
+      admits(s, reprOf(s.typ, lower), reprOf(s.typ, upper))))
 
   /** [[keptByRange]] with bounds ALREADY in typed-repr form (the
     * serialization a stored [[RangeDelete]] carries) — the chain-walk
@@ -2078,13 +1955,12 @@ object Snapshot {
                               loRepr: String, hiRepr: String,
                               changes: Seq[SchemaChange])
       : Seq[FileEntry] =
-    files.filter { f =>
-      fileStats(f, column, changes) match {
-        case None => true
-        case Some(s) =>
-          cmp(s.typ, s.max, loRepr) >= 0 && cmp(s.typ, s.min, hiRepr) <= 0
-      }
-    }
+    files.filter(f =>
+      fileStats(f, column, changes).forall(admits(_, loRepr, hiRepr)))
+
+  /** Do `s`'s min/max admit some value in `[lo, hi]` (typed reprs)? */
+  private def admits(s: ColStats, lo: String, hi: String): Boolean =
+    cmp(s.typ, s.max, lo) >= 0 && cmp(s.typ, s.min, hi) <= 0
 
   /** The files a single-column key-list operation must open: range
     * stats drop files whose [min, max] cannot intersect the keys'
@@ -2187,14 +2063,10 @@ object Snapshot {
           (reprs.reduce((a, b) => if (cmp(typ, a, b) <= 0) a else b),
            reprs.reduce((a, b) => if (cmp(typ, a, b) >= 0) a else b))
         })
-      val ranged = files.filter { f =>
-        fileStats(f, c, changes) match {
-          case None => true
-          case Some(s) =>
-            val (lo, hi) = env(s.typ)
-            cmp(s.typ, s.max, lo) >= 0 && cmp(s.typ, s.min, hi) <= 0
-        }
-      }
+      val ranged = files.filter(f => fileStats(f, c, changes).forall { s =>
+        val (lo, hi) = env(s.typ)
+        admits(s, lo, hi)
+      })
       keptByKeyBloomVals(ranged, c, vals, changes)
     }
 
@@ -2270,13 +2142,18 @@ object Snapshot {
     * with permissive unions a read-side mismatch would otherwise
     * null-fill silently. */
   private def readFiles(spark: SparkSession, table: String,
-                        files: Seq[FileEntry]): DataFrame = {
-    val byCommit = files.groupBy(f =>
-      f.path.split('/').take(2).mkString("/")).toSeq.sortBy(_._1)
-    byCommit.map { case (root, fs) =>
-      readStaged(spark, s"$table/$root", stageDirPath(table, fs))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+                        files: Seq[FileEntry]): DataFrame =
+    perCommit(spark, table, files)(identity)
+
+  /** `files` read one commit group at a time (each through `f`), the
+    * groups unioned by name — [[readFiles]]'s plan shape. */
+  private def perCommit(spark: SparkSession, table: String,
+                        files: Seq[FileEntry])
+                       (f: DataFrame => DataFrame): DataFrame =
+    files.groupBy(e => e.path.split('/').take(2).mkString("/")).toSeq
+      .sortBy(_._1).map { case (root, fs) =>
+        f(readStaged(spark, s"$table/$root", stageDirPath(table, fs)))
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** The append-time loudness behind [[readFiles]]'s permissive
     * union: a new commit's partition layout must match the table's
@@ -2301,15 +2178,10 @@ object Snapshot {
     * spelled as a select on [[readFiles]]'s result. */
   private def readFilesWithPath(spark: SparkSession, table: String,
                                 files: Seq[FileEntry],
-                                cols: Option[Seq[String]]): DataFrame = {
-    val byCommit = files.groupBy(f =>
-      f.path.split('/').take(2).mkString("/")).toSeq.sortBy(_._1)
-    byCommit.map { case (root, fs) =>
-      val df = readStaged(spark, s"$table/$root", stageDirPath(table, fs))
+                                cols: Option[Seq[String]]): DataFrame =
+    perCommit(spark, table, files)(df =>
       df.select(col("_metadata.file_path").as("__file") +:
-        cols.getOrElse(df.columns.toSeq).map(col): _*)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+        cols.getOrElse(df.columns.toSeq).map(col): _*))
 
   /** All committed versions, oldest first: (version, action, files,
     * rows, tag). */
@@ -2409,17 +2281,30 @@ object Snapshot {
     * updates retry internally. */
   private def advanceRef(spark: SparkSession, table: String,
                          branch: String, from: Long,
-                         to: Long): Boolean = {
+                         to: Long): Boolean =
+    casRefs(spark, table) {
+      case None => throw new IllegalStateException(
+        s"refs vanished from $table mid-commit — refs files are " +
+          "never deleted wholesale; filesystem corruption?")
+      case Some(r) =>
+        if (!r.heads.get(branch).contains(from)) Left(false)
+        else Right((r.heads.updated(branch, to), true))
+    }
+
+  /** The one refs update: `next` maps the current refs state (None for
+    * a legacy table) to the heads to CAS-write and the value returned
+    * once they land — or Left(value) to return without writing. A lost
+    * CAS re-reads the refs and asks again, [[MaxRetries]] times. */
+  private def casRefs[A](spark: SparkSession, table: String)
+                        (next: Option[Refs] => Either[A,
+                          (Map[String, Long], A)]): A = {
     var attempt = 0
     while (attempt < MaxRetries) {
-      refsOf(spark, table) match {
-        case None => throw new IllegalStateException(
-          s"refs vanished from $table mid-commit — refs files are " +
-            "never deleted wholesale; filesystem corruption?")
-        case Some(r) =>
-          if (!r.heads.get(branch).contains(from)) return false
-          if (writeRefsCas(spark, table, r.v,
-            r.heads.updated(branch, to))) return true
+      val cur = refsOf(spark, table)
+      next(cur) match {
+        case Left(a) => return a
+        case Right((heads, a)) =>
+          if (writeRefsCas(spark, table, cur.fold(0L)(_.v), heads)) return a
       }
       attempt += 1
     }
@@ -2448,27 +2333,17 @@ object Snapshot {
     require(name.nonEmpty &&
       name.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
       s"branch name must be ref-safe, got '$name'")
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val cur = refsOf(spark, table)
+    casRefs(spark, table) { cur =>
       val mainHead = cur.flatMap(_.heads.get("main"))
         .getOrElse(headOrFail(spark, table).version)
       val target = at.getOrElse(mainHead)
       require(readManifest(spark, table, target).nonEmpty,
         s"no snapshot v$target in $table to branch from")
-      cur match {
-        case None =>
-          if (writeRefsCas(spark, table, 0L,
-            Map("main" -> mainHead, name -> target))) return
-        case Some(r) =>
-          require(!r.heads.contains(name),
-            s"branch '$name' already exists in $table")
-          if (writeRefsCas(spark, table, r.v,
-            r.heads.updated(name, target))) return
-      }
-      attempt += 1
+      cur.foreach(r => require(!r.heads.contains(name),
+        s"branch '$name' already exists in $table"))
+      Right((cur.fold(Map("main" -> mainHead))(_.heads)
+        .updated(name, target), ()))
     }
-    throw new IllegalStateException(s"lost the refs race on $table")
   }
 
   /** Branch name -> head version (includes `main`); empty for a
@@ -2482,15 +2357,12 @@ object Snapshot {
   def dropBranch(spark: SparkSession, table: String,
                  name: String): Unit = {
     require(name != "main", "cannot drop 'main'")
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val r = refsOf(spark, table).getOrElse(
+    casRefs(spark, table) { cur =>
+      val r = cur.getOrElse(
         throw new NoSuchElementException(s"no branches in $table"))
       require(r.heads.contains(name), s"no branch '$name' in $table")
-      if (writeRefsCas(spark, table, r.v, r.heads - name)) return
-      attempt += 1
+      Right((r.heads - name, ()))
     }
-    throw new IllegalStateException(s"lost the refs race on $table")
   }
 
   /** FAST-FORWARD PUBLISH: point main at `branch`'s head — the
@@ -2504,29 +2376,21 @@ object Snapshot {
   def publish(spark: SparkSession, table: String, branch: String,
               keepBranch: Boolean = false): Long = {
     require(branch != "main", "publish promotes a non-main branch")
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val r = refsOf(spark, table).getOrElse(
+    casRefs(spark, table) { cur =>
+      val r = cur.getOrElse(
         throw new NoSuchElementException(s"no branches in $table"))
       val bh = r.heads.getOrElse(branch,
         throw new NoSuchElementException(s"no branch '$branch' in " +
           table))
       val mh = r.heads.getOrElse("main",
         throw new IllegalStateException(s"refs without main in $table"))
-      // ancestry walk: from the branch head down to main's head
-      var c = readManifest(spark, table, bh)
-      while (c.exists(m => m.version > mh && m.parent > 0L))
-        c = readManifest(spark, table, c.get.parent)
-      val ff = bh == mh || c.exists(_.version == mh)
-      require(ff, s"main (v$mh) is not an ancestor of '$branch' " +
-        s"(v$bh) — main advanced since the fork; re-branch, " +
-        "re-audit, and publish again")
-      val heads2 = (if (keepBranch) r.heads else r.heads - branch)
-        .updated("main", bh)
-      if (writeRefsCas(spark, table, r.v, heads2)) return bh
-      attempt += 1
+      val head = readManifest(spark, table, bh)
+      require(bh == mh || head.exists(hasAncestor(spark, table, _, mh)),
+        s"main (v$mh) is not an ancestor of '$branch' (v$bh) — main " +
+          "advanced since the fork; re-branch, re-audit, and publish again")
+      Right(((if (keepBranch) r.heads else r.heads - branch)
+        .updated("main", bh), bh))
     }
-    throw new IllegalStateException(s"lost the refs race on $table")
   }
 
   /** The branch's current table (the audit-side read of
@@ -2559,10 +2423,7 @@ object Snapshot {
       throw new NoSuchElementException(
         s"no snapshot v$to in $table (expired or never committed)"))
     commitRetryingOn(spark, table, branch) { (parent, v) =>
-      var c: Option[Manifest] = Some(parent)
-      while (c.exists(m => m.version > to && m.parent > 0L))
-        c = readManifest(spark, table, c.get.parent)
-      require(c.exists(_.version == to),
+      require(hasAncestor(spark, table, parent, to),
         s"v$to is not an ancestor of '$branch' head " +
           s"v${parent.version} in $table — rollback only walks this " +
           "branch's own lineage")
@@ -2604,13 +2465,10 @@ object Snapshot {
     require(src.action == "append",
       s"v$version is a '${src.action}' — only pure appends replay " +
         "by reference; rerun the operation against the target branch")
-    val srcParent =
-      (if (src.parent == 0L) Some(Manifest(0L, -1L, "init", 0L, Nil))
-       else readManifest(spark, table, src.parent)).getOrElse(
-        throw new IllegalStateException(
-          s"v$version's parent v${src.parent} expired — the picked " +
-            "files can no longer be separated from the inherited " +
-            "ones"))
+    val srcParent = lineage(spark, table, src).drop(1).nextOption()
+      .getOrElse(throw new IllegalStateException(
+        s"v$version's parent v${src.parent} expired — the picked " +
+          "files can no longer be separated from the inherited ones"))
     val inherited = srcParent.files.map(_.path).toSet
     val added = src.files.filterNot(f => inherited.contains(f.path))
     val addedRows = src.rows - srcParent.rows
@@ -2626,10 +2484,7 @@ object Snapshot {
     commitRetryingOn(spark, table, onto) { (parent, v) =>
       findTag(spark, table, tag).foreach { v =>
         throw new DuplicateTag(v) }
-      var c: Option[Manifest] = Some(parent)
-      while (c.exists(m => m.version > version && m.parent > 0L))
-        c = readManifest(spark, table, c.get.parent)
-      require(!c.exists(_.version == version),
+      require(!hasAncestor(spark, table, parent, version),
         s"v$version is already in '$onto' lineage (head " +
           s"v${parent.version}) — picking it again would double its " +
           "rows")
@@ -2653,10 +2508,7 @@ object Snapshot {
         rangeDeletes = parent.rangeDeletes,
         eqDeletes = parent.eqDeletes,
         schemaChanges = parent.schemaChanges)
-    } match {
-      case Right(v) => v
-      case Left(v) => v
-    }
+    }.merge
   }
 
   /** `branch`'s head version: through refs when they exist; a legacy
@@ -2684,19 +2536,32 @@ object Snapshot {
           lineageManifests(spark, table, h))
     }
 
-  /** Walk parent pointers from `head` down to the oldest retained
-    * ancestor; ascending by version. */
+  /** The table state before its first commit: version 0, no files —
+    * the parent every lineage ends on. */
+  private val Root = Manifest(0L, -1L, "init", 0L, Nil)
+
+  /** `from` and its ancestors, newest first: parent pointers followed
+    * lazily (each manifest is read only when the walk asks for it),
+    * ending after [[Root]] or at the first ancestor no longer retained.
+    * The one place a walk dereferences `parent`. */
+  private def lineage(spark: SparkSession, table: String,
+                      from: Manifest): Iterator[Manifest] =
+    Iterator.iterate(Option(from)) {
+      case Some(m) if m.parent > 0L => readManifest(spark, table, m.parent)
+      case Some(m) if m.parent == 0L => Some(Root)
+      case _ => None
+    }.takeWhile(_.nonEmpty).flatten
+
+  /** Is `v` in `from`'s lineage? */
+  private def hasAncestor(spark: SparkSession, table: String,
+                          from: Manifest, v: Long): Boolean =
+    lineage(spark, table, from).find(_.version <= v).exists(_.version == v)
+
+  /** `head` and its retained ancestors, ascending by version. */
   private def lineageManifests(spark: SparkSession, table: String,
-                               head: Long): Seq[Manifest] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Manifest]
-    var cur = readManifest(spark, table, head)
-    while (cur.nonEmpty) {
-      buf += cur.get
-      cur = if (cur.get.parent <= 0L) None
-            else readManifest(spark, table, cur.get.parent)
-    }
-    buf.reverse.toSeq
-  }
+                               head: Long): Seq[Manifest] =
+    readManifest(spark, table, head).toSeq.flatMap(m =>
+      lineage(spark, table, m).takeWhile(_ ne Root)).reverse
 
   /** Every retained manifest reachable from SOME ref head, newest
     * first (legacy: every retained manifest) — the tag-idempotence
@@ -2710,12 +2575,10 @@ object Snapshot {
       case Some(r) =>
         val seen = scala.collection.mutable.Map.empty[Long, Manifest]
         r.heads.values.toSeq.distinct.foreach { h =>
-          var cur = readManifest(spark, table, h)
-          while (cur.nonEmpty && !seen.contains(cur.get.version)) {
-            seen(cur.get.version) = cur.get
-            cur = if (cur.get.parent <= 0L) None
-                  else readManifest(spark, table, cur.get.parent)
-          }
+          readManifest(spark, table, h).foreach(m =>
+            lineage(spark, table, m)
+              .takeWhile(a => (a ne Root) && !seen.contains(a.version))
+              .foreach(a => seen(a.version) = a))
         }
         seen.values.toSeq.sortBy(-_.version)
     }
@@ -2985,13 +2848,11 @@ object Snapshot {
                                conflicts: Seq[FileEntry] => Boolean)
       : Option[Seq[FileEntry]] = {
     if (parent.version == base.version) return Some(Nil)
-    var cur = parent
-    while (cur.version > base.version) {
-      if (cur.action != "append") return None
-      cur = readManifest(spark, table, cur.parent)
-        .getOrElse(return None) // chain gap: cannot prove, abort
-    }
-    if (cur.version != base.version) return None // diverged lineage
+    // every commit since `base` a pure append, down to `base` itself (a
+    // chain gap or another lineage cannot be proven: abort)
+    if (!lineage(spark, table, parent)
+          .dropWhile(m => m.version > base.version && m.action == "append")
+          .nextOption().exists(_.version == base.version)) return None
     val baseByPath = base.files.map(f => f.path -> f).toMap
     val parentByPath = parent.files.map(f => f.path -> f).toMap
     val basisIntact = baseByPath.forall { case (p, f) =>
@@ -3056,7 +2917,7 @@ object Snapshot {
             if (branch != "main") throw new NoSuchElementException(
               s"no branch '$branch' in $table (createBranch first)")
             currentManifest(spark, table)
-        }).getOrElse(Manifest(0L, -1L, "init", 0L, Nil))
+        }).getOrElse(Root)
       val nextV = math.max(
         latestVersion(spark, table).getOrElse(0L), parent.version) + 1
       val now = java.time.Instant.now()

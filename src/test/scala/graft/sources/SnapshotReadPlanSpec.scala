@@ -1,10 +1,13 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
 
 import graft.{Probe, TestSpark}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every [[Snapshot]] read, pinned on one commit chain: the Spark jobs
@@ -15,6 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * a pending range delete, pending equality deletes and a rename, and
   * one [[Snapshot.readChangesBetween]] window per action kind. */
 class SnapshotReadPlanSpec extends AnyFunSuite {
+  import SnapshotReadPlanSpec.Seen
+
   lazy val spark: SparkSession = TestSpark.spark
   lazy val bench: SparkSession = {
     val s = spark.newSession()
@@ -54,11 +59,6 @@ class SnapshotReadPlanSpec extends AnyFunSuite {
       Seq[Any](i, s, "insert") } ++
       (a.toSet -- b.toSet).toSeq.map { case (i, s) =>
         Seq[Any](i, s, "delete") }).sortBy(_.mkString("|"))
-
-  /** One read's observation: jobs to build and collect the frame, the
-    * table-relative files its optimized plan scans, its rows. */
-  private final case class Seen(jobs: Int, files: Seq[String],
-                                rows: Seq[Seq[Any]])
 
   private def observe(t: String)(f: => DataFrame): Seen = {
     var df: DataFrame = null
@@ -153,12 +153,12 @@ class SnapshotReadPlanSpec extends AnyFunSuite {
     def consume(name: String, expect: Option[(Long, Long)]): Unit = {
       var got: Array[Row] = Array.empty
       var cols: Seq[String] = Nil
-      var window: Option[(Long, Long)] = None
+      var processed: Option[(Long, Long)] = None
       val run = Probe.record(bench) {
-        window = Snapshot.consumeChanges(bench, t, state) { df =>
+        processed = Snapshot.consumeChanges(bench, t, state) { df =>
           got = df.collect(); cols = df.columns.toSeq }
       }
-      assert(window == expect, name)
+      assert(processed == expect, name)
       val rs = expect.fold(Seq.empty[Seq[Any]]) { case (a, b) =>
         diff(models(a), models(b)) }
       assert((if (cols.isEmpty) Nil else contents(got, cols)) == rs, name)
@@ -286,4 +286,59 @@ class SnapshotReadPlanSpec extends AnyFunSuite {
     assert(s.files.isEmpty) // the final frame reads only segment nets
     assert(s.jobs == 5)
   }
+
+  test("a pruned read that keeps no file answers in the live schema " +
+       "after renames, a widen and a drop") {
+    val t = s"${freshDir()}/t"
+    val s = bench
+    import s.implicits._
+    for (ids <- Seq(0L until 100L, 100L until 200L))
+      Snapshot.append(ids.map(i => (i, doc(i), i.toInt, "x"))
+        .toDF("id", "text", "n", "extra").coalesce(1), t,
+        statsCols = Seq("id"), bloomCols = Seq("id"))
+    Snapshot.renameColumn(bench, t, "id", "key")
+    Snapshot.widenColumn(bench, t, "n", "long")
+    Snapshot.renameColumn(bench, t, "n", "num")
+    Snapshot.dropColumn(bench, t, "extra")
+    val head = Snapshot.latestVersion(bench, t).get
+    def shape(df: DataFrame): Seq[(String, DataType)] =
+      df.schema.map(f => f.name -> f.dataType)
+    val live = shape(Snapshot.read(bench, t))
+    assert(live == Seq("key" -> LongType, "text" -> StringType,
+      "num" -> LongType))
+    for ((name, df, want) <- Seq(
+        ("readWhere", Snapshot.readWhere(bench, t, "key", 5000L, 6000L),
+          live),
+        ("readEquals", Snapshot.readEquals(bench, t, "key", 5000L), live),
+        ("readIn", Snapshot.readIn(bench, t, "key", Seq(5000L, 6000L)),
+          live),
+        ("readAppendsSince", Snapshot.readAppendsSince(bench, t, head),
+          live),
+        ("readChangesBetween",
+          Snapshot.readChangesBetween(bench, t, head, head),
+          live :+ ("_change" -> StringType)))) {
+      assert(shape(df) == want, name)
+      assert(df.isEmpty, name)
+    }
+    // a merge-on-read range delete on a column no file has stats for
+    // types its residual off the same live schema
+    Snapshot.deleteRangeMor(bench, t, "num", 10L, 19L)
+    assert(Snapshot.read(bench, t).count() == 190L)
+  }
+
+  test("under src/main/scala only Snapshot's lineage walk follows a " +
+       "parent pointer") {
+    val hits = Files.walk(Path.of("src/main/scala")).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".scala"))
+      .flatMap(p => """readManifest\([^)]*parent""".r
+        .findAllIn(Files.readString(Path.of(p))).map(_ => p)).toSeq
+    assert(hits == Seq("src/main/scala/graft/sources/Snapshot.scala"))
+  }
+}
+
+object SnapshotReadPlanSpec {
+  /** One read's observation: jobs to build and collect the frame, the
+    * table-relative files its optimized plan scans, its rows. */
+  private final case class Seen(jobs: Int, files: Seq[String],
+                                rows: Seq[Seq[Any]])
 }
