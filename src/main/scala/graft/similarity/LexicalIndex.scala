@@ -51,19 +51,24 @@ object LexicalIndex {
             textCol: String = "text", idCol: String = "doc_id",
             wordBuckets: Int = 0): Unit = {
     require(wordBuckets >= 0, s"negative wordBuckets: $wordBuckets")
-    // layout.json goes through Hadoop FS ([[graft.sources.SidecarIo]]):
-    // the index path may be hdfs:// or s3a://, where a java.nio probe
-    // would silently report the pin absent and pruning would vanish
-    graft.sources.SidecarIo.writeStringAtomic(docs.sparkSession,
-      s"$path/layout.json", s"""{"wordBuckets":$wordBuckets}""")
+    writeLayout(docs.sparkSession, path, wordBuckets)
     append(docs, path, "base", textCol, idCol)
   }
 
-  private def wordBucketsOf(spark: SparkSession, path: String): Int =
-    graft.sources.SidecarIo.readString(spark, s"$path/layout.json")
-      .map(s => new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(s).path("wordBuckets").asInt(0))
-      .getOrElse(0) // pre-layout index
+  /** `layout.json`: the index's pinned word-bucket count. */
+  private final case class IndexLayout(wordBuckets: Int = 0)
+
+  // layout.json goes through Hadoop FS ([[graft.sources.SidecarIo]]):
+  // the index path may be hdfs:// or s3a://, where a java.nio probe
+  // would silently report the pin absent and pruning would vanish
+  private def writeLayout(spark: SparkSession, path: String,
+                          wordBuckets: Int): Unit =
+    graft.sources.SidecarIo.writeJsonAtomic(spark, s"$path/layout.json",
+      IndexLayout(wordBuckets))
+
+  private[graft] def wordBucketsOf(spark: SparkSession, path: String): Int =
+    graft.sources.SidecarIo.readJson[IndexLayout](spark,
+      s"$path/layout.json").fold(0)(_.wordBuckets) // 0: pre-layout index
 
   /** Land one batch's postings under `batch=<tag>` (idempotent:
     * re-running a tag overwrites its own directories). */
@@ -146,10 +151,7 @@ object LexicalIndex {
     val spark = SparkSession.active
     import spark.implicits._
     val nBuckets = wordBucketsOf(spark, path)
-    graft.sources.SidecarIo.writeStringAtomic(spark,
-      s"$dst/layout.json",
-      graft.sources.SidecarIo.readString(spark, s"$path/layout.json")
-        .getOrElse("""{"wordBuckets":0}"""))
+    writeLayout(spark, dst, nBuckets)
     val postings = spark.read.parquet(s"$path/postings")
       .select(col("word"), col("doc_id"), col("tf"))
     if (nBuckets > 0)
@@ -250,8 +252,7 @@ object LexicalIndex {
     val spark = removedIds.sparkSession
     import spark.implicits._
     val nBuckets = wordBucketsOf(spark, path)
-    graft.sources.SidecarIo.writeStringAtomic(spark,
-      s"$dst/layout.json", s"""{"wordBuckets":$nBuckets}""")
+    writeLayout(spark, dst, nBuckets)
     val dead = removedIds.select(col(removedIds.columns.head)
       .cast("long").as("doc_id")).distinct()
     // no forced broadcast: the removal set is usually small but its

@@ -74,13 +74,21 @@ object Materialized {
     * to shuffle joins instead of an executor-OOM broadcast. */
   private val BroadcastKeyCap = 1L << 19
 
-  private final case class Config(keys: Seq[String], vals: Seq[String],
-                                  filterSql: String = "",
-                                  minmax: Seq[String] = Nil,
-                                  distinct: Seq[String] = Nil,
-                                  derives: Seq[(String, String)] = Nil) {
+  /** `config.json`: the view's definition, pinned at [[create]]. */
+  private[sources] final case class Config(keys: Seq[String],
+                                           vals: Seq[String],
+                                           filter: String = "",
+                                           minmax: Seq[String] = Nil,
+                                           distinct: Seq[String] = Nil,
+                                           derives: Seq[Derive] = Nil) {
     def extended: Seq[String] = (minmax ++ distinct).distinct
   }
+
+  /** A named row-local SQL column ([[create]]'s `deriveCols`). */
+  private[sources] final case class Derive(name: String, sql: String)
+
+  /** `intent.json`: the refresh window pinned before any compute. */
+  private final case class Intent(since: Long, until: Long)
 
   /** The synthetic merge key: null-safe, collision-free across
     * null/empty ("v:" prefix vs the bare null sentinel). Key values
@@ -100,10 +108,10 @@ object Materialized {
     * the derived columns). Both must be row-local: an expression over
     * other rows cannot fold from a row delta. */
   private def prep(df: DataFrame, c: Config): DataFrame = {
-    val derived = c.derives.foldLeft(df) { case (d, (n, sql)) =>
-      d.withColumn(n, expr(sql)) }
-    if (c.filterSql.isEmpty) derived
-    else derived.filter(expr(c.filterSql))
+    val derived = c.derives.foldLeft(df)((d, x) =>
+      d.withColumn(x.name, expr(x.sql)))
+    if (c.filter.isEmpty) derived
+    else derived.filter(expr(c.filter))
   }
 
   /** The stored type of `sum_<v>`: integral columns sum EXACTLY as
@@ -142,31 +150,27 @@ object Materialized {
       .agg(exprs.head, exprs.tail: _*)
   }
 
-  private def configOf(spark: SparkSession, mv: String): Config = {
-    val s = SidecarIo.readString(spark, s"$mv/config.json").getOrElse(
+  private[sources] def configOf(spark: SparkSession, mv: String): Config =
+    SidecarIo.readJson[Config](spark, s"$mv/config.json").getOrElse(
       throw new NoSuchElementException(
         s"no materialized view at $mv (create first)"))
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(s)
-    def arr(n: String): Seq[String] = {
-      val b = Seq.newBuilder[String]
-      root.path(n).elements()
-        .forEachRemaining(e => b += e.asText())
-      b.result()
-    }
-    val db = Seq.newBuilder[(String, String)]
-    root.path("derives").elements().forEachRemaining(e =>
-      db += e.path("name").asText() -> e.path("sql").asText())
-    Config(arr("keys"), arr("vals"), root.path("filter").asText(""),
-      arr("minmax"), arr("distinct"), db.result())
-  }
 
-  private def baselineOf(spark: SparkSession, mv: String): Long =
-    SidecarIo.readString(spark, s"$mv/baseline.json")
-      .map(s => new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(s).path("version").asLong(0L))
+  private[sources] def baselineOf(spark: SparkSession, mv: String): Long =
+    SidecarIo.readJson[VersionPin](spark, s"$mv/baseline.json")
       .getOrElse(throw new NoSuchElementException(
-        s"no baseline at $mv — create first"))
+        s"no baseline at $mv — create first")).version
+
+  private def writeBaseline(spark: SparkSession, mv: String,
+                            version: Long): Unit =
+    SidecarIo.writeJsonAtomic(spark, s"$mv/baseline.json",
+      VersionPin(version))
+
+  /** The window a crashed refresh pinned for baseline `since`: its
+    * `until`, or None when no pin is pending for that baseline. */
+  private[sources] def pinnedUntil(spark: SparkSession, mv: String,
+                                   since: Long): Option[Long] =
+    SidecarIo.readJson[Intent](spark, s"$mv/intent.json")
+      .filter(_.since == since).map(_.until)
 
   /** Create the view at `mv`: one full aggregate of `table`'s
     * CURRENT version (pinned before the scan — a commit racing the
@@ -205,47 +209,28 @@ object Materialized {
     require(keyCols.intersect(
       sumCols ++ minMaxCols ++ distinctCols).isEmpty,
       "a column cannot be both key and value")
-    require(SidecarIo.readString(spark, s"$mv/config.json").isEmpty,
+    require(!SidecarIo.exists(spark, s"$mv/config.json"),
       s"materialized view already exists at $mv")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val cur = SidecarIo.readString(spark, s"$mv/createpin.json")
-      .map(om.readTree(_).path("version").asLong(-1L))
-      .filter(_ >= 0L)
+    val cur = SidecarIo.readJson[VersionPin](spark, s"$mv/createpin.json")
+      .map(_.version).filter(_ >= 0L)
       .getOrElse {
         val v = Snapshot.latestVersion(spark, table).getOrElse(
           throw new IllegalStateException(
             s"no committed snapshot in $table"))
-        SidecarIo.writeStringAtomic(spark, s"$mv/createpin.json",
-          s"""{"version":$v}""")
+        SidecarIo.writeJsonAtomic(spark, s"$mv/createpin.json",
+          VersionPin(v))
         v
       }
     require(deriveCols.map(_._1).distinct.size == deriveCols.size,
       "duplicate derived-column names")
     val c = Config(keyCols, sumCols, filterSql, minMaxCols,
-      distinctCols, deriveCols)
+      distinctCols, deriveCols.map { case (n, q) => Derive(n, q) })
     val st = stateAgg(Snapshot.read(spark, table, Some(cur)), c)
       .withColumn("__mv_key", mvKey(keyCols))
     Snapshot.append(st, s"$mv/state", tag = Some("mv-create"),
       statsCols = Seq("__mv_key"), bloomCols = Seq("__mv_key"))
-    val root = om.createObjectNode()
-    val ka = root.putArray("keys"); keyCols.foreach(ka.add)
-    val va = root.putArray("vals"); sumCols.foreach(va.add)
-    if (filterSql.nonEmpty) root.put("filter", filterSql)
-    if (minMaxCols.nonEmpty) {
-      val ma = root.putArray("minmax"); minMaxCols.foreach(ma.add)
-    }
-    if (distinctCols.nonEmpty) {
-      val da = root.putArray("distinct"); distinctCols.foreach(da.add)
-    }
-    if (deriveCols.nonEmpty) {
-      val xa = root.putArray("derives")
-      deriveCols.foreach { case (n, sql) =>
-        val o = xa.addObject(); o.put("name", n); o.put("sql", sql) }
-    }
-    SidecarIo.writeStringAtomic(spark, s"$mv/baseline.json",
-      s"""{"version":$cur}""")
-    SidecarIo.writeStringAtomic(spark, s"$mv/config.json",
-      om.writeValueAsString(root))
+    writeBaseline(spark, mv, cur)
+    SidecarIo.writeJsonAtomic(spark, s"$mv/config.json", c)
   }
 
   /** Fold the table's net changes since the last refresh into the
@@ -263,18 +248,13 @@ object Materialized {
     // the WRITE-AHEAD window pin: a crashed refresh resumes ITS
     // window, not whatever the table head is by replay time — the
     // crashed run's fold may already be committed for the old window
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val pinned = SidecarIo.readString(spark, s"$mv/intent.json")
-      .map(om.readTree)
-      .filter(_.path("since").asLong(-1L) == since)
-      .map(_.path("until").asLong(-1L))
-    val until = pinned.getOrElse {
+    val until = pinnedUntil(spark, mv, since).getOrElse {
       val u = Snapshot.latestVersion(spark, table).getOrElse(
         throw new IllegalStateException(
           s"no committed snapshot in $table"))
       if (u > since)
-        SidecarIo.writeStringAtomic(spark, s"$mv/intent.json",
-          s"""{"since":$since,"until":$u}""")
+        SidecarIo.writeJsonAtomic(spark, s"$mv/intent.json",
+          Intent(since, u))
       u
     }
     if (until <= since) return None
@@ -283,8 +263,7 @@ object Materialized {
       // the crashed run's fold is already committed — recomputing it
       // against the folded state would be wrong; just finish the
       // bookkeeping it never reached
-      SidecarIo.writeStringAtomic(spark, s"$mv/baseline.json",
-        s"""{"version":$until}""")
+      writeBaseline(spark, mv, until)
       return Some((since, until))
     }
     // derives + predicate prepare the DELTA exactly as they prepared
@@ -398,7 +377,7 @@ object Materialized {
                Seq("__mv_key"), "left_semi"),
            // derives/filter already ran; the derived columns are real
            // columns on this frame now
-           c.copy(filterSql = "", derives = Nil))
+           c.copy(filter = "", derives = Nil))
            .withColumn("__mv_key", mvKey(c.keys))
          // keys the rescan found nothing for are fully deleted —
          // they tombstone (n_rows = 0) exactly like the incremental
@@ -441,8 +420,7 @@ object Materialized {
     // tombstones (filtered at read) so there is no second commit a
     // crash could separate from this one
     Snapshot.mergeMor(folded, state, "__mv_key", tag = Some(tag))
-    SidecarIo.writeStringAtomic(spark, s"$mv/baseline.json",
-      s"""{"version":$until}""")
+    writeBaseline(spark, mv, until)
     Some((since, until))
   }
 
@@ -480,10 +458,10 @@ object Materialized {
     Seq(
       "keys" -> c.keys.mkString(", "),
       "sum_cols" -> c.vals.mkString(", "),
-      "filter" -> c.filterSql,
+      "filter" -> c.filter,
       "minmax_cols" -> c.minmax.mkString(", "),
       "distinct_cols" -> c.distinct.mkString(", "),
-      "derives" -> c.derives.map { case (n, q) => s"$n <- $q" }
+      "derives" -> c.derives.map(x => s"${x.name} <- ${x.sql}")
         .mkString("; "),
       "baseline_version" -> baseline.toString,
       "state_version" -> stateV.map(_._1.toString).getOrElse(""),
@@ -529,16 +507,11 @@ object Materialized {
     // fold landed — a later replay that cannot find the tag would
     // recompute the fold against folded state. Same short-circuit as
     // refresh, doable here because intent.json carries the window.
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val since = baselineOf(spark, mv)
-    SidecarIo.readString(spark, s"$mv/intent.json")
-      .map(om.readTree)
-      .filter(_.path("since").asLong(-1L) == since)
-      .map(_.path("until").asLong(-1L))
+    pinnedUntil(spark, mv, since)
       .filter(u => u > since &&
         Snapshot.tagVersion(spark, state, s"mv-$since-$u").nonEmpty)
-      .foreach(u => SidecarIo.writeStringAtomic(spark,
-        s"$mv/baseline.json", s"""{"version":$u}"""))
+      .foreach(writeBaseline(spark, mv, _))
     vacuum(spark, mv)
     Snapshot.compactSmall(spark, state, smallBytes = smallBytes)
     Snapshot.expire(spark, state, keepLast = keepLast,

@@ -1,5 +1,10 @@
 package graft.sources
 
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper,
+  SerializationFeature}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.{DefaultScalaModule, JavaTypeable}
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -26,9 +31,28 @@ import org.apache.spark.sql.SparkSession
   * complete-body-or-absent guarantee. Sidecars here are REBUILDABLE
   * pins and baselines, so a transient absence re-derives or replays;
   * nothing here may be used as a commit CAS (that is
-  * [[Snapshot]]'s `atomicBind`, which never replaces).
+  * [[Snapshot]]'s `createNew`, which never replaces).
+  *
+  * ==The metadata codec==
+  * [[mapper]] is the ONE JSON codec of the lakehouse's metadata: it
+  * binds each file to its case class — [[Snapshot]]'s version
+  * manifests, content-addressed group files, `refs-v*.json` and the
+  * `consumeChanges` baseline; [[Materialized]]'s `config.json`,
+  * `baseline.json`, `intent.json` and `createpin.json`; the lexical
+  * index's `layout.json`. Map keys are written in sorted order (a
+  * group file's content hash is its name, so equal contents must
+  * serialize equally), `None` fields are omitted, unknown fields are
+  * ignored, and a missing field takes its constructor default — so
+  * files written before a field existed still load.
   */
 object SidecarIo {
+
+  private[sources] val mapper: ObjectMapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .enable(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS)
+    .disable(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES)
+    .serializationInclusion(JsonInclude.Include.NON_ABSENT)
+    .build()
 
   private def conf(spark: SparkSession) =
     spark.sparkContext.hadoopConfiguration
@@ -38,22 +62,29 @@ object SidecarIo {
     p.getFileSystem(conf(spark)).exists(p)
   }
 
-  /** The sidecar's UTF-8 content, or None when absent. */
-  def readString(spark: SparkSession, path: String): Option[String] = {
+  /** The sidecar's bytes, or None when absent. */
+  private def readBytes(spark: SparkSession,
+                        path: String): Option[Array[Byte]] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf(spark))
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(new String(buf.toByteArray, "UTF-8"))
-      } finally in.close()
+      try Some(in.readAllBytes()) finally in.close()
     }
   }
+
+  /** The sidecar bound to `T`, or None when absent. */
+  def readJson[T: JavaTypeable](spark: SparkSession,
+                                path: String): Option[T] =
+    readBytes(spark, path).map(mapper.readValue[T](_,
+      implicitly[JavaTypeable[T]].asJavaType(mapper.getTypeFactory)))
+
+  /** Write (or atomically REPLACE) the sidecar at `path` with `value`
+    * as JSON. */
+  def writeJsonAtomic[T](spark: SparkSession, path: String,
+                         value: T): Unit =
+    writeStringAtomic(spark, path, mapper.writeValueAsString(value))
 
   /** Write (or atomically REPLACE) the sidecar at `path`. */
   def writeStringAtomic(spark: SparkSession, path: String,
@@ -86,3 +117,7 @@ object SidecarIo {
     }
   }
 }
+
+/** A `{"version": N}` sidecar: a consumer's or a view's folded
+  * baseline, a view's create pin. */
+private[sources] final case class VersionPin(version: Long)

@@ -1,10 +1,13 @@
 package graft.sources
 
+import com.fasterxml.jackson.annotation.JsonIgnore
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import graft.ops.GlobalOrdinal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count,
   count_distinct, lit, max, min, sum, when}
 import org.apache.spark.sql.types._
+import scala.annotation.meta.{getter, param}
 import scala.util.control.NonFatal
 
 /** Snapshot-isolated table commits — the manifest-based layout
@@ -550,38 +553,8 @@ object Snapshot {
         if (srcRows == 0L) return base.version
         (ranged, None)
     }
-    // matched keys + exact dead-row accounting in ONE pass: the
-    // candidates' live rows semi-join the source keys and group to
-    // the distinct matched keys — which ARE the equality-delete
-    // file's rows — while the pre-group row count (the rows the
-    // delete kills) and the matched-key count ride the SAME job as
-    // CollectMetrics observations: one write job, no count job.
-    val eq: Option[(EqDelete, Long)] =
-      if (candidates.isEmpty) None
-      else {
-        val obs = new org.apache.spark.sql.Observation()
-        val d = writeEqDelete(spark, table,
-          readLive(spark, table, base, candidates)
-            .select(col(key))
-            .join(srcKeys, Seq(key), "left_semi")
-            .groupBy(col(key)).agg(count(lit(1)).as("__graft_live"))
-            .observe(obs,
-              coalesce(sum(col("__graft_live")), lit(0L)).as("dead"),
-              count(lit(1)).as("matched"))
-            .select(col(key)), Seq(key))
-        val killed = obs.get("dead").asInstanceOf[Long]
-        if (killed > 0L)
-          Some((d.copy(rows = obs.get("matched").asInstanceOf[Long]),
-            killed))
-        else {
-          // pure inserts: no delete entry lands (unmatched keys would
-          // anti-join nothing but cost every read's accounting); the
-          // empty unpublished dir is garbage — remove it now
-          hadoopFs(spark, table).delete(
-            new org.apache.hadoop.fs.Path(s"$table/${d.dir}"), true)
-          None
-        }
-      }
+    val eq = writeMatchedKeys(spark, table, base, candidates, srcKeys,
+      Seq(key))
     val (staged, stagedRows) = stageRewrite(spark, table, base, source)
     // same conflict rule as [[merge]]: a disjointness-proven append
     // carries forward (the new EqDelete applies to it by seq, but
@@ -735,7 +708,8 @@ object Snapshot {
     * under the table, the manifest records it as an [[EqDelete]], and
     * every subsequent read anti-joins it away. ZERO data files are
     * rewritten; the right-to-erasure pass over a 100 TB table costs
-    * one key-file write plus one narrow accounting scan.
+    * one key-file write, whose job is the narrow accounting scan: the
+    * file holds only the keys that matched a live row.
     * [[compact]] folds pending key deletes into data; [[expire]]
     * sweeps the key files once no retained manifest references them.
     *
@@ -755,9 +729,9 @@ object Snapshot {
     // a single-column key set at or under the probe cap collects ONCE
     // and replays as a LOCAL relation: candidate pruning and the
     // commit's conflict test become driver arithmetic, and the
-    // accounting scan's semi-join side and the delete-file write stop
-    // re-evaluating (and re-shuffling) the caller's lineage, which
-    // would otherwise run the distinct three times (probe, count, write)
+    // accounting write's semi-join side stops re-evaluating (and
+    // re-shuffling) the caller's lineage, which would otherwise run the
+    // distinct twice (probe, write)
     deleteKeys(distinctKeys0, table, tag,
       if (keys.columns.length == 1) smallKeySample(distinctKeys0) else None)
   }
@@ -931,15 +905,10 @@ object Snapshot {
             else Some(RangeDelete(column, reprOf(typ, lower),
               reprOf(typ, upper), typ, 0L)))
       case KeyFile(keys, cols) =>
-        val dead = readLive(spark, table, base, hit)
-          .select(cols.map(col): _*).join(keys, cols, "left_semi").count()
-        if (dead == 0L) return base.version
-        val d = writeEqDelete(spark, table, keys, cols)
-        // key count off the just-written footers — a metadata read,
-        // not another Spark job re-running the distinct
+        val (d, dead) = writeMatchedKeys(spark, table, base, hit, keys,
+          cols).getOrElse(return base.version)
         Plan(base, "delete-mor", "delete", Nil, Nil, dead, 0L, conflicts,
-          eqDelete = Some(d.copy(rows = footerRowsUnder(spark,
-            s"$table/${d.dir}"))), tag = tag)
+          eqDelete = Some(d), tag = tag)
     }
     commitPlan(spark, table, plan)
   }
@@ -964,23 +933,50 @@ object Snapshot {
     stageWrite(spark, table, df, declaredLayout(base),
       currentStatsColsOf(base), currentBloomColsOf(base))
 
-  /** Write `keys` as an equality-delete file under `deletes/<uuid>` —
-    * unpublished until the manifest CAS references it, as in [[stage]]
-    * — and seed the schema cache as [[stage]] does. The entry's `rows`
-    * is left to the caller (each knows its key count without a job)
-    * and its `seq` to [[commitPlan]]. */
-  private def writeEqDelete(spark: SparkSession, table: String,
-                            keys: DataFrame, cols: Seq[String]): EqDelete = {
+  /** The equality-delete file of the `keys` over `cols` that match a
+    * live row of `hit` under `base`, and the rows it kills — or None
+    * (nothing left behind) when no live row matches. Matched keys and
+    * exact dead-row accounting come from ONE write job: the hit files'
+    * live key columns semi-join the keys and group to the distinct
+    * matched keys — the file's rows — while the pre-group row count
+    * (the dead rows) and the matched-key count ride the write as
+    * CollectMetrics observations. Unmatched keys stay out of the file:
+    * they would anti-join nothing but cost every read. The file lands
+    * under `deletes/<uuid>`, unpublished until the manifest CAS
+    * references it (as in [[stage]], whose schema cache it seeds too);
+    * the entry's `seq` is left to [[commitPlan]]. */
+  private def writeMatchedKeys(spark: SparkSession, table: String,
+                               base: Manifest, hit: Seq[FileEntry],
+                               keys: DataFrame, cols: Seq[String])
+      : Option[(EqDelete, Long)] = {
+    if (hit.isEmpty) return None
+    val obs = new org.apache.spark.sql.Observation()
+    val matched = readLive(spark, table, base, hit)
+      .select(cols.map(col): _*).join(keys, cols, "left_semi")
+      .groupBy(cols.map(col): _*).agg(count(lit(1)).as("__graft_live"))
+      .observe(obs,
+        coalesce(sum(col("__graft_live")), lit(0L)).as("dead"),
+        count(lit(1)).as("matched"))
+      .select(cols.map(col): _*)
     val rel = s"deletes/${java.util.UUID.randomUUID()}"
-    keys.write.mode("errorifexists")
+    // one file: the grouped output would otherwise leave one per
+    // non-empty shuffle partition, and every read opens them all
+    matched.coalesce(1).write.mode("errorifexists")
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
       .parquet(s"$table/$rel")
-    stagedSchemaCache.put(s"$table/$rel", keys.schema)
+    val fs = hadoopFs(spark, table)
+    val dir = new org.apache.hadoop.fs.Path(s"$table/$rel")
+    val dead = obs.get("dead").asInstanceOf[Long]
+    if (dead == 0L) {
+      fs.delete(dir, true) // nothing matched: the dir is garbage
+      return None
+    }
+    stagedSchemaCache.put(s"$table/$rel", matched.schema)
     var bytes = 0L
-    val it = hadoopFs(spark, table)
-      .listFiles(new org.apache.hadoop.fs.Path(s"$table/$rel"), true)
+    val it = fs.listFiles(dir, true)
     while (it.hasNext) bytes += it.next().getLen
-    EqDelete(rel, bytes, -1L, cols, 0L)
+    Some((EqDelete(rel, bytes, obs.get("matched").asInstanceOf[Long], cols,
+      0L), dead))
   }
 
   /** Live rows of `files` under `m`: [[liveRowsFromMeta]]'s footer
@@ -1333,6 +1329,10 @@ object Snapshot {
           df.join(ds.map(d => eqDeleteKeys(spark, table, d))
             .reduce(_ unionByName _).select(cols.map(col): _*).distinct(),
             cols, "left_anti")
+            // a using-column join moves the keys first: keep the
+            // table's column order (names quoted: `col` parses dots)
+            .select(df.columns.map(c =>
+              col("`" + c.replace("`", "``") + "`")): _*)
         }
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
@@ -1384,17 +1384,21 @@ object Snapshot {
     * snapshot instead of silently double-reading rewritten rows. */
   def readAppendsSince(spark: SparkSession, table: String,
                        sinceVersion: Long): DataFrame = {
-    val from = manifestAt(spark, table, Some(sinceVersion))
     val cur = headOrFail(spark, table,
       missing = new NoSuchElementException(_))
     // a lineage walk, not version-range arithmetic, which would mix
     // branch lineages once refs exist
     val (win, since) = windowOf(spark, table, cur, sinceVersion)
-    if (since.isEmpty)
+    val from = since.filter(_.version > 0L).getOrElse {
+      // not on the walk: a `since` never committed or expired (v0
+      // included) fails as a missing snapshot, a retained one as
+      // another lineage
+      manifestAt(spark, table, Some(sinceVersion))
       throw new IllegalStateException(
         s"v$sinceVersion is not an ancestor of the current head " +
           s"v${cur.version} in $table (expired, or another lineage); " +
           "re-baseline the consumer on the current snapshot")
+    }
     win.find(_.action != "append").foreach { m =>
       throw new IllegalStateException(
         s"v${m.version} is a '${m.action}' — the interval " +
@@ -1491,7 +1495,7 @@ object Snapshot {
     if (sinceManifest.nonEmpty && win.forall(_.action == "append"))
       return appendDiff(spark, table, sinceManifest.get, cur)
         .withColumn("_change", lit("insert"))
-    val after = read(spark, table, Some(cur.version))
+    val after = prunedReadAt(spark, table, cur, _.files, None)
     val cols = after.columns.toSeq
     // IN-WINDOW schema changes must map every delta frame (and, on
     // the fallback path, the base snapshot) before fingerprinting: a
@@ -1717,10 +1721,8 @@ object Snapshot {
     // baseline there — the java.nio spelling reported it absent and
     // silently re-sent the whole table as inserts every poll
     val statePath = s"$stateDir/baseline.json"
-    val since: Long = SidecarIo.readString(spark, statePath)
-      .map(s => new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(s).path("version").asLong(0L))
-      .getOrElse(0L)
+    val since: Long = SidecarIo.readJson[VersionPin](spark, statePath)
+      .fold(0L)(_.version)
     val cur = headOrFail(spark, table,
       missing = new NoSuchElementException(_))
     if (cur.version <= since) return None
@@ -1729,8 +1731,7 @@ object Snapshot {
         .withColumn("_change", lit("insert"))
       else readChangesBetween(spark, table, since, cur.version)
     handler(changes)
-    SidecarIo.writeStringAtomic(spark, statePath,
-      s"""{"version":${cur.version}}""")
+    SidecarIo.writeJsonAtomic(spark, statePath, VersionPin(cur.version))
     Some((since, cur.version))
   }
 
@@ -1749,8 +1750,14 @@ object Snapshot {
   private def prunedRead(spark: SparkSession, table: String,
                          version: Option[Long],
                          select: Manifest => Seq[FileEntry],
-                         residual: Option[Column]): DataFrame = {
-    val m = manifestAt(spark, table, version)
+                         residual: Option[Column]): DataFrame =
+    prunedReadAt(spark, table, manifestAt(spark, table, version), select,
+      residual)
+
+  /** [[prunedRead]] of an already resolved manifest. */
+  private def prunedReadAt(spark: SparkSession, table: String, m: Manifest,
+                           select: Manifest => Seq[FileEntry],
+                           residual: Option[Column]): DataFrame = {
     if (m.files.isEmpty)
       throw new NoSuchElementException(s"snapshot v${m.version} is empty")
     val kept = select(m)
@@ -2191,7 +2198,7 @@ object Snapshot {
       .map(m => (m.version, m.action, m.files.size, m.rows, m.tag))
 
   def latestVersion(spark: SparkSession, table: String): Option[Long] = {
-    val vs = listVersions(spark, table)
+    val vs = listNumbered(spark, table, "v")
     if (vs.isEmpty) None else Some(vs.max)
   }
 
@@ -2218,7 +2225,12 @@ object Snapshot {
   // between claim and ref-advance leaves an unreachable manifest
   // that [[expire]] sweeps past the grace horizon.
 
-  private final case class Refs(v: Long, heads: Map[String, Long])
+  /** A `refs-v*.json` state: branch name → head version. `v`, the
+    * state's number, is its file name's, never written in the body. */
+  private[sources] final case class Refs(
+      @JsonDeserialize(contentAs = classOf[java.lang.Long])
+      heads: Map[String, Long],
+      @(JsonIgnore @getter @param) v: Long = 0L)
 
   private def refsName(k: Long): String = f"refs-v$k%012d.json"
 
@@ -2226,54 +2238,21 @@ object Snapshot {
                        k: Long): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$table/$SnapDir/${refsName(k)}")
 
-  private def listRefVersions(spark: SparkSession,
-                              table: String): Seq[Long] = {
-    val fs = hadoopFs(spark, table)
-    val dir = new org.apache.hadoop.fs.Path(s"$table/$SnapDir")
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("refs-v") && n.endsWith(".json"))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix("refs-v").stripSuffix(".json").toLong).toOption)
-  }
-
   /** The current refs state, or None for a legacy (never-branched)
     * table. */
-  private def refsOf(spark: SparkSession,
-                     table: String): Option[Refs] = {
-    val ks = listRefVersions(spark, table)
-    if (ks.isEmpty) return None
-    val k = ks.max
-    val fs = hadoopFs(spark, table)
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new String(readFully(fs, refsPath(table, k)), "UTF-8"))
-    val b = Map.newBuilder[String, Long]
-    root.get("heads").fields().forEachRemaining { e =>
-      b += e.getKey -> e.getValue.asLong() }
-    Some(Refs(k, b.result()))
-  }
+  private[sources] def refsOf(spark: SparkSession,
+                              table: String): Option[Refs] =
+    listNumbered(spark, table, "refs-v").maxOption.flatMap(k =>
+      SidecarIo.readJson[Refs](spark, refsPath(table, k).toString)
+        .map(_.copy(v = k)))
 
   /** CAS-write refs state `expect.v + 1`; false = lost the race
     * (re-read and retry). */
   private def writeRefsCas(spark: SparkSession, table: String,
                            expectV: Long,
-                           heads: Map[String, Long]): Boolean = {
-    val fs = hadoopFs(spark, table)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$table/$SnapDir"))
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.createObjectNode()
-    val h = root.putObject("heads")
-    heads.toSeq.sortBy(_._1).foreach { case (n, v) => h.put(n, v) }
-    val body = om.writerWithDefaultPrettyPrinter()
-      .writeValueAsString(root).getBytes("UTF-8")
-    val scratch = new org.apache.hadoop.fs.Path(
-      s"$table/$SnapDir/.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(scratch, false)
-    try out.write(body) finally out.close()
-    val won = atomicBind(fs, scratch, refsPath(table, expectV + 1))
-    fs.delete(scratch, false)
-    won
-  }
+                           heads: Map[String, Long]): Boolean =
+    createNew(hadoopFs(spark, table), refsPath(table, expectV + 1),
+      SidecarIo.mapper.writeValueAsBytes(Refs(heads)))
 
   /** Advance `branch` from head `from` to `to`. False = the branch
     * head is no longer `from` (a same-branch commit won — the caller
@@ -2529,7 +2508,7 @@ object Snapshot {
   private def mainLineage(spark: SparkSession,
                           table: String): Seq[Manifest] =
     refsOf(spark, table) match {
-      case None => listVersions(spark, table).sorted
+      case None => listNumbered(spark, table, "v").sorted
         .flatMap(v => readManifest(spark, table, v))
       case Some(r) =>
         r.heads.get("main").toSeq.flatMap(h =>
@@ -2570,7 +2549,7 @@ object Snapshot {
   private def reachableManifests(spark: SparkSession,
                                  table: String): Seq[Manifest] =
     refsOf(spark, table) match {
-      case None => listVersions(spark, table).sorted.reverse
+      case None => listNumbered(spark, table, "v").sorted.reverse
         .flatMap(v => readManifest(spark, table, v))
       case Some(r) =>
         val seen = scala.collection.mutable.Map.empty[Long, Manifest]
@@ -2606,7 +2585,7 @@ object Snapshot {
     val sweepBeforeMillis =
       System.currentTimeMillis() - graceMicros / 1000L
     val fs = hadoopFs(spark, table)
-    val all = listVersions(spark, table).sorted
+    val all = listNumbered(spark, table, "v").sorted
     // refs mode: retention is PER LINEAGE — keep the newest
     // `keepLast` manifests of MAIN's lineage plus everything
     // reachable from a non-main ref (branches are short-lived audit
@@ -2655,11 +2634,9 @@ object Snapshot {
     // group files referenced by a RETAINED manifest survive the
     // _snapshots sweep (the manifest-list layer's metadata liveness)
     val liveGroups: Set[String] =
-      keep.flatMap(v => groupNamesOf(fs, table, v)).toSet
-    val liveRefs: Set[String] = listRefVersions(spark, table) match {
-      case Nil => Set.empty
-      case ks => Set(refsName(ks.max))
-    }
+      keep.flatMap(manifestFileOf(spark, table, _)).flatMap(_.groups).toSet
+    val liveRefs: Set[String] =
+      listNumbered(spark, table, "refs-v").maxOption.map(refsName).toSet
     val root = new org.apache.hadoop.fs.Path(table)
     val rootUri = root.toUri.getPath.stripSuffix("/")
     var removed = 0
@@ -2727,7 +2704,7 @@ object Snapshot {
     // cutoff (versions are the commit order; a skewed early stamp on
     // a later version keeps that version too, which errs retentive —
     // the safe direction).
-    val manifests = listVersions(spark, table).sorted
+    val manifests = listNumbered(spark, table, "v").sorted
       .flatMap(v => readManifest(spark, table, v))
     val firstRecent = manifests.find(_.atMicros >= tsMicros)
       .map(_.version)
@@ -2956,15 +2933,11 @@ object Snapshot {
         "pathological contention, back off and retry")
   }
 
-  /** Write the manifest body to a scratch name, then atomically bind
-    * the version name to it: `createLink` on local filesystems (POSIX
-    * link(2) fails atomically when the name exists), rename-without-
-    * replace elsewhere (the HDFS atomic-rename contract). True iff
-    * this writer won the version. */
-  private def claim(spark: SparkSession, table: String,
-                    m: Manifest): Boolean = {
+  /** Write the manifest file, then atomically claim its version name
+    * ([[createNew]]). True iff this writer won the version. */
+  private[sources] def claim(spark: SparkSession, table: String,
+                             m: Manifest): Boolean = {
     val fs = hadoopFs(spark, table)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$table/$SnapDir"))
     // MANIFEST SPLITTING (the Iceberg manifest-list move): the file
     // list lands as content-addressed per-commit GROUP files; the
     // version manifest only lists their names. An append therefore
@@ -2974,75 +2947,65 @@ object Snapshot {
     // files) on every commit. A lost CAS race leaves the same groups
     // on disk for the retry to reuse (content-addressed = idempotent);
     // groups no retained manifest references are swept by [[expire]].
-    val groupNames = writeGroups(fs, table, m.files)
-    val scratch = new org.apache.hadoop.fs.Path(
-      s"$table/$SnapDir/.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(scratch, false)
-    try out.write(toJson(m, groupNames).getBytes("UTF-8"))
-    finally out.close()
-    val won = atomicBind(fs, scratch, manifestPath(table, m.version))
-    fs.delete(scratch, false)
-    won
+    val groups = writeGroups(fs, table, m.files)
+    createNew(fs, manifestPath(table, m.version),
+      SidecarIo.mapper.writeValueAsBytes(ManifestFile(m.version,
+        m.parent, m.action, m.rows, m.tag, m.atMicros, m.layout, groups,
+        None, m.rangeDeletes, m.eqDeletes, m.schemaChanges)))
   }
 
-  /** Bind `dst` to `scratch`'s content atomically, failing (false) if
-    * `dst` already exists: hard-link on local filesystems (POSIX
-    * link(2) atomic EEXIST — java renameTo would REPLACE),
-    * rename-without-replace under HDFS semantics. */
-  private def atomicBind(fs: org.apache.hadoop.fs.FileSystem,
-                         scratch: org.apache.hadoop.fs.Path,
-                         dst: org.apache.hadoop.fs.Path): Boolean =
-    if ("file" == dst.toUri.getScheme ||
-        fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-        fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]) {
-      val src = java.nio.file.Paths.get(scratch.toUri.getPath)
-      val d = java.nio.file.Paths.get(dst.toUri.getPath)
-      try { java.nio.file.Files.createLink(d, src); true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } else {
-      !fs.exists(dst) && fs.rename(scratch, dst)
-    }
+  /** Create `dst` holding `bytes`, failing (false) if `dst` already
+    * exists — the one commit CAS, for manifests, refs and group files.
+    * The body lands complete under a scratch name first, then binds
+    * atomically: hard-link on local filesystems (POSIX link(2) fails
+    * atomically with EEXIST — java renameTo would REPLACE),
+    * rename-without-replace elsewhere (the HDFS atomic-rename
+    * contract). A reader never sees a torn body. */
+  private def createNew(fs: org.apache.hadoop.fs.FileSystem,
+                        dst: org.apache.hadoop.fs.Path,
+                        bytes: Array[Byte]): Boolean = {
+    fs.mkdirs(dst.getParent)
+    val scratch = new org.apache.hadoop.fs.Path(dst.getParent,
+      s".tmp-${java.util.UUID.randomUUID()}")
+    val out = fs.create(scratch, false)
+    try out.write(bytes) finally out.close()
+    try {
+      if ("file" == dst.toUri.getScheme ||
+          fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
+          fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]) {
+        try {
+          java.nio.file.Files.createLink(
+            java.nio.file.Paths.get(dst.toUri.getPath),
+            java.nio.file.Paths.get(scratch.toUri.getPath))
+          true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException => false
+        }
+      } else !fs.exists(dst) && fs.rename(scratch, dst)
+    } finally fs.delete(scratch, false)
+  }
 
   /** Write (or reuse) one content-addressed group file per commit
     * root, preserving first-appearance order; returns the ordered
     * group names. A group's name is the sha-256 of its canonical
     * content, so identical lists — a carried group, a lost-race retry
-    * — resolve to the SAME file and only genuinely new groups write.
-    * The write itself goes through scratch + atomic bind: a reader
-    * can never observe a torn group body. */
+    * — resolve to the SAME file and only genuinely new groups write. */
   private def writeGroups(fs: org.apache.hadoop.fs.FileSystem,
                           table: String,
-                          files: Seq[FileEntry]): Seq[String] = {
-    val order = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[FileEntry]]
-    files.foreach { f =>
-      val root = f.path.split('/').take(2).mkString("/")
-      order.getOrElseUpdate(root,
-        scala.collection.mutable.ArrayBuffer.empty) += f
-    }
-    order.values.map { group =>
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val arr = om.createArrayNode()
-      group.foreach(f => fileToJson(arr.addObject(), f))
-      val body = om.writerWithDefaultPrettyPrinter()
-        .writeValueAsString(arr).getBytes("UTF-8")
-      val sha = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(body).map("%02x".format(_)).mkString.take(32)
-      val name = s"g-$sha.json"
-      val dst = new org.apache.hadoop.fs.Path(s"$table/$SnapDir/$name")
-      if (!fs.exists(dst)) {
-        val scratch = new org.apache.hadoop.fs.Path(
-          s"$table/$SnapDir/.tmp-${java.util.UUID.randomUUID()}")
-        val out = fs.create(scratch, false)
-        try out.write(body) finally out.close()
-        atomicBind(fs, scratch, dst) // loser = identical content, fine
-        fs.delete(scratch, false)
+                          files: Seq[FileEntry]): Seq[String] =
+    files.zipWithIndex
+      .groupBy { case (f, _) => f.path.split('/').take(2).mkString("/") }
+      .values.toSeq.sortBy(_.head._2)
+      .map { group =>
+        val body = SidecarIo.mapper.writeValueAsBytes(group.map(_._1))
+        val sha = java.security.MessageDigest.getInstance("SHA-256")
+          .digest(body).map("%02x".format(_)).mkString.take(32)
+        val name = s"g-$sha.json"
+        val dst = new org.apache.hadoop.fs.Path(s"$table/$SnapDir/$name")
+        if (!fs.exists(dst))
+          createNew(fs, dst, body) // loser = identical content, fine
+        name
       }
-      name
-    }.toSeq
-  }
 
   // ---- per-file column stats ---------------------------------------------
 
@@ -3323,32 +3286,6 @@ object Snapshot {
     Some(tot)
   }
 
-  /** Total footer row count of every parquet data file under `dir` —
-    * a driver-side metadata read (the [[withStatsAndRows]] footer
-    * walk), replacing a whole Spark COUNT job over files this writer
-    * just wrote. */
-  private def footerRowsUnder(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    var rows = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(f.getPath, conf))
-        try {
-          val bit = reader.getFooter.getBlocks.iterator()
-          while (bit.hasNext) rows += bit.next().getRowCount
-        } finally reader.close()
-      }
-    }
-    rows
-  }
-
   /** The `k=v` value a staging path carries for a partition column
     * (`data/<uuid>/k=v/.../file`), if any. */
   private def partitionPathValue(path: String,
@@ -3574,15 +3511,17 @@ object Snapshot {
                            v: Long): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$table/$SnapDir/${manifestName(v)}")
 
-  private def listVersions(spark: SparkSession,
-                           table: String): Seq[Long] = {
+  /** The numbers `n` of the table's `_snapshots/<prefix>n.json` files:
+    * prefix `v` lists the manifests, `refs-v` the refs states. */
+  private def listNumbered(spark: SparkSession, table: String,
+                           prefix: String): Seq[Long] = {
     val fs = hadoopFs(spark, table)
     val dir = new org.apache.hadoop.fs.Path(s"$table/$SnapDir")
     if (!fs.exists(dir)) return Nil
     fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
+      .filter(n => n.startsWith(prefix) && n.endsWith(".json"))
       .flatMap(n => scala.util.Try(
-        n.stripPrefix("v").stripSuffix(".json").toLong).toOption)
+        n.stripPrefix(prefix).stripSuffix(".json").toLong).toOption)
   }
 
   /** The MAIN head's manifest: through refs when the table has
@@ -3616,80 +3555,34 @@ object Snapshot {
     base
   }
 
+  /** A version manifest as written: the header fields plus the
+    * ordered group-name list ([[writeGroups]]); manifests written
+    * before the split carry their `files` inline instead. */
+  private final case class ManifestFile(
+      version: Long, parent: Long, action: String, rows: Long,
+      tag: String = "", atMicros: Long = 0L,
+      layout: Option[Seq[String]] = None, groups: Seq[String] = Nil,
+      files: Option[Seq[FileEntry]] = None,
+      rangeDeletes: Seq[RangeDelete] = Nil,
+      eqDeletes: Seq[EqDelete] = Nil,
+      schemaChanges: Seq[SchemaChange] = Nil)
+
+  private def manifestFileOf(spark: SparkSession, table: String,
+                             v: Long): Option[ManifestFile] =
+    SidecarIo.readJson[ManifestFile](spark, manifestPath(table, v).toString)
+
   /** The committed manifest at `v`, if retained — the user-facing
     * metadata surface (file accounting, stats inspection, wholesale-
     * delete proofs). File lists resolve through the manifest's group
     * references ([[writeGroups]]); legacy inline-`files` manifests
     * still load. */
   def readManifest(spark: SparkSession, table: String,
-                   v: Long): Option[Manifest] = {
-    val fs = hadoopFs(spark, table)
-    val p = manifestPath(table, v)
-    if (!fs.exists(p)) return None
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new String(readFully(fs, p), "UTF-8"))
-    val files: Seq[FileEntry] =
-      if (root.has("files")) filesFromJson(root.get("files")) // legacy
-      else {
-        val b = Seq.newBuilder[FileEntry]
-        root.get("groups").elements().forEachRemaining { g =>
-          b ++= readGroup(fs, table, g.asText())
-        }
-        b.result()
-      }
-    val rds = Seq.newBuilder[RangeDelete]
-    if (root.has("rangeDeletes"))
-      root.get("rangeDeletes").elements().forEachRemaining { d =>
-        rds += RangeDelete(d.get("column").asText(), d.get("lo").asText(),
-          d.get("hi").asText(), d.get("typ").asText(),
-          d.get("seq").asLong())
-      }
-    val eds = Seq.newBuilder[EqDelete]
-    if (root.has("eqDeletes"))
-      root.get("eqDeletes").elements().forEachRemaining { d =>
-        val cols = Seq.newBuilder[String]
-        d.get("cols").elements().forEachRemaining(c => cols += c.asText())
-        eds += EqDelete(d.get("dir").asText(), d.get("bytes").asLong(),
-          d.get("rows").asLong(), cols.result(), d.get("seq").asLong())
-      }
-    val scs = Seq.newBuilder[SchemaChange]
-    if (root.has("schemaChanges"))
-      root.get("schemaChanges").elements().forEachRemaining { c =>
-        scs += SchemaChange(c.get("kind").asText(), c.get("from").asText(),
-          c.get("to").asText(), c.get("typ").asText(),
-          c.get("seq").asLong())
-      }
-    val layout: Option[Seq[String]] =
-      if (!root.has("layout")) None
-      else {
-        val b = Seq.newBuilder[String]
-        root.get("layout").elements()
-          .forEachRemaining(c => b += c.asText())
-        Some(b.result())
-      }
-    Some(Manifest(root.get("version").asLong(),
-      root.get("parent").asLong(),
-      root.get("action").asText(), root.get("rows").asLong(),
-      files,
-      Option(root.get("tag")).map(_.asText()).getOrElse(""),
-      Option(root.get("atMicros")).map(_.asLong()).getOrElse(0L),
-      rds.result(), eds.result(), scs.result(), layout))
-  }
-
-  /** The group names a retained manifest references (the [[expire]]
-    * survival set); empty for legacy inline manifests. */
-  private def groupNamesOf(
-      fs: org.apache.hadoop.fs.FileSystem, table: String,
-      v: Long): Seq[String] = {
-    val p = manifestPath(table, v)
-    if (!fs.exists(p)) return Nil
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new String(readFully(fs, p), "UTF-8"))
-    if (!root.has("groups")) return Nil
-    val b = Seq.newBuilder[String]
-    root.get("groups").elements().forEachRemaining(g => b += g.asText())
-    b.result()
-  }
+                   v: Long): Option[Manifest] =
+    manifestFileOf(spark, table, v).map(h => Manifest(h.version, h.parent,
+      h.action, h.rows,
+      h.files.getOrElse(h.groups.flatMap(readGroup(spark, table, _))),
+      h.tag, h.atMicros, h.rangeDeletes, h.eqDeletes, h.schemaChanges,
+      h.layout))
 
   /** Bounded per-JVM cache of group files: groups are IMMUTABLE and
     * content-addressed, so a cached parse can never be stale — and
@@ -3704,122 +3597,16 @@ object Snapshot {
           size() > 1024
       })
 
-  private def readGroup(fs: org.apache.hadoop.fs.FileSystem,
-                        table: String, name: String): Seq[FileEntry] = {
+  private def readGroup(spark: SparkSession, table: String,
+                        name: String): Seq[FileEntry] = {
     val p = new org.apache.hadoop.fs.Path(s"$table/$SnapDir/$name")
     val key = p.toUri.toString
     val cached = groupCache.get(key)
     if (cached != null) return cached
-    val arr = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new String(readFully(fs, p), "UTF-8"))
-    val files = filesFromJson(arr)
+    val files = SidecarIo.readJson[Seq[FileEntry]](spark, p.toString)
+      .getOrElse(throw new java.io.FileNotFoundException(s"$p"))
     groupCache.put(key, files)
     files
-  }
-
-  private def readFully(fs: org.apache.hadoop.fs.FileSystem,
-                        p: org.apache.hadoop.fs.Path): Array[Byte] = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toByteArray
-    } finally in.close()
-  }
-
-  /** Manifest JSON (Jackson on Spark's own classpath — real escaping,
-    * no hand-rolled concat): header fields + the ordered group-name
-    * list; the file lists themselves live in the group files. */
-  private def toJson(m: Manifest, groupNames: Seq[String]): String = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.createObjectNode()
-    root.put("version", m.version)
-    root.put("parent", m.parent)
-    root.put("action", m.action)
-    root.put("rows", m.rows)
-    root.put("tag", m.tag)
-    root.put("atMicros", m.atMicros)
-    m.layout.foreach { cols =>
-      val la = root.putArray("layout")
-      cols.foreach(la.add)
-    }
-    val arr = root.putArray("groups")
-    groupNames.foreach(arr.add)
-    if (m.rangeDeletes.nonEmpty) {
-      val da = root.putArray("rangeDeletes")
-      m.rangeDeletes.foreach { d =>
-        val o = da.addObject()
-        o.put("column", d.column); o.put("lo", d.lo); o.put("hi", d.hi)
-        o.put("typ", d.typ); o.put("seq", d.seq)
-      }
-    }
-    if (m.eqDeletes.nonEmpty) {
-      val da = root.putArray("eqDeletes")
-      m.eqDeletes.foreach { d =>
-        val o = da.addObject()
-        o.put("dir", d.dir); o.put("bytes", d.bytes)
-        o.put("rows", d.rows); o.put("seq", d.seq)
-        val ca = o.putArray("cols")
-        d.cols.foreach(ca.add)
-      }
-    }
-    if (m.schemaChanges.nonEmpty) {
-      val sa = root.putArray("schemaChanges")
-      m.schemaChanges.foreach { c =>
-        val o = sa.addObject()
-        o.put("kind", c.kind); o.put("from", c.from); o.put("to", c.to)
-        o.put("typ", c.typ); o.put("seq", c.seq)
-      }
-    }
-    om.writerWithDefaultPrettyPrinter().writeValueAsString(root)
-  }
-
-  private def fileToJson(
-      o: com.fasterxml.jackson.databind.node.ObjectNode,
-      f: FileEntry): Unit = {
-    o.put("path", f.path)
-    o.put("bytes", f.bytes)
-    if (f.seq != 0L) o.put("seq", f.seq)
-    if (f.rows >= 0L) o.put("rows", f.rows)
-    if (f.stats.nonEmpty) {
-      val st = o.putObject("stats")
-      f.stats.toSeq.sortBy(_._1).foreach { case (c, s) =>
-        val so = st.putObject(c)
-        so.put("min", s.min)
-        so.put("max", s.max)
-        so.put("typ", s.typ)
-        so.put("nulls", s.nulls)
-        if (s.bloom.nonEmpty) so.put("bloom", s.bloom)
-      }
-    }
-  }
-
-  private def filesFromJson(
-      node: com.fasterxml.jackson.databind.JsonNode): Seq[FileEntry] = {
-    val files = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-    val it = node.elements()
-    while (it.hasNext) {
-      val o = it.next()
-      val stats = Option(o.get("stats")).map { st =>
-        val b = Map.newBuilder[String, ColStats]
-        val names = st.fieldNames()
-        while (names.hasNext) {
-          val c = names.next()
-          val so = st.get(c)
-          b += c -> ColStats(so.get("min").asText(),
-            so.get("max").asText(), so.get("typ").asText(),
-            Option(so.get("nulls")).map(_.asLong()).getOrElse(-1L),
-            Option(so.get("bloom")).map(_.asText()).getOrElse(""))
-        }
-        b.result()
-      }.getOrElse(Map.empty[String, ColStats])
-      files += FileEntry(o.get("path").asText(), o.get("bytes").asLong(),
-        stats, Option(o.get("seq")).map(_.asLong()).getOrElse(0L),
-        Option(o.get("rows")).map(_.asLong()).getOrElse(-1L))
-    }
-    files.toSeq
   }
 
   private def stageDirPath(table: String,

@@ -46,7 +46,7 @@ object MaterializedIngest {
     val spark = batch.sparkSession
     val v = Snapshot.append(batch, table,
       tag = Some(s"mvland-$batchId"))
-    if (SidecarIo.readString(spark, s"$mv/config.json").isEmpty)
+    if (!SidecarIo.exists(spark, s"$mv/config.json"))
       Materialized.create(spark, table, mv, keyCols, sumCols,
         filterSql)
     else
