@@ -107,61 +107,17 @@ object Tables {
     * parquet columns are exact. */
   def maxLongOf(spark: SparkSession, sfDir: String, name: String,
                 column: String): Long =
-    footerLongMax(spark, s"$sfDir/$name.parquet", column).getOrElse(
-      table(spark, sfDir, name)
+    sources.ParquetFooter.tryRead(spark.sparkContext.hadoopConfiguration,
+        s"$sfDir/$name.parquet", Seq(column -> "long"))
+      .flatMap(_.stats.get(column)).map(_.max.toLong)
+      .getOrElse(table(spark, sfDir, name)
         .agg(org.apache.spark.sql.functions.max(
           org.apache.spark.sql.functions.col(column)))
         .head().getLong(0))
 
   /** Exact row count of a testdata table off the parquet footers —
     * the same metadata read, replacing a count job. */
-  def rowCountOf(spark: SparkSession, sfDir: String,
-                 name: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-    try {
-      var rows = 0L
-      val it = reader.getFooter.getBlocks.iterator()
-      while (it.hasNext) rows += it.next().getRowCount
-      rows
-    } finally reader.close()
-  }
-
-  private def footerLongMax(spark: SparkSession, path: String,
-                            column: String): Option[Long] = try {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-    try {
-      var mx: Option[Long] = None
-      val it = reader.getFooter.getBlocks.iterator()
-      while (it.hasNext) {
-        val block = it.next()
-        if (block.getRowCount > 0L) {
-          val cit = block.getColumns.iterator()
-          var found: org.apache.parquet.hadoop.metadata
-            .ColumnChunkMetaData = null
-          while (found == null && cit.hasNext) {
-            val cc = cit.next()
-            if (cc.getPath.toDotString == column) found = cc
-          }
-          if (found == null) return None
-          val st = found.getStatistics
-          if (st == null || st.isEmpty || !st.hasNonNullValue)
-            return None
-          val v = found.getPrimitiveType.getPrimitiveTypeName match {
-            case INT64 | INT32 =>
-              st.genericGetMax.asInstanceOf[Number].longValue
-            case _ => return None
-          }
-          mx = Some(mx.fold(v)(math.max(_, v)))
-        }
-      }
-      mx
-    } finally reader.close()
-  } catch { case _: Throwable => None }
+  def rowCountOf(spark: SparkSession, sfDir: String, name: String): Long =
+    sources.ParquetFooter.rows(spark.sparkContext.hadoopConfiguration,
+      s"$sfDir/$name.parquet")
 }

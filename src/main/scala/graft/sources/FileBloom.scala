@@ -17,10 +17,15 @@ import org.apache.spark.sql.functions._
   *
   * ==Shape==
   * Standard Kirsch–Mitzenmacher double hashing: ONE 64-bit xxhash64
-  * of the canonicalized value (computed DISTRIBUTED by Spark's own
-  * codegen'd `xxhash64` at build; reproduced driver-side via the
-  * same `XXH64` kernel at probe), split into `h1`/`h2`, `K = 7` bit
-  * positions `(h1 + i·h2) mod m`. `m` is a power of two chosen per
+  * of the canonicalized value, split into `h1`/`h2`, `K = 7` bit
+  * positions `(h1 + i·h2) mod m`. A value hashes the same on every
+  * path: a commit of small files builds its filters on the DRIVER
+  * ([[ParquetFooter]] reads the column, [[hasher]] hashes each value),
+  * bigger ones through Spark's codegen'd `xxhash64` over [[canonExpr]]
+  * in a distributed aggregate, and probes hash the stored typed repr
+  * through [[hashRepr]] — the same XXH64 kernel, seed and per-type
+  * canonicalization every time, so both builds store byte-identical
+  * filters. `m` is a power of two chosen per
   * file so the filter stays under a FIFTH full (per-key false-positive
   * rate ≈ 0.2^7 ≈ 1e-5 — sized for KEY-LIST probes, where thousands
   * of keys test each file and per-key rates MULTIPLY: a half-full
@@ -28,9 +33,9 @@ import org.apache.spark.sql.functions._
   * hundred keys probe it), capped at 2^18 bits = 32 KB — a saturated (over-capped)
   * filter degrades to "maybe present" for everything, which is
   * CONSERVATIVE: pruning weakens, correctness never does. Bit
-  * positions are computed mod the CAP in the cluster and folded to
-  * the per-file `m` on the driver — sound because `m` divides the
-  * cap, so `(x mod cap) mod m = x mod m`.
+  * positions are computed mod the CAP at build and folded to the
+  * per-file `m` ([[fold]]) — sound because `m` divides the cap, so
+  * `(x mod cap) mod m = x mod m`.
   *
   * False positives only ever KEEP a file (cost, not wrongness);
   * false negatives cannot happen for hashed values. NULLs are never
@@ -47,11 +52,10 @@ object FileBloom {
   val MinBits = 1 << 10
   private val Seed = 42L // xxhash64's fixed seed in Spark SQL
 
-  /** The canonical column Spark's `xxhash64` must hash so the driver
-    * probe ([[hashRepr]]) can reproduce the value from a stored stat
-    * repr: long-family casts to long, timestamps to epoch micros
-    * (matching the repr serialization), doubles/strings/dates hash
-    * their native Spark form. */
+  /** The canonical column Spark's `xxhash64` must hash so the
+    * distributed build matches [[hasher]]: long-family casts to long,
+    * timestamps to epoch micros, doubles/strings/dates hash their
+    * native Spark form. */
   def canonExpr(c: Column, typ: String): Column = typ match {
     case "long" => c.cast("long")
     case "timestamp" => unix_micros(c)
@@ -61,31 +65,41 @@ object FileBloom {
       throw new IllegalArgumentException(s"no bloom for stat type $other")
   }
 
-  /** The 64-bit hash of a stored typed repr ([[Snapshot.ColStats]]
-    * serialization) — byte-identical to what `xxhash64(canonExpr)`
-    * produced for the same value at build time (same XXH64 kernel,
-    * same per-type canonicalization as Spark's hash expression:
-    * -0.0 normalizes to 0.0 before bit-casting doubles, dates hash
-    * their epoch-day int, strings their UTF-8 bytes). */
-  def hashRepr(typ: String, repr: String): Long = {
+  /** The one hash kernel: stat type `typ`'s function from a canonical
+    * value to its 64-bit hash, byte-identical to Spark's
+    * `xxhash64(canonExpr(c, typ))` on the same value (same XXH64
+    * kernel and seed). A `long` and a `timestamp` (epoch micros) hash
+    * as a Long; a `double` as its bits after -0.0 normalizes to 0.0,
+    * as Spark's hash expression does; a `string` as its UTF-8 bytes; a
+    * `date` as its epoch-day Int. */
+  def hasher(typ: String): Any => Long = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     typ match {
-      case "long" | "timestamp" => XXH64.hashLong(repr.toLong, Seed)
-      case "double" =>
-        var d = repr.toDouble
+      case "long" | "timestamp" =>
+        v => XXH64.hashLong(v.asInstanceOf[Long], Seed)
+      case "double" => v =>
+        var d = v.asInstanceOf[Double]
         if (d == -0.0d) d = 0.0d
         XXH64.hashLong(java.lang.Double.doubleToLongBits(d), Seed)
-      case "string" =>
-        XXH64.hashUTF8String(
-          org.apache.spark.unsafe.types.UTF8String.fromString(repr), Seed)
-      case "date" =>
-        XXH64.hashInt(
-          java.time.LocalDate.parse(repr).toEpochDay.toInt, Seed)
+      case "string" => v => XXH64.hashUTF8String(
+        org.apache.spark.unsafe.types.UTF8String.fromBytes(
+          v.asInstanceOf[Array[Byte]]), Seed)
+      case "date" => v => XXH64.hashInt(v.asInstanceOf[Int], Seed)
       case other =>
         throw new IllegalArgumentException(
           s"no bloom for stat type $other")
     }
   }
+
+  /** [[hasher]] over a stored typed repr ([[Snapshot.ColStats]]
+    * serialization) — the probe side. */
+  def hashRepr(typ: String, repr: String): Long = hasher(typ)(typ match {
+    case "long" | "timestamp" => repr.toLong
+    case "double" => repr.toDouble
+    case "string" =>
+      repr.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    case "date" => java.time.LocalDate.parse(repr).toEpochDay.toInt
+  })
 
   /** The K bit positions of hash `h` in an `m`-bit filter (m a power
     * of two). `h2 | 1` keeps the stride odd so the K probes never
@@ -132,18 +146,9 @@ object FileBloom {
     Some(java.util.Base64.getEncoder.encodeToString(bytes))
   }
 
-  /** Probe: can a value with this typed repr be present? An empty /
-    * absent filter answers "maybe" (no pruning, never wrong). */
-  def mayContain(bloomB64: String, typ: String, repr: String): Boolean = {
-    if (bloomB64.isEmpty) return true
-    mayContainHash(java.util.Base64.getDecoder.decode(bloomB64),
-      hashRepr(typ, repr))
-  }
-
-  /** [[mayContain]] with the hash and decoded filter precomputed —
-    * the key-list probe's inner loop ([[Snapshot]] tests every key
-    * against every candidate file's filter; hashing per PAIR would
-    * md5 keys×files times, decoding per pair would base64 the same). */
+  /** Can a value of hash `h` be in the decoded filter `bloom`? The
+    * caller hashes each probed value once and decodes each filter
+    * once ([[Snapshot]] tests many values against many files). */
   def mayContainHash(bloom: Array[Byte], h: Long): Boolean = {
     val m = bloom.length * 8
     positions(h, m).forall(p => (bloom(p >> 3) & (1 << (p & 7))) != 0)

@@ -152,8 +152,11 @@ object Layout {
     // exact source rows from footers of the files the read RESOLVED
     // (inputFiles honors a streaming sink's _spark_metadata log, so
     // orphans stay excluded exactly as the scan excludes them) —
-    // replaces a full COUNT scan of the table being compacted
-    val srcRows = footerRows(spark, src.inputFiles.toSeq)
+    // replaces a full COUNT scan of the table being compacted.
+    // inputFiles are URI strings (a `%` in a leaf reads `%25`), so
+    // each decodes back to a path
+    val srcRows = footerRows(spark, src.inputFiles.toSeq.map(u =>
+      new org.apache.hadoop.fs.Path(new java.net.URI(u)).toString))
     val leaves = leafDirs(fs, path)
     val partCols = leaves.headOption.map(_._1.map(_._1)).getOrElse(Nil)
     require(leaves.forall(_._1.map(_._1) == partCols),
@@ -238,7 +241,8 @@ object Layout {
     acc.toSeq.sortBy(_._1).map { case (rel, bytes) =>
       val pairs = rel.split('/').toSeq.filter(_.nonEmpty).map { seg =>
         val i = seg.indexOf('=')
-        seg.substring(0, i) -> unescapePath(seg.substring(i + 1))
+        seg.substring(0, i) ->
+          ParquetFooter.unescapePathName(seg.substring(i + 1))
       }
       (pairs, rel, bytes)
     }
@@ -267,7 +271,7 @@ object Layout {
                          files: Seq[String]): Long =
     if (files.size <= DriverFooterFiles) {
       val conf = spark.sparkContext.hadoopConfiguration
-      files.map(footerRowsOf(conf, _)).sum
+      files.map(ParquetFooter.rows(conf, _)).sum
     } else {
       val sc = spark.sparkContext
       val bc = sc.broadcast(
@@ -279,25 +283,11 @@ object Layout {
         .mapPartitions { it =>
           val conf = bc.value.value
           var rows = 0L
-          it.foreach(f => rows += footerRowsOf(conf, f))
+          it.foreach(f => rows += ParquetFooter.rows(conf, f))
           Iterator.single(rows)
         }
         .fold(0L)(_ + _)
     }
-
-  /** One file's footer row count (runs on executors for big lists). */
-  private def footerRowsOf(conf: org.apache.hadoop.conf.Configuration,
-                           file: String): Long = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file), conf))
-    try {
-      var rows = 0L
-      val it = reader.getFooter.getBlocks.iterator()
-      while (it.hasNext) rows += it.next().getRowCount
-      rows
-    } finally reader.close()
-  }
 
   /** [[footerRows]] over every data file under `dir`. */
   private def footerRowsUnder(spark: SparkSession, dir: String): Long = {
@@ -332,18 +322,5 @@ object Layout {
         n += 1
     }
     n
-  }
-
-  /** Minimal inverse of Hive's `%XX` partition-dir escaping. */
-  private def unescapePath(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '%' && i + 3 <= s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
   }
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions.{coalesce, col, count,
   count_distinct, lit, max, min, sum, when}
 import org.apache.spark.sql.types._
 import scala.annotation.meta.{getter, param}
-import scala.util.control.NonFatal
 
 /** Snapshot-isolated table commits — the manifest-based layout
   * (Iceberg-shape, public architecture) that closes [[Layout.compact]]'s
@@ -472,9 +471,8 @@ object Snapshot {
             fileStats(f, key, base.schemaChanges)
               .exists(_.bloom.nonEmpty))) None
       else smallKeySample(source.select(col(key)))
-        .map(_.filter(_ != null))
     val candidates = smallKeys.fold(ranged)(vs =>
-      keptByKeyBloomVals(ranged, key, vs, base.schemaChanges))
+      mayHold(ranged, base.schemaChanges, key, vs.toSeq))
     // stage 2: which candidate files truly contain a matched key
     val touched =
       if (candidates.isEmpty) Nil
@@ -491,7 +489,8 @@ object Snapshot {
     val (staged, stagedRows) = stageRewrite(spark, table, base, newData)
     commitPlan(spark, table, Plan(base, "merge", "merge", touched, staged,
       liveCount(spark, table, base, touched), stagedRows,
-      keyConflicts(base, Seq(key), smallKeys, source.select(col(key)))))
+      keyConflicts(base, Seq(key), source.select(col(key)), smallKeys,
+        sampled = srcRows > MaxProbeKeys)))
   }
 
   /** MERGE (upsert), MERGE-ON-READ — the at-scale spelling of
@@ -546,8 +545,8 @@ object Snapshot {
         val nonNull = vals.filter(_ != null)
         require(vals.length - nonNull.length <= 1 &&
           sqlDistinctCount(nonNull) == nonNull.length, duplicateKeys(key))
-        (keyHits(base.files, base.schemaChanges, Seq(key), Some(nonNull),
-          srcKeys), Some(nonNull))
+        (keyHits(base.files, base.schemaChanges, Seq(key), srcKeys,
+          Some(nonNull)), Some(nonNull))
       case None =>
         val (srcRows, ranged) = sourceKeyAgg(source, key, base)
         if (srcRows == 0L) return base.version
@@ -561,7 +560,7 @@ object Snapshot {
     // provably touches none of its rows — accounting stays exact)
     commitPlan(spark, table, Plan(base, "merge-mor", "merge", Nil, staged,
       eq.fold(0L)(_._2), stagedRows,
-      keyConflicts(base, Seq(key), smallKeys, srcKeys),
+      keyConflicts(base, Seq(key), srcKeys, smallKeys, sampled = true),
       eqDelete = eq.map(_._1), tag = tag))
   }
 
@@ -738,7 +737,8 @@ object Snapshot {
 
   /** [[deleteKeysMor]] over DISTINCT `distinctKeys0`, with the
     * [[smallKeySample]] of a single key column already taken (None
-    * past the probe cap or for a composite key). */
+    * past the probe cap, which no later step re-collects, or for a
+    * composite key). */
   private def deleteKeys(distinctKeys0: DataFrame, table: String,
                          tag: Option[String],
                          sample: Option[Array[Any]]): Long = {
@@ -755,16 +755,14 @@ object Snapshot {
       case None => distinctKeys0
     }
     // the exact-accounting scan stats-prunes like merge does: with a
-    // single tracked key column, files whose range cannot intersect
-    // the keys' [min, max] never join the count (all-null key frames
-    // match nothing by anti-join semantics — zero candidates), and
-    // per-file Bloom filters drop range-overlapping files that
-    // provably hold none of the keys
-    val smallKeys = sample.map(_.filter(_ != null))
+    // single tracked key column, files no key can fall in (range, then
+    // Bloom) never join the count; all-null key frames match nothing
+    // by anti-join semantics — zero candidates
     deletePlanned(spark, table, base, Nil,
-      keyHits(base.files, base.schemaChanges, cols, smallKeys, distinctKeys),
+      keyHits(base.files, base.schemaChanges, cols, distinctKeys, sample,
+        sampled = true),
       KeyFile(distinctKeys, cols),
-      keyConflicts(base, cols, smallKeys, distinctKeys), tag)
+      keyConflicts(base, cols, distinctKeys, sample, sampled = true), tag)
   }
 
   // ---- the write planner -------------------------------------------------
@@ -919,9 +917,8 @@ object Snapshot {
   private def stageWrite(spark: SparkSession, table: String, df: DataFrame,
                          layout: Seq[String], statsCols: Seq[String],
                          bloomCols: Seq[String]): (Seq[FileEntry], Long) = {
-    val (entries, rows) = withStatsAndRows(spark, table,
-      stage(spark, df, table, layout, bloomCols), statsCols)
-    (withBlooms(spark, table, entries, bloomCols), rows)
+    indexStaged(spark, table, stage(spark, df, table, layout, bloomCols),
+      statsCols, bloomCols)
   }
 
   /** [[stageWrite]] for a rewrite of `base`'s rows: the new files keep
@@ -988,23 +985,49 @@ object Snapshot {
       readLive(spark, table, m, files).count())
 
   /** The key selector: the files of `files` that may hold one of the
-    * keys — driver arithmetic over a collected non-null key set
-    * (`small`), else the distributed prune over `keys`. */
+    * distinct `keys` over `cols` — also the CONFLICT test of the
+    * rewrite-commit retry ([[keyConflicts]]): an interleaved append is
+    * carriable iff this leaves none of its files (stat-less files
+    * keep, i.e. conflict — conservative in both uses). `small` is the
+    * key set's values when the driver already holds it whole, and
+    * [[mayHold]] probes them with zero jobs. Otherwise, unless a
+    * collect over the keys already ran past [[MaxProbeKeys]]
+    * (`sampled`), a single-column key set over files with Bloom
+    * filters on it is collected first in one bounded job; a key set
+    * over the cap prunes by its range envelope from one aggregate.
+    * Multi-column keys (no single envelope) keep every file. Shared by
+    * the key deletes, the merges, the CDC differ and [[keyPruneCount]],
+    * so the observable prune contract IS the accounting scan's plan. */
   private def keyHits(files: Seq[FileEntry], changes: Seq[SchemaChange],
-                      cols: Seq[String], small: Option[Array[Any]],
-                      keys: DataFrame): Seq[FileEntry] = small match {
-    case Some(vs) => keyCandidatesVals(files, changes, cols.head, vs)
-    case None => keyCandidatesIn(files, changes, keys, cols)
+                      cols: Seq[String], keys: DataFrame,
+                      small: Option[Array[Any]] = None,
+                      sampled: Boolean = false): Seq[FileEntry] = {
+    val c = cols.head
+    val single = cols.size == 1
+    val vals = small.orElse(
+      if (single && !sampled && files.exists(f =>
+            fileStats(f, c, changes).exists(_.bloom.nonEmpty)))
+        GlobalOrdinal.collectUpTo(keys, MaxProbeKeys).map(_.map(_.get(0)))
+      else None)
+    vals match {
+      case Some(vs) => mayHold(files, changes, c, vs.toSeq)
+      case None if single &&
+          files.exists(f => fileStats(f, c, changes).nonEmpty) =>
+        val b = keys.agg(min(col(c)), max(col(c))).head()
+        if (b.isNullAt(0)) Nil
+        else keptByRange(files, c, b.get(0), b.get(1), changes)
+      case None => files
+    }
   }
 
   /** The key ops' mid-flight conflict test: an interleaved append
     * conflicts iff it might contain one of the keys (its rows would
     * dodge the upsert or delete). */
   private def keyConflicts(base: Manifest, cols: Seq[String],
-                           small: Option[Array[Any]],
-                           keys: DataFrame): Seq[FileEntry] => Boolean =
-    appended =>
-      keyHits(appended, base.schemaChanges, cols, small, keys).nonEmpty
+                           keys: DataFrame, small: Option[Array[Any]],
+                           sampled: Boolean): Seq[FileEntry] => Boolean =
+    appended => keyHits(appended, base.schemaChanges, cols, keys, small,
+      sampled).nonEmpty
 
   /** The files of `files` that `hits` — a frame carrying `__file` —
     * names: one distinct-path collect, bounded by the file count. */
@@ -1584,9 +1607,9 @@ object Snapshot {
             newRanges.flatMap(d =>
               keptByRangeRepr(parent.files, d.column, d.lo, d.hi,
                 parent.schemaChanges)) ++
-            newEqs.flatMap(d =>
-              keyCandidates(parent, eqDeleteKeys(spark, table, d).distinct(),
-                d.cols))).distinctBy(_.path)
+            newEqs.flatMap(d => keyHits(parent.files,
+              parent.schemaChanges, d.cols,
+              eqDeleteKeys(spark, table, d).distinct()))).distinctBy(_.path)
           if (newRanges.size + newEqs.size == 1) {
             // ==KILLED-ROWS SHORTCUT== (the common shape: one MoR
             // commit carries exactly ONE new delete entry): every
@@ -1824,7 +1847,8 @@ object Snapshot {
     * files, never drops a matching one. */
   def readEquals(spark: SparkSession, table: String, column: String,
                  value: Any, version: Option[Long] = None): DataFrame =
-    prunedRead(spark, table, version, keptByValues(_, column, Seq(value)),
+    prunedRead(spark, table, version,
+      m => mayHold(m.files, m.schemaChanges, column, Seq(value)),
       Some(col(column) === lit(value)))
 
   /** An IN-LIST read (`column IN (values)`) with the same two-index
@@ -1837,42 +1861,45 @@ object Snapshot {
              values: Seq[Any],
              version: Option[Long] = None): DataFrame = {
     require(values.nonEmpty, "empty IN list")
-    prunedRead(spark, table, version, keptByValues(_, column, values),
+    prunedRead(spark, table, version,
+      m => mayHold(m.files, m.schemaChanges, column, values),
       Some(col(column).isin(values: _*)))
   }
 
-  /** The files of `m` that may hold a row with `column` equal to one of
-    * `values`: some value inside the file's min/max AND, when the file
-    * has a Bloom filter and the list is within [[MaxProbeKeys]], one
-    * such value Bloom-possible (files without stats on the column
-    * keep). Per-value work is hoisted OUT of the per-file loop: reprs
-    * and Bloom hashes compute once per stat type (one table shares
-    * it), and each filter base64-decodes once — the values × files
-    * loop is comparisons and bit tests. Past the cap the Bloom layer is
-    * skipped: range pruning stands, a list that long hits most files
-    * anyway, and the caller's residual is always exact. */
-  private def keptByValues(m: Manifest, column: String,
-                           values: Seq[Any]): Seq[FileEntry] = {
-    val reprCache =
-      scala.collection.mutable.Map.empty[String, Array[String]]
-    val hashCache =
-      scala.collection.mutable.Map.empty[String, Array[Long]]
-    m.files.filter { f =>
-      fileStats(f, column, m.schemaChanges) match {
-        case None => true
-        case Some(s) =>
-          val reprs = reprCache.getOrElseUpdate(s.typ,
-            values.map(v => reprOf(s.typ, v)).toArray)
-          val admitted =
-            reprs.indices.filter(i => admits(s, reprs(i), reprs(i)))
-          if (admitted.isEmpty) false
-          else if (s.bloom.isEmpty || values.size > MaxProbeKeys) true
-          else {
-            val hs = hashCache.getOrElseUpdate(s.typ,
-              reprs.map(r => FileBloom.hashRepr(s.typ, r)))
-            val bloom = java.util.Base64.getDecoder.decode(s.bloom)
-            admitted.exists(i => FileBloom.mayContainHash(bloom, hs(i)))
-          }
+  /** The one value probe: the files of `files` that may hold a row
+    * with `column` equal to one of `values` — some value inside the
+    * file's min/max AND, when the file has a Bloom filter on the column
+    * and the list is within [[MaxProbeKeys]], such a value
+    * Bloom-possible. Files without stats on the column keep; nulls
+    * match no row (SQL `=`/`IN`, anti-join equality), so an all-null
+    * list keeps nothing. Per-value work is hoisted out of the per-file
+    * loop: the reprs sort once per stat type (one table shares it), so
+    * each file binary-searches its range; hashes compute once per type
+    * and each filter base64-decodes once. Past the cap the Bloom layer
+    * is skipped: range pruning stands, a list that long hits most
+    * files anyway, and every caller's residual or scan is exact.
+    * Serves [[readEquals]], [[readIn]], and the key deletes', merges'
+    * and their conflict tests' candidates ([[keyHits]]). */
+  private def mayHold(files: Seq[FileEntry], changes: Seq[SchemaChange],
+                      column: String, values: Seq[Any]): Seq[FileEntry] = {
+    val vals = values.filter(_ != null)
+    if (vals.isEmpty) return Nil
+    final class Probe(typ: String) {
+      val ord: Ordering[String] = Ordering.fromLessThan(cmp(typ, _, _) < 0)
+      val reprs = vals.map(reprOf(typ, _)).sorted(ord).toIndexedSeq
+      lazy val hashes = reprs.map(FileBloom.hashRepr(typ, _))
+    }
+    val probes = scala.collection.mutable.Map.empty[String, Probe]
+    files.filter { f =>
+      fileStats(f, column, changes).forall { s =>
+        val p = probes.getOrElseUpdate(s.typ, new Probe(s.typ))
+        val bloom =
+          if (s.bloom.isEmpty || vals.size > MaxProbeKeys) null
+          else java.util.Base64.getDecoder.decode(s.bloom)
+        (p.reprs.search(s.min)(p.ord).insertionPoint until p.reprs.size)
+          .iterator.takeWhile(i => cmp(s.typ, p.reprs(i), s.max) <= 0)
+          .exists(i => bloom == null ||
+            FileBloom.mayContainHash(bloom, p.hashes(i)))
       }
     }
   }
@@ -1883,7 +1910,8 @@ object Snapshot {
                        column: String, value: Any,
                        version: Option[Long] = None): (Int, Int) = {
     val m = manifestAt(spark, table, version)
-    (m.files.size, keptByValues(m, column, Seq(value)).size)
+    (m.files.size,
+      mayHold(m.files, m.schemaChanges, column, Seq(value)).size)
   }
 
   /** (files in the snapshot, files a [[deleteKeysMor]] /
@@ -1894,7 +1922,8 @@ object Snapshot {
                     version: Option[Long] = None): (Int, Int) = {
     val m = manifestAt(spark, table, version)
     (m.files.size,
-      keyCandidates(m, keys.distinct(), keys.columns.toSeq).size)
+      keyHits(m.files, m.schemaChanges, keys.columns.toSeq,
+        keys.distinct()).size)
   }
 
   private def manifestAt(spark: SparkSession, table: String,
@@ -1969,52 +1998,6 @@ object Snapshot {
   private def admits(s: ColStats, lo: String, hi: String): Boolean =
     cmp(s.typ, s.max, lo) >= 0 && cmp(s.typ, s.min, hi) <= 0
 
-  /** The files a single-column key-list operation must open: range
-    * stats drop files whose [min, max] cannot intersect the keys'
-    * envelope, then per-file Bloom filters ([[FileBloom]]) drop
-    * range-overlapping files that provably contain NONE of the keys.
-    * Multi-column keys (no single envelope) keep everything —
-    * conservative. Shared by [[deleteKeysMor]], [[mergeMor]], and
-    * [[keyPruneCount]] so the observable prune contract IS the
-    * accounting scan's plan. */
-  private def keyCandidates(base: Manifest, distinctKeys: DataFrame,
-                            cols: Seq[String]): Seq[FileEntry] =
-    keyCandidatesIn(base.files, base.schemaChanges, distinctKeys, cols)
-
-  /** [[keyCandidates]] over an explicit file list — also the
-    * CONFLICT test of the rewrite-commit retry ([[carriableAppends]]):
-    * an interleaved append's files are carriable iff none of them can
-    * contain a rewrite-affected key, which is exactly "this prune
-    * leaves nothing" (stat-less files keep, i.e. conflict —
-    * conservative in both uses). */
-  private def keyCandidatesIn(files: Seq[FileEntry],
-                              changes: Seq[SchemaChange],
-                              distinctKeys: DataFrame,
-                              cols: Seq[String]): Seq[FileEntry] =
-    if (cols.size == 1 && files.exists(f =>
-          fileStats(f, cols.head, changes).nonEmpty)) {
-      val c = cols.head
-      val hasBloom = files.exists(f =>
-        fileStats(f, c, changes).exists(_.bloom.nonEmpty))
-      // with Bloom coverage the probe needs the collected key set
-      // anyway, so collect FIRST and derive the range envelope from
-      // the same sample — one Spark job where the old spelling ran a
-      // min/max aggregate AND a collect over the same keys
-      val sample =
-        if (hasBloom) GlobalOrdinal.collectUpTo(distinctKeys, MaxProbeKeys)
-        else None
-      if (sample.nonEmpty) {
-        keyCandidatesVals(files, changes, c,
-          sample.get.map(_.get(0)).filter(_ != null))
-      } else {
-        // no Bloom coverage (or key set over the probe cap): the
-        // envelope prune from one aggregate, exactly as before
-        val b = distinctKeys.agg(min(col(c)), max(col(c))).head()
-        if (b.isNullAt(0)) Nil
-        else keptByRange(files, c, b.get(0), b.get(1), changes)
-      }
-    } else files
-
   /** The merge paths' SMALL-SOURCE probe: one
     * [[GlobalOrdinal.collectUpTo]] job (each task returns at most
     * `MaxProbeKeys + 1` keys; an over-cap total cancels the rest of
@@ -2046,61 +2029,6 @@ object Snapshot {
         java.lang.Float.valueOf(0.0f): Any
       case v => v
     }.toSet.size
-
-  /** [[keyCandidatesIn]] over an ALREADY-COLLECTED key set — zero
-    * Spark jobs: range-envelope prune under the SAME total order the
-    * stats comparator uses (`cmp` over typed reprs — for any key v,
-    * lo <= repr(v) <= hi, so the range filter keeps a conservative
-    * superset exactly as the aggregate-derived bounds did), then
-    * per-file Bloom probes (files without a filter always keep).
-    * `vals` must be the key set's NON-NULL values; an empty set
-    * candidates nothing (anti-join equality matches no null). */
-  private def keyCandidatesVals(files: Seq[FileEntry],
-                                changes: Seq[SchemaChange],
-                                c: String,
-                                vals: Array[Any]): Seq[FileEntry] =
-    if (vals.isEmpty) Nil // all-null keys: anti-join matches nothing
-    else if (!files.exists(f => fileStats(f, c, changes).nonEmpty)) files
-    else {
-      val envCache =
-        scala.collection.mutable.Map.empty[String, (String, String)]
-      def env(typ: String): (String, String) =
-        envCache.getOrElseUpdate(typ, {
-          val reprs = vals.map(v => reprOf(typ, v))
-          (reprs.reduce((a, b) => if (cmp(typ, a, b) <= 0) a else b),
-           reprs.reduce((a, b) => if (cmp(typ, a, b) >= 0) a else b))
-        })
-      val ranged = files.filter(f => fileStats(f, c, changes).forall { s =>
-        val (lo, hi) = env(s.typ)
-        admits(s, lo, hi)
-      })
-      keptByKeyBloomVals(ranged, c, vals, changes)
-    }
-
-  /** Bloom-prune `files` against an ALREADY-COLLECTED key set: keep a
-    * file iff it might contain AT LEAST ONE key. Probing is
-    * driver-side; the caller bounds the set
-    * ([[keyCandidatesIn]]'s probe cap). Files without a filter on the
-    * column always keep.
-    * Hash each key ONCE per stat type (files of one table share it;
-    * a rename never changes it) and decode each filter once — the
-    * inner loop is keys x files and must stay bit tests, not md5s. */
-  private def keptByKeyBloomVals(files: Seq[FileEntry], column: String,
-                                 vals: Array[Any],
-                                 changes: Seq[SchemaChange])
-      : Seq[FileEntry] = {
-    val hashCache = scala.collection.mutable.Map.empty[String, Array[Long]]
-    files.filter { f =>
-      fileStats(f, column, changes) match {
-        case Some(s) if s.bloom.nonEmpty =>
-          val hs = hashCache.getOrElseUpdate(s.typ,
-            vals.map(v => FileBloom.hashRepr(s.typ, reprOf(s.typ, v))))
-          val bloom = java.util.Base64.getDecoder.decode(s.bloom)
-          hs.exists(h => FileBloom.mayContainHash(bloom, h))
-        case _ => true
-      }
-    }
-  }
 
   /** Driver-side schema cache for IMMUTABLE parquet directories (a
     * commit's `data/<uuid>` staging root and `deletes/<uuid>` key
@@ -2624,7 +2552,8 @@ object Snapshot {
         if (fs.delete(p, false)) droppedGated += 1
       }
     }
-    val keptManifests = keep.flatMap(v => readManifest(spark, table, v))
+    val keptFiles = keep.flatMap(manifestFileOf(spark, table, _))
+    val keptManifests = keptFiles.map(manifestOf(spark, table, _))
     val live: Set[String] =
       keptManifests.flatMap(_.files.map(_.path)).toSet
     // equality-delete key directories a retained manifest still
@@ -2633,8 +2562,7 @@ object Snapshot {
       keptManifests.flatMap(_.eqDeletes.map(_.dir)).distinct
     // group files referenced by a RETAINED manifest survive the
     // _snapshots sweep (the manifest-list layer's metadata liveness)
-    val liveGroups: Set[String] =
-      keep.flatMap(manifestFileOf(spark, table, _)).flatMap(_.groups).toSet
+    val liveGroups: Set[String] = keptFiles.flatMap(_.groups).toSet
     val liveRefs: Set[String] =
       listNumbered(spark, table, "refs-v").maxOption.map(refsName).toSet
     val root = new org.apache.hadoop.fs.Path(table)
@@ -3007,221 +2935,42 @@ object Snapshot {
         name
       }
 
-  // ---- per-file column stats ---------------------------------------------
+  // ---- per-file index -----------------------------------------------------
 
-  /** Per-file bytes ceiling for the DRIVER-SIDE bloom build: below
-    * it, every staged file's column is read through parquet-hadoop on
-    * the driver (the same process that just read the footers) and
-    * hashed with the SAME XXH64 kernel Spark's `xxhash64` runs —
-    * zero Spark jobs for the micro-batch/fixture-sized commits where
-    * the job-launch overhead dwarfs the hashing. Above it (real
-    * at-scale files) the distributed aggregate below runs unchanged.
-    * `private[sources]` so the parity spec can force the Spark path
-    * and compare filters byte-for-byte. */
+  /** Per-file bytes ceiling for the DRIVER-SIDE Bloom build: when
+    * every staged file is below it, the footer pass that gathers rows
+    * and stats also reads the Bloom columns ([[ParquetFooter.read]])
+    * and hashes each value with the SAME kernel Spark's `xxhash64`
+    * runs ([[FileBloom.hasher]]) — zero Spark jobs for the
+    * micro-batch/fixture-sized commits where the job-launch overhead
+    * dwarfs the hashing. Otherwise (real at-scale files) one
+    * distributed aggregate per column builds them. `private[sources]`
+    * so the parity spec can force the Spark path and compare filters
+    * byte-for-byte. */
   private[sources] var bloomDriverMaxBytes: Long = 8L << 20
 
-  /** Attach per-file Bloom filters over `bloomCols` to freshly staged
-    * entries — one narrow distributed aggregate per column over ONLY
-    * this commit's files (cost scales with the commit, never the
-    * table): each value hashes once (Spark's codegen'd `xxhash64`),
-    * expands to its K bit positions, and `collect_set` per file
-    * returns the bounded position sets the driver folds into
-    * size-fitted filters ([[FileBloom.fold]]). Must run AFTER
-    * [[withStatsAndRows]] — the filter hangs off the column's
-    * [[ColStats]] (its typed repr is the probe's hash input). Files
-    * with no stats on the column (all-null slices) get no filter and
-    * are never pruned. */
-  private def withBlooms(spark: SparkSession, table: String,
-                         entries: Seq[FileEntry],
-                         bloomCols: Seq[String]): Seq[FileEntry] = {
-    if (bloomCols.isEmpty || entries.isEmpty) return entries
-    import org.apache.spark.sql.functions.{array, collect_set, explode,
-      xxhash64}
-    var out = entries
-    bloomCols.distinct.foreach { c =>
-      val typ = out.flatMap(_.stats.get(c)).headOption.map(_.typ)
-      typ.foreach { t =>
-        // driver path first: small files, non-partition column, and
-        // every value type decodable — falls back to the distributed
-        // aggregate on any surprise, never silently drops a filter
-        val driverBuilt: Option[Seq[(String, Seq[Int])]] =
-          if (out.forall(e => e.bytes < bloomDriverMaxBytes &&
-                partitionPathValue(e.path, c).isEmpty))
-            driverBloomPositions(spark, table, out, c, t)
-          else None
-        val byFile: Seq[(String, Seq[Int])] =
-          driverBuilt.getOrElse(
-          readFilesWithPath(spark, table, out, Some(Seq(c)))
-            .filter(col(c).isNotNull)
-            .select(col("__file"),
-              explode(array(FileBloom.positionExprs(xxhash64(
-                FileBloom.canonExpr(col(c), t))): _*)).as("__pos"))
-            .groupBy(col("__file"))
-            .agg(collect_set(col("__pos")).as("ps"))
-            .collect().toSeq
-            .map(r => r.getString(0) -> r.getSeq[Int](1)))
-        val positions = byFile.toMap
-        val named = byEntryPath(out, positions.keys)
-        out = out.map { e =>
-          e.stats.get(c) match {
-            case Some(st) =>
-              named.get(e.path)
-                .flatMap(a => FileBloom.fold(positions(a))) match {
-                case Some(b) => e.copy(stats = e.stats
-                  .updated(c, st.copy(bloom = b)))
-                case None => e // saturated: no filter beats a useless one
-              }
-            case None => e
-          }
-        }
-      }
-    }
-    out
-  }
-
-  /** DRIVER-SIDE build of the per-file Bloom position sets: read the
-    * single column through parquet-hadoop (projection pushdown via
-    * the requested read schema) and hash each value with the same
-    * XXH64 kernel (`catalyst.expressions.XXH64`, seed 42) Spark's
-    * `xxhash64(canonExpr)` executes — bit-identical filters, zero
-    * Spark jobs (spec-pinned byte parity against the distributed
-    * path). Returns None when any value shape is out of contract
-    * (unexpected physical type, timestamp unit) so the caller falls
-    * back to the distributed aggregate rather than mis-hash. */
-  private def driverBloomPositions(spark: SparkSession, table: String,
-                                   entries: Seq[FileEntry], c: String,
-                                   typ: String)
-      : Option[Seq[(String, Seq[Int])]] = try {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    val Seed = 42L
-    val conf = spark.sparkContext.hadoopConfiguration
-    Some(entries.flatMap { e =>
-      if (e.stats.get(c).isEmpty) Nil
-      else {
-        val abs = s"$table/${e.path}"
-        val p = new org.apache.hadoop.fs.Path(abs)
-        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(p, conf))
-        val schema =
-          try footer.getFooter.getFileMetaData.getSchema
-          finally footer.close()
-        if (!schema.containsField(c)) Nil
-        else {
-          val field = schema
-            .getType(schema.getFieldIndex(c)).asPrimitiveType()
-          val unit = field.getLogicalTypeAnnotation match {
-            case ts: LogicalTypeAnnotation
-                .TimestampLogicalTypeAnnotation => Some(ts.getUnit)
-            case _ => None
-          }
-          val hashOf: org.apache.parquet.example.data.Group => Long =
-            (field.getPrimitiveTypeName, typ) match {
-              case (INT64, "long") =>
-                g => XXH64.hashLong(g.getLong(0, 0), Seed)
-              case (INT32, "long") =>
-                g => XXH64.hashLong(g.getInteger(0, 0).toLong, Seed)
-              case (BINARY, "string") =>
-                g => XXH64.hashUTF8String(
-                  org.apache.spark.unsafe.types.UTF8String.fromBytes(
-                    g.getBinary(0, 0).getBytes), Seed)
-              case (INT32, "date") =>
-                g => XXH64.hashInt(g.getInteger(0, 0), Seed)
-              case (INT64, "timestamp")
-                  if unit.contains(
-                    LogicalTypeAnnotation.TimeUnit.MICROS) =>
-                g => XXH64.hashLong(g.getLong(0, 0), Seed)
-              case (INT64, "timestamp")
-                  if unit.contains(
-                    LogicalTypeAnnotation.TimeUnit.MILLIS) =>
-                g => XXH64.hashLong(g.getLong(0, 0) * 1000L, Seed)
-              case (DOUBLE, "double") =>
-                g => {
-                  var d = g.getDouble(0, 0)
-                  if (d == -0.0d) d = 0.0d
-                  XXH64.hashLong(
-                    java.lang.Double.doubleToLongBits(d), Seed)
-                }
-              case (FLOAT, "double") =>
-                g => {
-                  var d = g.getFloat(0, 0).toDouble
-                  if (d == -0.0d) d = 0.0d
-                  XXH64.hashLong(
-                    java.lang.Double.doubleToLongBits(d), Seed)
-                }
-              case other =>
-                throw new IllegalStateException(
-                  s"bloom driver path: unhandled shape $other")
-            }
-          val readConf = new org.apache.hadoop.conf.Configuration(conf)
-          readConf.set(
-            org.apache.parquet.hadoop.api.ReadSupport
-              .PARQUET_READ_SCHEMA,
-            new org.apache.parquet.schema.MessageType(
-              "graftBloomProj", field).toString)
-          val reader = org.apache.parquet.hadoop.ParquetReader
-            .builder(
-              new org.apache.parquet.hadoop.example.GroupReadSupport(),
-              p)
-            .withConf(readConf).build()
-          val positions = new java.util.HashSet[Integer]()
-          try {
-            var g = reader.read()
-            while (g != null) {
-              if (g.getFieldRepetitionCount(0) > 0) {
-                val ps = FileBloom.positions(hashOf(g), FileBloom.MaxBits)
-                var i = 0
-                while (i < ps.length) { positions.add(ps(i)); i += 1 }
-              }
-              g = reader.read()
-            }
-          } finally reader.close()
-          if (positions.isEmpty) Nil
-          else {
-            import scala.jdk.CollectionConverters._
-            Seq(abs -> positions.asScala.toSeq.map(_.intValue))
-          }
-        }
-      }
-    })
-  } catch { case NonFatal(_) => None }
-
-  /** The Bloom coverage of an existing snapshot under the current
-    * schema — the columns a rewrite ([[compact]], [[merge]]) must
-    * re-filter, exactly as [[currentStatsColsOf]] is the stats
-    * coverage. */
-  private def currentBloomColsOf(m: Manifest): Seq[String] = {
-    val changes = m.schemaChanges.sortBy(_.seq)
-    m.files.flatMap { f =>
-      f.stats.collect { case (k0, st) if st.bloom.nonEmpty => k0 }
-        .flatMap(k0 => currentName(f, k0, changes))
-    }.distinct.sorted
-  }
-
-  /** Stats AND the staged row count, both read off the PARQUET
-    * FOOTERS of the freshly staged files — no Spark job at all (the
-    * Iceberg approach): the writer already computed per-row-group
-    * min/max/null-count/row-count; a commit just collects them. Cost
-    * is one driver-side footer read per staged file, O(files in THIS
-    * commit).
+  /** The per-file index of freshly staged `entries`, built in ONE
+    * pass: each file's footer is opened once for its row count and
+    * the stats of `statsCols` (the Iceberg approach: the writer
+    * already computed per-row-group min/max/null-count/row-count, a
+    * commit just collects them — O(files in THIS commit), no Spark
+    * job), and, on the driver branch ([[bloomDriverMaxBytes]]), the
+    * same open reads the `bloomCols` values in one projected pass.
+    * Returns the entries and their total footer row count.
     *
-    * Footer stats are BOUNDS, not necessarily exact values (parquet
-    * may truncate long binary stats — the truncated min is still a
-    * lower bound, the increment-truncated max an upper bound), and
-    * every consumer here only needs bounds: [[readWhere]] keeps a
-    * superset and re-filters, [[merge]] over-candidates then key-scans,
-    * and [[deleteRange]]'s wholesale drop demands containment, which
-    * wider bounds can only make harder. Absent footer stats (NaN
-    * floats, too-large binaries, INT96 timestamps, all-null chunks)
-    * leave the column stat-less — conservative, never wrong.
-    * Partition columns never appear in the file body; their stats are
-    * the constant `k=v` value from the staging path. */
-  private def withStatsAndRows(spark: SparkSession, table: String,
-                               entries: Seq[FileEntry],
-                               statsCols: Seq[String])
-      : (Seq[FileEntry], Long) = {
+    * Footer stats are BOUNDS, and every consumer only needs bounds:
+    * [[readWhere]] keeps a superset and re-filters, [[merge]]
+    * over-candidates then key-scans, and [[deleteRange]]'s wholesale
+    * drop demands containment, which wider bounds only make harder.
+    * Partition columns never appear in the file body: their stats are
+    * the constant `k=v` value from the staging path, and their
+    * filters come from the distributed aggregate, which reads them
+    * through partition discovery. A file with no stats on a column
+    * (all-null slice, unusable footer stats) gets no filter and is
+    * never pruned by it. */
+  private def indexStaged(spark: SparkSession, table: String,
+                          entries: Seq[FileEntry], statsCols: Seq[String],
+                          bloomCols: Seq[String]): (Seq[FileEntry], Long) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val typed: Seq[(String, String)] =
       if (statsCols.isEmpty) Nil
@@ -3240,32 +2989,71 @@ object Snapshot {
           (c, typ)
         }
       }
-    var totalRows = 0L
-    val out = entries.map { e =>
-      val p = new org.apache.hadoop.fs.Path(s"$table/${e.path}")
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try {
-        val blocks = reader.getFooter.getBlocks
-        var rows = 0L
-        val it = blocks.iterator()
-        while (it.hasNext) rows += it.next().getRowCount
-        totalRows += rows
-        if (typed.isEmpty || rows == 0L) e.copy(rows = rows)
-        else {
-          val stats = typed.flatMap { case (c, t) =>
-            partitionPathValue(e.path, c) match {
-              case Some(v) =>
-                pathStat(v, t, rows).map(s => c -> s)
-              case None =>
-                footerColStats(blocks, c, t).map(s => c -> s)
-            }
-          }.toMap
-          e.copy(stats = stats, rows = rows)
-        }
-      } finally reader.close()
+    val blooms = bloomCols.distinct
+    val onDriver =
+      if (entries.forall(_.bytes < bloomDriverMaxBytes))
+        blooms.filter(c => entries.forall(e =>
+          partitionPathValue(e.path, c).isEmpty)).toSet
+      else Set.empty[String]
+    val read = entries.map { e =>
+      val facts = ParquetFooter.read(conf, s"$table/${e.path}",
+        typed.filter(c => partitionPathValue(e.path, c._1).isEmpty),
+        onDriver)
+      val stats =
+        if (facts.rows == 0L) Map.empty[String, ColStats]
+        else typed.flatMap { case (c, t) =>
+          partitionPathValue(e.path, c) match {
+            case Some(v) => pathStat(v, t, facts.rows).map(c -> _)
+            case None => facts.stats.get(c).map(c -> _)
+          }
+        }.toMap
+      (e.copy(stats = stats, rows = facts.rows), facts.positions)
     }
-    (out, totalRows)
+    val distributed = blooms.filterNot(onDriver).flatMap(c =>
+      read.flatMap(_._1.stats.get(c)).headOption.map(st =>
+        c -> distributedPositions(spark, table, read.map(_._1), c, st.typ)))
+      .toMap
+    (read.map { case (e, driverBuilt) =>
+      e.copy(stats = e.stats.map { case (c, st) =>
+        val ps = driverBuilt.get(c)
+          .orElse(distributed.get(c).flatMap(_.get(e.path)))
+        c -> ps.flatMap(FileBloom.fold).fold(st)(b => st.copy(bloom = b))
+      })
+    }, read.map(_._1.rows).sum)
+  }
+
+  /** The distributed Bloom build for column `c` (stat type `typ`):
+    * one narrow aggregate over ONLY these files — each value hashes
+    * once through Spark's `xxhash64` over [[FileBloom.canonExpr]],
+    * expands to its K positions mod [[FileBloom.MaxBits]], and
+    * `collect_set` per file returns the bounded position sets. Keyed
+    * by entry path. */
+  private def distributedPositions(spark: SparkSession, table: String,
+                                   entries: Seq[FileEntry], c: String,
+                                   typ: String): Map[String, Seq[Int]] = {
+    import org.apache.spark.sql.functions.{array, collect_set, explode,
+      xxhash64}
+    val byFile = readFilesWithPath(spark, table, entries, Some(Seq(c)))
+      .filter(col(c).isNotNull)
+      .select(col("__file"),
+        explode(array(FileBloom.positionExprs(xxhash64(
+          FileBloom.canonExpr(col(c), typ))): _*)).as("__pos"))
+      .groupBy(col("__file"))
+      .agg(collect_set(col("__pos")).as("ps"))
+      .collect().map(r => r.getString(0) -> r.getSeq[Int](1)).toMap
+    byEntryPath(entries, byFile.keys).map { case (p, a) => p -> byFile(a) }
+  }
+
+  /** The Bloom coverage of an existing snapshot under the current
+    * schema — the columns a rewrite ([[compact]], [[merge]]) must
+    * re-filter, exactly as [[currentStatsColsOf]] is the stats
+    * coverage. */
+  private def currentBloomColsOf(m: Manifest): Seq[String] = {
+    val changes = m.schemaChanges.sortBy(_.seq)
+    m.files.flatMap { f =>
+      f.stats.collect { case (k0, st) if st.bloom.nonEmpty => k0 }
+        .flatMap(k0 => currentName(f, k0, changes))
+    }.distinct.sorted
   }
 
   /** Exact LIVE row count of `files` from manifest metadata alone,
@@ -3292,32 +3080,7 @@ object Snapshot {
                                  c: String): Option[String] =
     path.split('/').drop(2).dropRight(1)
       .find(_.startsWith(c + "="))
-      .map(seg => unescapePathName(seg.substring(c.length + 1)))
-
-  /** Invert Spark/Hive partition-path escaping (`%XX` hex for chars
-    * like `:` `=` `/` `%`). Without this a string partition value
-    * `a:b` lands in stats as `a%3Ab`, and readWhere comparing against
-    * the RAW bound can prune a file that contains matching rows —
-    * silent row loss; deleteRange misclassifies the same way. A `%`
-    * not followed by two hex digits passes through literally, which
-    * is also what Hive's unescape does. */
-  private def unescapePathName(v: String): String = {
-    if (v.indexOf('%') < 0) return v
-    val sb = new java.lang.StringBuilder(v.length)
-    var i = 0
-    while (i < v.length) {
-      val ch = v.charAt(i)
-      if (ch == '%' && i + 2 < v.length) {
-        val hex = v.substring(i + 1, i + 3)
-        val code = try Integer.parseInt(hex, 16) catch {
-          case _: NumberFormatException => -1
-        }
-        if (code >= 0) { sb.append(code.toChar); i += 3 }
-        else { sb.append(ch); i += 1 }
-      } else { sb.append(ch); i += 1 }
-    }
-    sb.toString
-  }
+      .map(seg => ParquetFooter.unescapePathName(seg.substring(c.length + 1)))
 
   /** Constant stats for a partition column: min = max = the directory
     * value, zero nulls (a Hive null partition spells
@@ -3332,91 +3095,6 @@ object Snapshot {
       case _ => None // timestamp partition dirs: not worth the parse
     }
     repr.map(r => ColStats(r, r, typ, 0L))
-  }
-
-  /** Merge a column's statistics across a file's row groups into one
-    * ColStats, or None when any chunk lacks usable values (absent
-    * stats, unexpected physical type) — conservative. */
-  private def footerColStats(
-      blocks: java.util.List[
-        org.apache.parquet.hadoop.metadata.BlockMetaData],
-      c: String, typ: String): Option[ColStats] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    var mn: String = null
-    var mx: String = null
-    var nulls = 0L
-    var nullsKnown = true
-    val bit = blocks.iterator()
-    while (bit.hasNext) {
-      val block = bit.next()
-      val chunk = {
-        var found: org.apache.parquet.hadoop.metadata
-          .ColumnChunkMetaData = null
-        val cit = block.getColumns.iterator()
-        while (found == null && cit.hasNext) {
-          val cc = cit.next()
-          if (cc.getPath.toDotString == c) found = cc
-        }
-        found
-      }
-      if (chunk == null) return None // column absent from the file
-      val st = chunk.getStatistics
-      if (st == null || st.isEmpty) return None // writer omitted stats
-      if (st.getNumNulls < 0) nullsKnown = false
-      else nulls += st.getNumNulls
-      if (st.hasNonNullValue) {
-        val pt = chunk.getPrimitiveType
-        val reprs: Option[(String, String)] =
-          (pt.getPrimitiveTypeName, typ) match {
-            case (INT32, "long") | (INT64, "long") =>
-              Some((st.genericGetMin.toString, st.genericGetMax.toString))
-            case (INT32, "date") =>
-              def d(x: Any) = java.time.LocalDate
-                .ofEpochDay(x.asInstanceOf[Number].longValue).toString
-              Some((d(st.genericGetMin), d(st.genericGetMax)))
-            case (INT64, "timestamp") =>
-              val unit = pt.getLogicalTypeAnnotation match {
-                case ts: LogicalTypeAnnotation
-                    .TimestampLogicalTypeAnnotation => Some(ts.getUnit)
-                case _ => None
-              }
-              def micros(x: Any): Option[String] = {
-                val v = x.asInstanceOf[Number].longValue
-                unit match {
-                  case Some(LogicalTypeAnnotation.TimeUnit.MICROS) =>
-                    Some(v.toString)
-                  case Some(LogicalTypeAnnotation.TimeUnit.MILLIS) =>
-                    Some((v * 1000L).toString)
-                  case _ => None // NANOS would overflow; INT96 never here
-                }
-              }
-              for (a <- micros(st.genericGetMin);
-                   b <- micros(st.genericGetMax)) yield (a, b)
-            case (FLOAT, "double") | (DOUBLE, "double") =>
-              val a = st.genericGetMin.asInstanceOf[Number].doubleValue
-              val b = st.genericGetMax.asInstanceOf[Number].doubleValue
-              if (a.isNaN || b.isNaN) None // NaN poisons float stats
-              else Some((a.toString, b.toString))
-            case (BINARY, "string") =>
-              Some((st.genericGetMin
-                  .asInstanceOf[org.apache.parquet.io.api.Binary]
-                  .toStringUsingUTF8,
-                st.genericGetMax
-                  .asInstanceOf[org.apache.parquet.io.api.Binary]
-                  .toStringUsingUTF8))
-            case _ => None // INT96 timestamps, mismatched physicals
-          }
-        reprs match {
-          case None => return None
-          case Some((a, b)) =>
-            if (mn == null || cmp(typ, a, mn) < 0) mn = a
-            if (mx == null || cmp(typ, b, mx) > 0) mx = b
-        }
-      }
-    }
-    if (mn == null || mx == null) None // every chunk all-null
-    else Some(ColStats(mn, mx, typ, if (nullsKnown) nulls else -1L))
   }
 
   /** The tracked stats columns of a manifest under the CURRENT
@@ -3486,7 +3164,7 @@ object Snapshot {
     * `String.compareTo`'s UTF-16 order is NOT for supplementary
     * characters; the comparator must match the stats writer or
     * pruning bounds silently invert on astral-plane text. */
-  private def cmp(typ: String, a: String, b: String): Int = typ match {
+  private[sources] def cmp(typ: String, a: String, b: String): Int = typ match {
     case "long" | "timestamp" => java.lang.Long.compare(a.toLong, b.toLong)
     case "double" =>
       // `+ 0.0` canonicalizes -0.0 to 0.0 before the compare:
@@ -3578,11 +3256,15 @@ object Snapshot {
     * still load. */
   def readManifest(spark: SparkSession, table: String,
                    v: Long): Option[Manifest] =
-    manifestFileOf(spark, table, v).map(h => Manifest(h.version, h.parent,
-      h.action, h.rows,
+    manifestFileOf(spark, table, v).map(manifestOf(spark, table, _))
+
+  /** The [[Manifest]] a manifest file binds, its groups resolved. */
+  private def manifestOf(spark: SparkSession, table: String,
+                         h: ManifestFile): Manifest =
+    Manifest(h.version, h.parent, h.action, h.rows,
       h.files.getOrElse(h.groups.flatMap(readGroup(spark, table, _))),
       h.tag, h.atMicros, h.rangeDeletes, h.eqDeletes, h.schemaChanges,
-      h.layout))
+      h.layout)
 
   /** Bounded per-JVM cache of group files: groups are IMMUTABLE and
     * content-addressed, so a cached parse can never be stale — and

@@ -19,10 +19,27 @@ class FileBloomSpec extends AnyFunSuite {
   test("no false negatives across all stat types: every present key " +
     "is found through readEquals (build-side xxhash64 == probe-side " +
     "XXH64, including the -0.0 normalization)") {
+    noFalseNegatives()
+  }
+
+  test("no false negatives across all stat types with the filters " +
+    "built by the distributed aggregate") {
+    val saved = Snapshot.bloomDriverMaxBytes
+    try {
+      Snapshot.bloomDriverMaxBytes = 0L // force the Spark aggregate
+      noFalseNegatives()
+    } finally Snapshot.bloomDriverMaxBytes = saved
+  }
+
+  /** Every present key of every stat type survives both probes — the
+    * point read and the key list — on whichever build path runs. */
+  private def noFalseNegatives(): Unit = {
     val t = freshTable()
+    val astral = "key-\uD83D\uDE00" // a character outside the BMP
     val df = spark.range(0, 500).select(
       col("id").as("k"),
-      concat(lit("key-"), col("id")).as("s"),
+      when(col("id") === 3L, lit(astral))
+        .otherwise(concat(lit("key-"), col("id"))).as("s"),
       (col("id") * 1.5 - 10.0).as("d"),
       date_add(lit(java.sql.Date.valueOf("2024-01-01")),
         col("id").cast("int")).as("dt"),
@@ -50,8 +67,16 @@ class FileBloomSpec extends AnyFunSuite {
         java.time.Instant.ofEpochSecond(k, 123456000L)).count() == 1L,
         s"false negative on timestamp key $k")
     }
+    assert(Snapshot.readEquals(spark, t, "s", astral).count() == 1L,
+      "false negative on the non-BMP string key")
     // the -0.0 row answers a +0.0 probe (hash normalization parity)
     assert(Snapshot.readEquals(spark, t, "d", 0.0d).count() == 1L)
+    // the key-list side: each present key keeps the one file
+    for (k <- Seq(3L, 7L, 499L); c <- cols) {
+      val (total, kept) = Snapshot.keyPruneCount(spark, t,
+        df.filter(col("k") === k).select(c))
+      assert(total == 1 && kept == 1, s"key list dropped $c of row $k")
+    }
     // absent values answer empty (pruned or residual-filtered — both
     // are exact)
     assert(Snapshot.readEquals(spark, t, "k", 100000L).count() == 0L)

@@ -30,6 +30,19 @@ class LayoutSpec extends AnyFunSuite {
     assert(!Layout.isPartitionPruned(back))
   }
 
+  test("partition-path unescape decodes %XX and passes a stray % " +
+    "through, so compaction reads a leaf like k=50%off") {
+    assert(ParquetFooter.unescapePathName("a%3Ab") == "a:b")
+    assert(ParquetFooter.unescapePathName("50%off") == "50%off")
+    assert(ParquetFooter.unescapePathName("100%") == "100%")
+    val dir = Files.createTempDirectory("graft-layout").toString + "/pct"
+    spark.range(0, 10).toDF("id").coalesce(1).write.parquet(s"$dir/k=50%off")
+    val stats = Layout.compact(spark, dir, targetFileBytes = 1L << 20)
+    assert(stats.leaves == 1 && stats.rows == 10L)
+    assert(spark.read.parquet(dir).filter(col("k") === "50%off")
+      .count() == 10L)
+  }
+
   test("compact partitioned write bounds files per partition dir") {
     val dir = Files.createTempDirectory("graft-layout").toString + "/compact"
     val docs = Tables.documents(spark, TestSpark.sf0001).repartition(8)
