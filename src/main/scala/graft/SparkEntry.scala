@@ -277,7 +277,7 @@ object SparkEntry {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     // reused by the predicted and actual branches; lazy return — see
-    // Dedup.minhashNearDuplicates for the session-lifecycle contract
+    // Pairs.minhashSelfJoin for the session-lifecycle contract
     val uv = Tables.events(s, d)
       .groupBy(col("user_id"), col("event_type"))
       .agg(graft.functions.Exact.sumCents(col("value")).as("sc"))

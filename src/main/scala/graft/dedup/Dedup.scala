@@ -1,26 +1,40 @@
 package graft.dedup
 
 import graft.functions.SimHash64.simhash64
-import graft.ops.GlobalOrdinal
+import graft.multimodal.{ImagePhash, MediaKernel, MediaPhash}
+import graft.ops.{GlobalOrdinal, Pairs}
 import graft.text.Text
 import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators for a 100-TB training-data pipeline.
   *
-  * Four detector families, in increasing tolerance:
-  *  - exact: content-hash groupBy — one shuffle on a 256-bit key.
+  * Document detectors, in increasing tolerance:
+  *  - exact: content-hash groupBy — one shuffle on a 256-bit key
+  *    (plus the normalized-content key and the incremental anti-join).
   *  - MinHash+LSH: shingle sets → MinHash signatures → banded
   *    candidate join (the machinery of the reference's movie-twin
   *    pipeline, customer_segmentation_1.py:22-31, pointed at text).
   *  - SimHash: 64-bit signature, band-bucketed Hamming join — the
   *    cheapest per-byte detector (one long per doc).
-  *  - n-gram Jaccard: exact set overlap via a shingle equi-join — the
-  *    ground-truth detector the approximate ones are validated against.
+  *  - n-gram Jaccard: exact set overlap via a pruned inverted shingle
+  *    index — the ground-truth detector the approximate ones are
+  *    validated against (also cross-corpus, and behind clustering
+  *    into kept/dropped docs and soft weights).
+  * Media and embedding detectors: image pHash, audio fingerprint and
+  * video frame pHash (64-bit signatures from the multimodal kernels,
+  * the SimHash join), embedding cosine pairs (random-projection LSH)
+  * and SemDeDup's within-cluster pairs. Sub-document passes: line
+  * dedup, exact-substring span dedup, benchmark decontamination.
+  *
+  * Every banded detector — MinHash, SimHash and the three media
+  * signatures, embedding pairs — meets its candidates through the one
+  * band join [[graft.ops.Pairs.bandJoin]]: equi-join on (band, bucket),
+  * id_a < id_b, `distinct`, then the true distance.
   *
   * Scale design: nothing here collects to the driver. HashingTF (not
   * CountVectorizer) vectorizes shingles for LSH — CountVectorizer.fit
@@ -121,46 +135,25 @@ object Dedup {
     * k-shingles. Output: (id_a, id_b, jaccard_sim), id_a < id_b,
     * jaccard_sim ≥ minJaccard.
     *
-    * Plan shape: shingle (map) → HashingTF (map) → the id-only LSH
-    * self-join ([[graft.ops.Pairs.lshJoin]]): MinHash values
-    * posexplode into (id, table, hash) rows, equi-join on
-    * (table, hash) with id_a < id_b, `distinct` id pairs, the sparse
-    * vectors join back for the exact Jaccard filter. The shuffles
-    * carry ids, hash values and, for the candidates only, the
-    * vectors — candidate-bounded, never |D|². numFeatures 2²⁰ keeps
-    * shingle collisions ~|shingles|/2²⁰. `idCol` must be unique. */
+    * Plan shape: shingle (map) → [[graft.ops.Pairs.minhashCandidatePairs]]:
+    * HashingTF (map, checkpointed once for the fit and both join
+    * sides), then the id-only LSH self-join — MinHash values posexplode
+    * into (id, table, hash) rows, the band join pairs them with
+    * id_a < id_b and `distinct`, the sparse vectors join back for the
+    * exact Jaccard filter. The shuffles carry ids, hash values and, for
+    * the candidates only, the vectors — candidate-bounded, never |D|².
+    * numFeatures 2²⁰ keeps shingle collisions ~|shingles|/2²⁰. `idCol`
+    * must be unique. */
   def minhashNearDuplicates(docs: DataFrame, textCol: String = "text",
                             idCol: String = "doc_id", k: Int = 5,
                             minJaccard: Double = 0.7,
                             numHashTables: Int = 5,
                             numFeatures: Int = 1 << 20,
-                            seed: Long = 42L): DataFrame = {
-    val sh = docs
-      .select(col(idCol).as("id"), Text.wordShingles(col(textCol), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val tf = new HashingTF().setInputCol("sh").setOutputCol("features")
-      .setNumFeatures(numFeatures).setBinary(true)
-    // localCheckpoint (NOT cache) serves BOTH sides of the LSH
-    // self-join: the shingle+hash pass runs exactly once,
-    // and unlike cache() the blocks are (a) never registered in
-    // CacheManager's canonicalized-plan map — so a later identical
-    // plan over overwritten input can't be silently served stale
-    // results, and repeat-pass benchmarks measure the operator, not a
-    // leaked cache — and (b) reclaimed by the ContextCleaner when the
-    // returned frame is GC'd, with no unpersist obligation on the
-    // caller. Tradeoff: materialization is EAGER (the pass runs at
-    // call time) and checkpoint blocks are not recomputable after
-    // executor loss — the same posture as connectedComponents'
-    // iteration state, acceptable for a single-query lifetime.
-    // (Same contract: cosinePairsLsh / annTopK / ivfTopK /
-    // semanticCells / Segmentation.movieTwins.)
-    val vec = tf.transform(sh).localCheckpoint()
-    val mh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(seed)
-    graft.ops.Pairs.lshJoin(mh.fit(vec), vec, None, 1.0 - minJaccard)
-      .select(col("id_a"), col("id_b"),
-              (lit(1.0) - col("dist")).as("jaccard_sim"))
-  }
+                            seed: Long = 42L): DataFrame =
+    Pairs.minhashCandidatePairs(
+      docs.select(col(idCol).as("id"),
+                  Text.wordShingles(col(textCol), k).as("sh")),
+      "id", "sh", minJaccard, numHashTables, numFeatures, seed)
 
   /** Near-duplicate pairs by SimHash: 64-bit signatures compared at
     * Hamming distance ≤ maxHamming. Candidates come from a band join —
@@ -179,32 +172,50 @@ object Dedup {
       maxHamming, bands)
 
   /** Banded Hamming self-join over 64-bit signatures — the shared
-    * candidate machinery of [[simhashNearDuplicates]] (text) and
-    * [[phashNearDuplicates]] (images). `signed` must carry (`id`,
-    * `sig: long`); output (id_a, id_b, hamming ≤ maxHamming). One long
-    * per row per band rides the shuffle; completeness for Hamming
-    * < bands by pigeonhole (Manku et al. 2007). */
+    * candidate machinery of [[simhashNearDuplicates]] (text) and the
+    * media detectors (image, audio, video frames). `signed` must carry
+    * (`id`, `sig: long`) plus the `carried` columns; output (id_a,
+    * id_b, carried_a…, carried_b…, hamming ≤ maxHamming). The
+    * signature is cut into `bands` equal bit-bands that meet through
+    * [[graft.ops.Pairs.bandJoin]]: one long per row per band rides the
+    * shuffle; completeness for Hamming < bands by pigeonhole (Manku et
+    * al. 2007). */
   private[graft] def bandedHammingPairs(signed: DataFrame,
                                         maxHamming: Int,
-                                        bands: Int): DataFrame = {
+                                        bands: Int,
+                                        carried: Seq[String] = Nil)
+      : DataFrame = {
     require(maxHamming < bands,
       s"band join is only complete for hamming < bands ($maxHamming >= $bands)")
     val bits = 64 / bands
     val mask = if (bits == 64) -1L else (1L << bits) - 1
-    val banded = signed.select(col("id"), col("sig"),
+    val banded = signed.select(Seq(col("id"), col("sig")) ++
+      carried.map(col) :+
       posexplode(array((0 until bands).map(b =>
         shiftright(col("sig"), b * bits).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "band_bits")))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") &&
-              col("a.band_bits") === col("b.band_bits") &&
-              col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-              bit_count(col("a.sig").bitwiseXOR(col("b.sig")))
-                .as("hamming"))
-      .distinct()
+        .as(Seq("band", "bucket")): _*)
+    Pairs.bandJoin(banded, None, carried :+ "sig")
+      .select(Seq(col("id_a"), col("id_b")) ++
+        carried.flatMap(c => Seq(col(c + "_a"), col(c + "_b"))) :+
+        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"): _*)
       .filter(col("hamming") <= lit(maxHamming))
+  }
+
+  /** (id, sig) from a [[graft.multimodal.MediaKernel]] signature kernel
+    * over `assets`' (idCol, contentCol) — the one front end of the
+    * media detectors. The bytes stay inside the map-shaped kernel pass;
+    * only the id and its signature leave it. */
+  private def mediaSignatures[O: TypeTag](
+      assets: DataFrame, idCol: String, contentCol: String,
+      factory: MediaKernel.Factory[Array[Byte], O],
+      batchSize: Int): DataFrame = {
+    val spark = assets.sparkSession
+    import spark.implicits._
+    MediaKernel.runKernel(
+        assets.select(col(idCol).as("asset_id"),
+                      col(contentCol).as("content")),
+        factory, batchSize)
+      .select(col("_1").as("id"), col("_2").as("sig"))
   }
 
   /** Near-duplicate IMAGE pairs by perceptual hash: decode the real
@@ -219,17 +230,12 @@ object Dedup {
                           idCol: String = "asset_id",
                           contentCol: String = "content",
                           maxHamming: Int = 3,
-                          bands: Int = 4): DataFrame = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    val signed = graft.multimodal.MediaKernel.runKernel(
-        assets.select(col(idCol).as("asset_id"),
-                      col(contentCol).as("content")),
-        graft.multimodal.ImagePhash.hasherFactory, batchSize = 64)
-      .select(col("_1").as("id"), col("_2").as("sig"))
-      .filter(col("sig").isNotNull)
-    bandedHammingPairs(signed, maxHamming, bands)
-  }
+                          bands: Int = 4): DataFrame =
+    bandedHammingPairs(
+      mediaSignatures(assets, idCol, contentCol,
+        ImagePhash.hasherFactory, batchSize = 64)
+        .filter(col("sig").isNotNull),
+      maxHamming, bands)
 
   /** Near-duplicate AUDIO pairs by spectral fingerprint (DD18): decode
     * the real PCM ([[graft.multimodal.MediaPhash.audioFingerprint64]]
@@ -244,29 +250,25 @@ object Dedup {
                                      idCol: String = "asset_id",
                                      contentCol: String = "content",
                                      maxHamming: Int = 6,
-                                     bands: Int = 8): DataFrame = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    val signed = graft.multimodal.MediaKernel.runKernel(
-        assets.select(col(idCol).as("asset_id"),
-                      col(contentCol).as("content")),
-        graft.multimodal.MediaPhash.audioHasherFactory, batchSize = 64)
-      .select(col("_1").as("id"), col("_2").as("sig"))
-      .filter(col("sig").isNotNull)
-    bandedHammingPairs(signed, maxHamming, bands)
-  }
+                                     bands: Int = 8): DataFrame =
+    bandedHammingPairs(
+      mediaSignatures(assets, idCol, contentCol,
+        MediaPhash.audioHasherFactory, batchSize = 64)
+        .filter(col("sig").isNotNull),
+      maxHamming, bands)
 
   /** Near-duplicate VIDEO pairs by sampled-frame pHash (DD19): every
     * `everyNth` frame's REAL luma plane is DCT-pHashed
     * ([[graft.multimodal.MediaPhash.lumaPhash64]]), frame hashes pair
-    * through the banded Hamming join, and a video pair survives when
-    * ≥ `minMatchingFrames` DISTINCT sampled frames of EACH side match
-    * within `maxHamming` bits (the min of the two per-side distinct
-    * counts — a static clip whose every frame matches one frame of
-    * another video shares ONE frame of content, not many, and must
-    * not qualify) — re-encodes and mild requantizations of the same
-    * footage share most sampled frames; unrelated footage shares
-    * none. Output: `(id_a, id_b, n_matching_frames)`.
+    * through the banded Hamming join (each frame's index carried), and
+    * a video pair survives when ≥ `minMatchingFrames` DISTINCT sampled
+    * frames of EACH side match within `maxHamming` bits (the min of the
+    * two per-side distinct counts — a static clip whose every frame
+    * matches one frame of another video shares ONE frame of content,
+    * not many, and must not qualify) — re-encodes and mild
+    * requantizations of the same footage share most sampled frames;
+    * unrelated footage shares none. Output:
+    * `(id_a, id_b, n_matching_frames)`.
     *
     * Scale: hashing is map-shaped (planes never shuffle — one long
     * per sampled frame leaves the kernel); the pairing join fans out
@@ -278,36 +280,11 @@ object Dedup {
                                everyNth: Int = 2, maxFrames: Int = 16,
                                maxHamming: Int = 3, bands: Int = 4,
                                minMatchingFrames: Long = 3L): DataFrame = {
-    require(maxHamming < bands,
-      s"band join is only complete for hamming < bands ($maxHamming >= $bands)")
-    val spark = assets.sparkSession
-    import spark.implicits._
-    val frames = graft.multimodal.MediaKernel.runKernel(
-        assets.select(col(idCol).as("asset_id"),
-                      col(contentCol).as("content")),
-        graft.multimodal.MediaPhash.frameHashFactory(everyNth, maxFrames),
-        batchSize = 16)
-      .select(col("_1").as("id"), explode(col("_2")).as("f"))
+    val frames = mediaSignatures(assets, idCol, contentCol,
+        MediaPhash.frameHashFactory(everyNth, maxFrames), batchSize = 16)
+      .select(col("id"), explode(col("sig")).as("f"))
       .select(col("id"), col("f._1").as("fidx"), col("f._2").as("sig"))
-    val bits = 64 / bands
-    val mask = if (bits == 64) -1L else (1L << bits) - 1
-    val banded = frames.select(col("id"), col("fidx"), col("sig"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("sig"), b * bits).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "band_bits")))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val framePairs = a.join(b,
-        col("a.band") === col("b.band") &&
-        col("a.band_bits") === col("b.band_bits") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-              col("a.fidx").as("fidx_a"), col("b.fidx").as("fidx_b"),
-              bit_count(col("a.sig").bitwiseXOR(col("b.sig")))
-                .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= lit(maxHamming))
-    framePairs
+    bandedHammingPairs(frames, maxHamming, bands, Seq("fidx"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(least(countDistinct(col("fidx_a")), countDistinct(col("fidx_b")))
         .as("n_matching_frames"))
@@ -338,7 +315,7 @@ object Dedup {
     // C(df,2) struct array (~12 MB worst case at F=1000), the generators
     // pipeline inside codegen, and the cap can rise beyond 2000 safely.
     // Measured at sf0.1 / local[32], median of 3 alternating passes:
-    // generators 1.45 s, [[ngramJaccardPairsJoin]] 1.55 s, the old
+    // generators 1.45 s, a flat shingle self-equi-join 1.55 s, the old
     // in-array expansion 1.97 s (DuckDB's flat-join twin: 0.85 s).
     finishJaccard(grouped
       .select(col("ds"), explode(col("ds")).as("a"))
@@ -357,12 +334,7 @@ object Dedup {
     * exchange shrinks ~5× vs shuffling k-word strings. */
   private def shingleIndex(docs: DataFrame, textCol: String, idCol: String,
                            k: Int, maxShingleFreq: Long): DataFrame =
-    docs
-      .select(col(idCol).as("id"),
-              Text.wordShingleHashes(col(textCol), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), size(col("sh")).as("n_sh"),
-              explode(col("sh")).as("shingle"))
+    shingleSides(docs, textCol, idCol, k)
       .groupBy(col("shingle"))
       .agg(collect_list(struct(col("id"), col("n_sh"))).as("ds"))
       .filter(size(col("ds")).between(2, maxShingleFreq))
@@ -387,28 +359,6 @@ object Dedup {
           (col("n_a") + col("n_b") - col("n_common")).cast("double"))
       .filter(col("jaccard") >= lit(minJaccard))
       .select(col("id_a"), col("id_b"), col("n_common"), col("jaccard"))
-
-  /** [[ngramJaccardPairs]] as a FLAT shingle self-equi-join (the shape
-    * DuckDB picks): explode both sides of the pruned inverted index and
-    * equi-join on the shingle. Same output; kept for measurement — the
-    * index+generator form wins when posting lists are short, the flat
-    * join when the aggregate's input dominates. */
-  def ngramJaccardPairsJoin(docs: DataFrame, textCol: String = "text",
-                            idCol: String = "doc_id", k: Int = 5,
-                            minJaccard: Double = 0.5,
-                            maxShingleFreq: Long = 1000L): DataFrame = {
-    val posting = shingleIndex(docs, textCol, idCol, k, maxShingleFreq)
-      .select(col("shingle"), explode(col("ds")).as("d"))
-      .select(col("shingle"), col("d.id").as("id"), col("d.n_sh").as("n_sh"))
-    val a = posting.as("a")
-    val b = posting.as("b")
-    finishJaccard(a
-      .join(b, col("a.shingle") === col("b.shingle") &&
-               col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
-               col("a.n_sh").as("n_a"), col("b.n_sh").as("n_b"))
-      .agg(count(lit(1)).as("n_common")), minJaccard)
-  }
 
   /** (node, component) for every node of `edges`, labelled by the
     * component's least node under `ord` (the iterative path's min label). */
@@ -717,27 +667,40 @@ object Dedup {
     * O(|doc shingles|) rows once. Never |corpus| × |bench|. */
   def contaminationHits(corpus: DataFrame, bench: DataFrame,
                         textCol: String = "text", idCol: String = "doc_id",
-                        k: Int = 5): DataFrame = {
-    val cs = corpus.select(col(idCol).as("doc_id"),
-      explode(Text.wordShingleHashes(col(textCol), k)).as("shingle"))
-    val bs = bench
-      .select(explode(Text.wordShingleHashes(col(textCol), k)).as("shingle"))
-      .distinct()
-    cs.join(bs, Seq("shingle"), "left_semi")
+                        k: Int = 5): DataFrame =
+    corpusShingles(corpus, textCol, idCol, k)
+      .join(benchShingles(bench, textCol, k), Seq("shingle"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hits"))
-  }
+
+  /** (doc_id, shingle) for every word k-shingle of every corpus doc —
+    * the corpus side of the decontamination joins. */
+  private def corpusShingles(corpus: DataFrame, textCol: String,
+                             idCol: String, k: Int): DataFrame =
+    corpus.select(col(idCol).as("doc_id"),
+      explode(Text.wordShingleHashes(col(textCol), k)).as("shingle"))
+
+  /** The benchmark's DISTINCT word k-shingles (`shingle`). */
+  private def benchShingles(bench: DataFrame, textCol: String,
+                            k: Int): DataFrame =
+    bench
+      .select(explode(Text.wordShingleHashes(col(textCol), k)).as("shingle"))
+      .distinct()
+
+  /** `corpus` minus the docs whose `scored` row (keyed `doc_id`)
+    * satisfies `flag` — one anti-join on the id. */
+  private def dropFlagged(corpus: DataFrame, scored: DataFrame,
+                          flag: Column, idCol: String): DataFrame =
+    corpus.join(scored.filter(flag).select(col("doc_id").as(idCol)),
+      Seq(idCol), "left_anti")
 
   /** The decontaminated corpus: drop docs with ≥ `minHits` benchmark
     * shingle hits (1 = any overlap, the conservative default). */
   def dropContaminated(corpus: DataFrame, bench: DataFrame,
                        textCol: String = "text", idCol: String = "doc_id",
-                       k: Int = 5, minHits: Long = 1L): DataFrame = {
-    val bad = contaminationHits(corpus, bench, textCol, idCol, k)
-      .filter(col("n_hits") >= lit(minHits))
-      .select(col("doc_id").as(idCol))
-    corpus.join(bad, Seq(idCol), "left_anti")
-  }
+                       k: Int = 5, minHits: Long = 1L): DataFrame =
+    dropFlagged(corpus, contaminationHits(corpus, bench, textCol, idCol, k),
+      col("n_hits") >= lit(minHits), idCol)
 
   /** FRACTION-threshold contamination — the GPT-3 Appendix C /
     * BigBench semantic: a doc is contaminated when MORE than
@@ -760,12 +723,9 @@ object Dedup {
                             maxFracPct: Long = 50L): DataFrame = {
     require(maxFracPct >= 0 && maxFracPct <= 100,
       s"maxFracPct must be a percentage: $maxFracPct")
-    val cs = corpus.select(col(idCol).as("doc_id"),
-      explode(Text.wordShingleHashes(col(textCol), k)).as("shingle"))
-    val bs = bench
-      .select(explode(Text.wordShingleHashes(col(textCol), k)).as("shingle"))
-      .distinct().withColumn("__hit", lit(1))
-    cs.join(bs, Seq("shingle"), "left")
+    corpusShingles(corpus, textCol, idCol, k)
+      .join(benchShingles(bench, textCol, k).withColumn("__hit", lit(1)),
+        Seq("shingle"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"), count(col("__hit")).as("n_hits"))
       .withColumn("contaminated",
@@ -779,13 +739,10 @@ object Dedup {
   def dropContaminatedFraction(corpus: DataFrame, bench: DataFrame,
                                textCol: String = "text",
                                idCol: String = "doc_id", k: Int = 5,
-                               maxFracPct: Long = 50L): DataFrame = {
-    val bad =
-      contaminationFraction(corpus, bench, textCol, idCol, k, maxFracPct)
-        .filter(col("contaminated") === 1L)
-        .select(col("doc_id").as(idCol))
-    corpus.join(bad, Seq(idCol), "left_anti")
-  }
+                               maxFracPct: Long = 50L): DataFrame =
+    dropFlagged(corpus,
+      contaminationFraction(corpus, bench, textCol, idCol, k, maxFracPct),
+      col("contaminated") === 1L, idCol)
 
   /** [[dropContaminated]] with a Bloom prefilter — IDENTICAL output,
     * different 100-TB shape. The exact path shuffles every corpus
@@ -819,22 +776,18 @@ object Dedup {
                             k: Int = 5, minHits: Long = 1L,
                             fpp: Double = 0.01): DataFrame = {
     val spark = corpus.sparkSession
-    val benchShingles = bench
-      .select(explode(Text.wordShingleHashes(col(textCol), k)).as("shingle"))
-      .distinct()
-    val n = math.max(benchShingles.count(), 1L)
-    val bloom = benchShingles.stat.bloomFilter("shingle", n, fpp)
+    val bs = benchShingles(bench, textCol, k)
+    val n = math.max(bs.count(), 1L)
+    val bloom = bs.stat.bloomFilter("shingle", n, fpp)
     val bloomBc = spark.sparkContext.broadcast(bloom)
     val anyHit = udf { shingles: Seq[Long] =>
       shingles != null && shingles.exists(bloomBc.value.mightContainLong)
     }
     val candidates = corpus
       .filter(anyHit(Text.wordShingleHashes(col(textCol), k)))
-    val confirmedBad =
-      contaminationHits(candidates, bench, textCol, idCol, k)
-        .filter(col("n_hits") >= lit(minHits))
-        .select(col("doc_id").as(idCol))
-    corpus.join(confirmedBad, Seq(idCol), "left_anti")
+    dropFlagged(corpus,
+      contaminationHits(candidates, bench, textCol, idCol, k),
+      col("n_hits") >= lit(minHits), idCol)
   }
 
   /** Corpus-level LINE deduplication (the CCNet/RefinedWeb cleaning
@@ -952,8 +905,8 @@ object Dedup {
     *
     * Load-bearing localCheckpoint on the normalized frame: KMeans.fit
     * iterates over it and transform reads it again; lifecycle contract
-    * as in [[minhashNearDuplicates]] (eager, cleaner-reclaimed, no
-    * CacheManager registration). */
+    * as in [[graft.ops.Pairs.minhashSelfJoin]] (eager,
+    * cleaner-reclaimed, no CacheManager registration). */
   private def semanticCells(emb: DataFrame, vecCol: String, idCol: String,
                             nClusters: Int, fitSample: Double,
                             seed: Long): DataFrame = {
@@ -1005,7 +958,7 @@ object Dedup {
   private def pairsFromCells(cells: DataFrame, minCosine: Double,
                              numSalts: Int): DataFrame = {
     import graft.similarity.Similarity
-    graft.ops.Pairs.saltedSelfPairs(cells, "cell", "id",
+    Pairs.saltedSelfPairs(cells, "cell", "id",
         payload = Seq("e", "nrm"), numSalts = numSalts)
       .withColumn("cos",
         Similarity.dot(col("e_a"), col("e_b")) /

@@ -15,7 +15,8 @@ import javax.imageio.ImageIO
   *
   * This is the multimodal member of the dedup family: the signature
   * feeds the same banded Hamming self-join as SimHash
-  * (`Dedup.phashNearDuplicates`), so image near-dup runs
+  * (`Dedup.phashNearDuplicates` → `Dedup.bandedHammingPairs` → the
+  * shared band join `Pairs.bandJoin`), so image near-dup runs
   * candidate-generation-first at corpus scale — never all-pairs.
   *
   * ==Determinism==

@@ -17,11 +17,19 @@ import org.apache.spark.sql.functions._
   *    but the SHUFFLE KEY: joining on a low-cardinality key (events has
   *    5 event_types) caps parallelism at 5 partitions — one straggler
   *    executor per key does C(n_k,2) work. [[saltedSelfPairs]] keeps the
-  *    exact semantics while multiplying parallelism by `numSalts`.
+  *    exact semantics while multiplying parallelism by `numSalts`;
+  *    [[compactSelfPairs]] is the broadcast theta-join form.
   *  - CANDIDATE generation (what a 100-TB pipeline actually wants):
-  *    [[minhashCandidatePairs]] enumerates only pairs whose set overlap
-  *    can reach a Jaccard threshold, via MinHash banding — output
-  *    ≪ C(n,2), equi-join shaped, linear shuffle.
+  *    every near-duplicate detector explodes a signature into
+  *    (band, bucket) keys and meets its candidates through ONE band
+  *    join, [[bandJoin]] — equi-join on (band, bucket), id_a < id_b,
+  *    `distinct` — before checking the true distance (the pigeonhole
+  *    band construction of Manku et al., WWW 2007). Its callers:
+  *    [[lshJoin]] (MinHash and random-projection tables: the movie
+  *    twins, [[minhashCandidatePairs]], text MinHash dedup, embedding
+  *    pairs, ANN top-k) and `Dedup.bandedHammingPairs` (64-bit bands:
+  *    SimHash, image pHash, audio fingerprints, video frame pHash).
+  *    Output ≪ C(n,2), equi-join shaped, linear shuffle.
   */
 object Pairs {
 
@@ -84,12 +92,12 @@ object Pairs {
   }
 
   /** Candidate pairs (id_a < id_b) whose item-set Jaccard similarity can
-    * reach `minJaccard`, via MinHash banding: HashingTF the set, draw
-    * `numHashTables` MinHash signatures, equi-join on (band, signature).
-    * Probability a pair at true Jaccard j survives ≥1 band ≈
-    * 1−(1−j)^tables, so at j ≥ 0.5 and 5 tables ≈ 97%; raise tables for
-    * recall. Output is the candidate set only — callers re-verify with
-    * an exact measure (corr, exact Jaccard) downstream. */
+    * reach `minJaccard`, via MinHash banding: HashingTF the set, then
+    * [[minhashSelfJoin]]. Probability a pair at true Jaccard j survives
+    * ≥1 band ≈ 1−(1−j)^tables, so at j ≥ 0.5 and 5 tables ≈ 97%; raise
+    * tables for recall. Output: (id_a, id_b, jaccard_sim) — callers
+    * needing more than the MinHash-estimated measure re-verify with an
+    * exact one (corr, exact Jaccard) downstream. */
   def minhashCandidatePairs(sets: DataFrame, idCol: String,
                             itemsCol: String, minJaccard: Double = 0.5,
                             numHashTables: Int = 5,
@@ -100,12 +108,60 @@ object Pairs {
       .filter(size(col("items")) > 0)
     val tf = new HashingTF().setInputCol("items").setOutputCol("features")
       .setNumFeatures(numFeatures).setBinary(true)
-    val vec = tf.transform(base)
+    minhashSelfJoin(tf.transform(base), 1.0 - minJaccard, numHashTables,
+                    seed)
+      .withColumnRenamed("sim", "jaccard_sim")
+  }
+
+  /** The MinHash tail shared by [[minhashCandidatePairs]] and
+    * `Segmentation.movieTwins`: fit MinHashLSH on `vec` (`id`, binary
+    * `features`) and run the [[lshJoin]] self-join at Jaccard distance
+    * < `maxDistance` — the distance bound, as given, so a caller's
+    * threshold meets no extra float subtraction. Output:
+    * (id_a, id_b, sim = 1 − dist).
+    *
+    * localCheckpoint (NOT cache) serves the fit and BOTH sides of the
+    * self-join: the vectorizing pass runs exactly once, and unlike
+    * cache() the blocks are (a) never registered in CacheManager's
+    * canonicalized-plan map — so a later identical plan over
+    * overwritten input can't be silently served stale results, and
+    * repeat-pass benchmarks measure the operator, not a leaked cache —
+    * and (b) reclaimed by the ContextCleaner when the returned frame is
+    * GC'd, with no unpersist obligation on the caller. Tradeoff:
+    * materialization is EAGER (the pass runs at call time) and
+    * checkpoint blocks are not recomputable after executor loss — the
+    * same posture as `Dedup.connectedComponents`' iteration state,
+    * acceptable for a single-query lifetime. (Same contract:
+    * `Similarity.cosinePairsLsh` / `annTopK` / `ivfTopK`,
+    * `Dedup.semanticCells`.) */
+  private[graft] def minhashSelfJoin(vec: DataFrame, maxDistance: Double,
+                                     numHashTables: Int,
+                                     seed: Long): DataFrame = {
+    val v = vec.localCheckpoint()
     val mh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
       .setNumHashTables(numHashTables).setSeed(seed)
-    lshJoin(mh.fit(vec), vec, None, 1.0 - minJaccard)
-      .select(col("id_a"), col("id_b"),
-              (lit(1.0) - col("dist")).as("jaccard_sim"))
+    lshJoin(mh.fit(v), v, None, maxDistance)
+      .select(col("id_a"), col("id_b"), (lit(1.0) - col("dist")).as("sim"))
+  }
+
+  /** The band join: the distinct (id_a, id_b, carried_a…, carried_b…)
+    * rows of banded frames that share a (band, bucket) key. `a` and `b`
+    * carry `id`, `band`, `bucket` and the `carried` columns (suffixed
+    * `_a`/`_b` in the output); `b = None` is the self-join, each
+    * unordered pair once as id_a < id_b. `distinct` folds the pairs
+    * that collide in several bands, so only the narrow banded rows and
+    * the candidate rows cross the shuffles. */
+  private[graft] def bandJoin(a: DataFrame, b: Option[DataFrame],
+                              carried: Seq[String] = Nil): DataFrame = {
+    def side(df: DataFrame, sfx: String): DataFrame =
+      df.select(Seq(col("id").as(s"id$sfx"), col("band"), col("bucket")) ++
+        carried.map(c => col(c).as(c + sfx)): _*)
+    val joined = side(a, "_a").join(side(b.getOrElse(a), "_b"),
+      Seq("band", "bucket"))
+    (if (b.isEmpty) joined.filter(col("id_a") < col("id_b")) else joined)
+      .select(Seq(col("id_a"), col("id_b")) ++
+        carried.map(c => col(c + "_a")) ++ carried.map(c => col(c + "_b")): _*)
+      .distinct()
   }
 
   /** The LSH similarity join, run on ids: the pairs whose hashes under
@@ -119,12 +175,12 @@ object Pairs {
     * (id_a, id_b, dist).
     *
     * Plan: each side's hash values posexplode into narrow
-    * (id, table, hash) rows; the equi-join on (table, hash) and the
-    * `distinct` that folds pairs colliding in several tables move only
-    * those rows and the id pairs; the vectors join back once per side
-    * for the exact distance filter. (MLlib's own join carries each
-    * whole row — vector, hash array, every other column — through the
-    * band join and runs `distinct` over row pairs.) */
+    * (id, table, hash) rows; the [[bandJoin]] on (table, hash) and its
+    * `distinct` move only those rows and the id pairs; the vectors join
+    * back once per side for the exact distance filter. (MLlib's own
+    * join carries each whole row — vector, hash array, every other
+    * column — through the band join and runs `distinct` over row
+    * pairs.) */
   def lshJoin(model: Model[_], a: DataFrame, b: Option[DataFrame],
               threshold: Double): DataFrame = {
     val in = LshBridge.inputCol(model)
@@ -134,18 +190,13 @@ object Pairs {
     // the distance below it, so each pair's distance is computed once
     val distance =
       udf(LshBridge.keyDistance(model)).asNondeterministic()
-    def bands(df: DataFrame, id: String): DataFrame =
-      df.select(col("id").as(id),
-          posexplode(hashValues(col(in))).as(Seq("__table", "__hash")))
+    def bands(df: DataFrame): DataFrame =
+      df.select(col("id"),
+          posexplode(hashValues(col(in))).as(Seq("band", "bucket")))
     def vectors(df: DataFrame, id: String, v: String): DataFrame =
       df.select(col("id").as(id), col(in).as(v))
     val other = b.getOrElse(a)
-    val banded = bands(a, "id_a").join(bands(other, "id_b"),
-      Seq("__table", "__hash"))
-    val candidates = (if (b.isEmpty) banded.filter(col("id_a") < col("id_b"))
-                      else banded)
-      .select(col("id_a"), col("id_b")).distinct()
-    candidates
+    bandJoin(bands(a), b.map(bands))
       .join(vectors(a, "id_a", "__va"), "id_a")
       .join(vectors(other, "id_b", "__vb"), "id_b")
       .select(col("id_a"), col("id_b"),

@@ -1,6 +1,7 @@
 package graft.pipelines
 
-import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH}
+import graft.ops.Pairs
+import org.apache.spark.ml.feature.CountVectorizer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,9 +33,9 @@ object Segmentation {
   /** Top-`topK` most-similar user pairs by approximate Jaccard similarity
     * (customer_segmentation_1.py:22-39). CountVectorizer(binary) →
     * MinHashLSH(numHashTables, seeded) → the LSH self-join at
-    * 1−similarity threshold ([[graft.ops.Pairs.lshJoin]]: banded on
-    * user ids, each pair once as userA < userB, the vectors joined
-    * back only for the Jaccard check) → top-k.
+    * 1−similarity threshold ([[graft.ops.Pairs.minhashSelfJoin]]:
+    * banded on user ids, each pair once as userA < userB, the vectors
+    * joined back only for the Jaccard check) → top-k.
     *
     * Ties at the top-k boundary are broken by (userA, userB) so the
     * output set is deterministic (the reference's bare
@@ -45,19 +46,13 @@ object Segmentation {
     val sets = userMovieSets(ratings, minMovies)
     val cv = new CountVectorizer()
       .setInputCol("movies").setOutputCol("features").setBinary(true)
-    // load-bearing: CountVectorizer.fit scans sets, then transform +
-    // both sides of the LSH join re-read it. localCheckpoint —
-    // see Dedup.minhashNearDuplicates for the lifecycle contract
-    // (eager, cleaner-reclaimed, no CacheManager registration).
+    // the vectors are checkpointed inside minhashSelfJoin, once for
+    // the MinHash fit and both sides of the LSH join
     val featured = cv.fit(sets).transform(sets)
-      .select(col("userId").as("id"), col("features")).localCheckpoint()
-
-    val mh = new MinHashLSH()
-      .setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(seed)
-    graft.ops.Pairs.lshJoin(mh.fit(featured), featured, None, threshold)
+      .select(col("userId").as("id"), col("features"))
+    Pairs.minhashSelfJoin(featured, threshold, numHashTables, seed)
       .select(col("id_a").as("userA"), col("id_b").as("userB"),
-              (lit(1.0) - col("dist")).as("similarity"))
+              col("sim").as("similarity"))
       .orderBy(col("similarity").desc, col("userA"), col("userB"))
       .limit(topK)
   }
@@ -117,7 +112,7 @@ object Segmentation {
                          minMovies: Int = 5, seed: Long = 42L,
                          numFeatures: Int = 1 << 20): DataFrame = {
     val sets = userMovieSets(ratings, minMovies)
-    val candidates = graft.ops.Pairs.minhashCandidatePairs(
+    val candidates = Pairs.minhashCandidatePairs(
       sets, "userId", "movies", minJaccard = 1.0 - threshold,
       numHashTables, numFeatures, seed)
     candidates
@@ -145,7 +140,7 @@ object Segmentation {
               col("movieId").cast("string").as("movieId"))
       .groupBy(col("userId"))
       .agg(collect_set(col("movieId")).as("items"))
-    val candidates = graft.ops.Pairs
+    val candidates = Pairs
       .minhashCandidatePairs(sets, "userId", "items", minJaccard,
                              numHashTables, seed = seed)
       .select(col("id_a").as("userA"), col("id_b").as("userB"))

@@ -69,12 +69,20 @@ object Similarity {
       .withColumn("qn", l2Norm(col("qv")))
     val c = corpus.select(col(cId).as("neighbor_id"), col(cVec).as("cv"))
       .withColumn("cn", l2Norm(col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    broadcast(q).crossJoin(c)
+    topKPerQuery(broadcast(q).crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos_raw",
-        dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+        dot(col("qv"), col("cv")) / (col("qn") * col("cn"))), k)
+  }
+
+  /** Per query, the `k` rows of `scored` (query_id, neighbor_id,
+    * cos_raw) with the highest cosine, ties broken by neighbor id — the
+    * per-query top-k window every search path ends in. Output:
+    * (query_id, neighbor_id, cos, rank). */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos_raw").desc, col("neighbor_id"))
+    scored
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= lit(k))
       .select(col("query_id"), col("neighbor_id"),
@@ -92,14 +100,9 @@ object Similarity {
                      bucketLength: Double = 0.25, numHashTables: Int = 4,
                      seed: Long = 42L): DataFrame = {
     // load-bearing for the self-join (normalize + vectorize once);
-    // localCheckpoint — see Dedup.minhashNearDuplicates for the
-    // lifecycle contract (eager, cleaner-reclaimed, no CacheManager
-    // registration)
-    val unit = emb
-      .select(col(idCol).as("id"), col(vecCol).as("raw"))
-      .filter(l2Norm(col("raw")) > lit(0.0))
-      .select(col("id"), array_to_vector(normalize(col("raw"))).as("v"))
-      .localCheckpoint()
+    // localCheckpoint — see Pairs.minhashSelfJoin for the lifecycle
+    // contract (eager, cleaner-reclaimed, no CacheManager registration)
+    val unit = unitVectors(emb, idCol, vecCol).localCheckpoint()
     val brp = new BucketedRandomProjectionLSH()
       .setInputCol("v").setOutputCol("hashes")
       .setBucketLength(bucketLength).setNumHashTables(numHashTables)
@@ -109,6 +112,15 @@ object Similarity {
       .select(col("id_a"), col("id_b"),
               (lit(1.0) - col("dist") * col("dist") / 2.0).as("cos"))
   }
+
+  /** (id, v): each row's unit-normalized vector as an ml Vector, zero
+    * vectors dropped (cosine is undefined for them) — the input of the
+    * random-projection LSH paths. */
+  private def unitVectors(df: DataFrame, idCol: String,
+                          vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(vecCol).as("raw"))
+      .filter(l2Norm(col("raw")) > lit(0.0))
+      .select(col("id"), array_to_vector(normalize(col("raw"))).as("v"))
 
   /** IVF (inverted-file) ANN top-k: a k-means coarse quantizer assigns
     * every corpus vector to one of `nCells` cells; each query probes its
@@ -125,49 +137,64 @@ object Similarity {
               qId: String = "vec_id", qVec: String = "embedding",
               cId: String = "vec_id", cVec: String = "embedding")
       : DataFrame = {
-    // load-bearing: KMeans.fit ITERATES over c, then transform reads
-    // it again; localCheckpoint — see Dedup.minhashNearDuplicates for
-    // the lifecycle contract
-    val c = corpus
+    val (cells, centers) =
+      ivfQuantize(corpus, nCells, seed, cId, cVec, checkpoint = true)
+    rankInCells(probeCells(queries, qId, qVec, centers, nProbe), cells, k)
+  }
+
+  /** The IVF coarse quantizer: seeded k-means over the corpus's unit
+    * vectors (zero vectors dropped). Returns every corpus row's cell,
+    * (neighbor_id, cv, cell), and the centroids as a literal frame,
+    * (cell, center) — nCells tiny float vectors. */
+  private def ivfQuantize(corpus: DataFrame, nCells: Int, seed: Long,
+                          cId: String, cVec: String,
+                          checkpoint: Boolean): (DataFrame, DataFrame) = {
+    val unit = corpus
       .select(col(cId).as("neighbor_id"), col(cVec).as("cv"))
       .filter(l2Norm(col("cv")) > lit(0.0))
       .withColumn("v", array_to_vector(normalize(col("cv"))))
-      .localCheckpoint()
+    // load-bearing for in-memory search: KMeans.fit ITERATES over c,
+    // then transform reads it again; localCheckpoint — see
+    // Pairs.minhashSelfJoin for the lifecycle contract
+    val c = if (checkpoint) unit.localCheckpoint() else unit
     val km = new KMeans().setK(nCells).setSeed(seed)
       .setFeaturesCol("v").setPredictionCol("cell")
     // drop the KMeans training summary (frame + session) the predict
     // UDF's closure would otherwise carry — see SummaryBridge
     val model =
       org.apache.spark.ml.graft.SummaryBridge.dropSummary(km.fit(c))
-    val cells = model.transform(c).select(
-      col("neighbor_id"), col("cv"), col("cell"))
-    // centroids are nCells tiny vectors — ship them as a literal frame,
-    // rank each query's cells, keep nProbe (cross join is |Q| × nCells)
     val spark = corpus.sparkSession
     import spark.implicits._
     val centers = model.clusterCenters.zipWithIndex
       .map { case (v, i) => (i, v.toArray.map(_.toFloat).toSeq) }
       .toSeq.toDF("cell", "center")
-    val q = queries
+    (model.transform(c).select(col("neighbor_id"), col("cv"), col("cell")),
+     centers)
+  }
+
+  /** Each non-zero query's `nProbe` cells nearest by centroid cosine
+    * (ties by cell id): (query_id, qv, cell). The cross join is
+    * |Q| × nCells over the broadcast centroids. */
+  private def probeCells(queries: DataFrame, qId: String, qVec: String,
+                         centers: DataFrame, nProbe: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("center_cos").desc, col("cell"))
+    queries
       .select(col(qId).as("query_id"), col(qVec).as("qv"))
       .filter(l2Norm(col("qv")) > lit(0.0))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("center_cos").desc, col("cell"))
-    val probed = q.crossJoin(broadcast(centers))
+      .crossJoin(broadcast(centers))
       .withColumn("center_cos", cosine(col("qv"), col("center")))
-      .withColumn("probe_rank", row_number().over(wProbe))
+      .withColumn("probe_rank", row_number().over(w))
       .filter(col("probe_rank") <= lit(nProbe))
       .select(col("query_id"), col("qv"), col("cell"))
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    probed.join(cells, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_raw", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= lit(k))
-      .select(col("query_id"), col("neighbor_id"),
-              col("cos_raw").as("cos"), col("rank"))
   }
+
+  /** Per query, the top `k` corpus rows of its probed cells by cosine. */
+  private def rankInCells(probed: DataFrame, cells: DataFrame,
+                          k: Int): DataFrame =
+    topKPerQuery(probed.join(cells, Seq("cell"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos_raw", cosine(col("qv"), col("cv"))), k)
 
   /** Materialized IVF index: the corpus written as parquet PARTITIONED
     * BY cell (plus a tiny `centroids` table alongside) — the concrete
@@ -179,23 +206,11 @@ object Similarity {
   def writeIvfIndex(corpus: DataFrame, path: String, nCells: Int = 16,
                     seed: Long = 42L, cId: String = "vec_id",
                     cVec: String = "embedding"): Unit = {
-    val c = corpus
-      .select(col(cId).as("neighbor_id"), col(cVec).as("cv"))
-      .filter(l2Norm(col("cv")) > lit(0.0))
-      .withColumn("v", array_to_vector(normalize(col("cv"))))
-    val km = new KMeans().setK(nCells).setSeed(seed)
-      .setFeaturesCol("v").setPredictionCol("cell")
-    val model =
-      org.apache.spark.ml.graft.SummaryBridge.dropSummary(km.fit(c))
-    model.transform(c)
-      .select(col("neighbor_id"), col("cv"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    model.clusterCenters.zipWithIndex
-      .map { case (v, i) => (i, v.toArray.map(_.toFloat).toSeq) }
-      .toSeq.toDF("cell", "center")
-      .write.mode("overwrite").parquet(s"$path/centroids")
+    val (cells, centers) =
+      ivfQuantize(corpus, nCells, seed, cId, cVec, checkpoint = false)
+    cells.write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$path/cells")
+    centers.write.mode("overwrite").parquet(s"$path/centroids")
   }
 
   /** Search a [[writeIvfIndex]] index: rank cells per query against the
@@ -206,34 +221,16 @@ object Similarity {
   def searchIvfIndex(spark: SparkSession, path: String, queries: DataFrame,
                      k: Int, nProbe: Int = 4, qId: String = "vec_id",
                      qVec: String = "embedding"): DataFrame = {
-    val centers = spark.read.parquet(s"$path/centroids")
-    val q = queries
-      .select(col(qId).as("query_id"), col(qVec).as("qv"))
-      .filter(l2Norm(col("qv")) > lit(0.0))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("center_cos").desc, col("cell"))
     // deliberately NOT cached: |Q|·nCells rows through a broadcast cross
     // join is cheaper to recompute for its two consumers than to leave a
     // cached block leaking per search call in a long-lived session
     // (ADVICE r3)
-    val probed = q.crossJoin(broadcast(centers))
-      .withColumn("center_cos", cosine(col("qv"), col("center")))
-      .withColumn("probe_rank", row_number().over(wProbe))
-      .filter(col("probe_rank") <= lit(nProbe))
-      .select(col("query_id"), col("qv"), col("cell"))
+    val probed = probeCells(queries, qId, qVec,
+      spark.read.parquet(s"$path/centroids"), nProbe)
     val probedCells = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val cells = spark.read.parquet(s"$path/cells")
-      .filter(col("cell").isin(probedCells: _*))
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    probed.join(cells, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_raw", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= lit(k))
-      .select(col("query_id"), col("neighbor_id"),
-              col("cos_raw").as("cos"), col("rank"))
+    rankInCells(probed, spark.read.parquet(s"$path/cells")
+      .filter(col("cell").isin(probedCells: _*)), k)
   }
 
   /** ANN top-k: LSH candidate join at `radius`, then per-query top-k.
@@ -245,33 +242,20 @@ object Similarity {
               qId: String = "vec_id", qVec: String = "embedding",
               cId: String = "vec_id", cVec: String = "embedding")
       : DataFrame = {
-    val q = queries
-      .select(col(qId).as("id"), col(qVec).as("raw"))
-      .filter(l2Norm(col("raw")) > lit(0.0))
-      .select(col("id"), array_to_vector(normalize(col("raw"))).as("v"))
+    val q = unitVectors(queries, qId, qVec)
     // load-bearing for the corpus side of the LSH join;
-    // localCheckpoint — see Dedup.minhashNearDuplicates for the
-    // lifecycle contract
-    val c = corpus
-      .select(col(cId).as("id"), col(cVec).as("raw"))
-      .filter(l2Norm(col("raw")) > lit(0.0))
-      .select(col("id"), array_to_vector(normalize(col("raw"))).as("v"))
-      .localCheckpoint()
+    // localCheckpoint — see Pairs.minhashSelfJoin for the lifecycle
+    // contract
+    val c = unitVectors(corpus, cId, cVec).localCheckpoint()
     val brp = new BucketedRandomProjectionLSH()
       .setInputCol("v").setOutputCol("hashes")
       .setBucketLength(bucketLength).setNumHashTables(numHashTables)
       .setSeed(seed)
     val model = brp.fit(c)
     val radius = math.sqrt(2.0 * (1.0 - minCosine))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    Pairs.lshJoin(model, q, Some(c), radius)
+    topKPerQuery(Pairs.lshJoin(model, q, Some(c), radius)
       .filter(col("id_a") =!= col("id_b"))
       .select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"),
-              (lit(1.0) - col("dist") * col("dist") / 2.0).as("cos_raw"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= lit(k))
-      .select(col("query_id"), col("neighbor_id"),
-              col("cos_raw").as("cos"), col("rank"))
+              (lit(1.0) - col("dist") * col("dist") / 2.0).as("cos_raw")), k)
   }
 }
